@@ -485,11 +485,11 @@ def _col_stats(pdf: pd.DataFrame, bloom_cols=None, bloom_fpp: float = 0.01) -> d
     Float NaN (round-3 ADVICE): pandas counts NaN as null here, which
     would be unsound if NaN values reached the part files — Spark orders
     NaN above every double, so ``x > 5`` matches NaN rows while these
-    stats would prune the file. They never do: every sink in this module
-    converts through ``pa.Table.from_pandas``, which canonicalizes float
-    NaN to parquet NULL (verified by test_scan_nan_rows_not_pruned), so
-    a NaN produced anywhere upstream is stored as NULL, reads back as
-    NULL, fails every predicate — exactly what counting it in ``nulls``
+    stats would prune the file. They never do: the part-file sink
+    (``_part_sink``) converts through ``pa.Table.from_pandas``, which
+    canonicalizes float NaN to parquet NULL (verified by
+    test_scan_nan_rows_not_pruned), so a NaN produced anywhere upstream
+    is stored as NULL, reads back as NULL, fails every predicate — exactly what counting it in ``nulls``
     assumes. An Iceberg-style separate ``nan_count`` would only be
     needed for a writer that bypasses the pandas/Arrow boundary."""
     out: dict = {}
@@ -759,6 +759,26 @@ _FILTER_OPS = {
 }
 
 
+def _conjunction(filters):
+    """The Spark predicate a ``(col, op, value)`` filter list means: the
+    AND of its terms, literals compared as given."""
+    from pyspark.sql import functions as F
+
+    pred = None
+    for col, op, value in filters:
+        c = _FILTER_OPS[op](F.col(col), value)
+        pred = c if pred is None else (pred & c)
+    return pred
+
+
+def _meta_may_match(meta: dict, filters, store, out_dir: str) -> bool:
+    """:func:`_file_may_match` on a manifest entry, sidecar blooms on."""
+    return _file_may_match(
+        meta.get("stats") or {}, int(meta["row_count"]), filters,
+        bloom_ctx=(store, out_dir),
+    )
+
+
 def scan(
     spark,
     out_dir: str,
@@ -779,13 +799,7 @@ def scan(
     reads, no file opens. Returns (df, report) where report counts
     files/rows/bytes read vs skipped."""
     store = storage or LocalStorage()
-    if version is None:
-        m = load_manifest(out_dir, store)
-    else:
-        text = store.get_text(out_dir, f"{MANIFESTS_DIR}/manifest-{version:06d}.json")
-        if text is None:
-            raise FileNotFoundError(f"no snapshot version {version} under {out_dir}")
-        m = _resolve_partitions(json.loads(text), out_dir, store)
+    m = _load_version(store, out_dir, version)
     parts = m.get("partitions", {})
     if not parts:
         raise ValueError(f"snapshot has no committed partitions: {out_dir}")
@@ -794,10 +808,7 @@ def scan(
         "rows_skipped": 0, "bytes_skipped": 0,
     }
     for meta in parts.values():
-        if _file_may_match(
-            meta.get("stats") or {}, int(meta["row_count"]), filters,
-            bloom_ctx=(store, out_dir),
-        ):
+        if _meta_may_match(meta, filters, store, out_dir):
             keep.append(_part_key(meta["path"]))
         else:
             report["rows_skipped"] += int(meta["row_count"])
@@ -837,13 +848,18 @@ def _part_key(stored_path: str) -> str:
 
 def _snapshot_spark_schema(spark, store, out_dir: str, m: dict, keys):
     """The Spark schema a snapshot's rows carry: the manifest's declared
-    schema (``df.schema.simpleString()`` at commit time — DML commits
-    carry it forward), falling back to the first part file's parquet
-    footer for pre-schema manifests (one driver-side GET)."""
-    from pyspark.sql.types import _parse_datatype_string
+    schema (Spark's JSON schema, ``df.schema.json()``, at commit time —
+    DML commits carry it forward), falling back to the first part file's
+    parquet footer for pre-schema manifests (one driver-side GET).
+    Manifests committed before the JSON form stored
+    ``df.schema.simpleString()``, which still parses here as long as its
+    column names do (DDL parsing rejects unquoted non-ASCII names)."""
+    from pyspark.sql.types import StructType, _parse_datatype_string
 
     s = m.get("schema")
     if s:
+        if s.startswith("{"):
+            return StructType.fromJson(json.loads(s))
         return _parse_datatype_string(s)
     from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -976,6 +992,16 @@ def _root_key(version: int) -> str:
     return f"{MANIFESTS_DIR}/manifest-{version:06d}.json"
 
 
+def _load_version(store, out_dir: str, version: int | None) -> dict:
+    """The live snapshot (``version=None``) or an archived one (time travel)."""
+    if version is None:
+        return load_manifest(out_dir, store)
+    text = store.get_text(out_dir, _root_key(version))
+    if text is None:
+        raise FileNotFoundError(f"no snapshot version {version} under {out_dir}")
+    return _resolve_partitions(json.loads(text), out_dir, store)
+
+
 def _latest_committed_version(store, out_dir: str) -> int:
     """Highest version with a committed root manifest archive. A root's
     existence IS commit (exclusive create, below); in-flight writers have
@@ -1099,6 +1125,71 @@ def _try_commit(store, out_dir: str, manifest: dict, shard_size: int | None = No
     return True
 
 
+def _part_sink(
+    df: DataFrame, store, out_dir: str, arrow_schema, base_pid: int,
+    bloom_cols, bloom_fpp: float, committed=None,
+) -> dict:
+    """Write each partition of ``df`` as one part object and return the
+    manifest entries, keyed by partition id (task partition + ``base_pid``).
+    The one sink every writer uses — load, append, compaction and the
+    copy-on-write rewrites.
+
+    Keys are content-addressed, ``part-{pid:05d}-{fp:016x}.parquet``: a
+    changed partition writes a NEW object, the old one stays referenced
+    by the previous snapshot (time travel). ``committed`` maps partition
+    id -> fingerprint of the prior snapshot's files; a partition whose
+    content is already stored under its key is not written again
+    (resume-skip). Without it nothing is ever skipped."""
+    committed = committed or {}
+
+    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ctx = TaskContext.get()
+        pid = (ctx.partitionId() if ctx is not None else 0) + base_pid
+        parts = [b for b in batches if len(b)]
+        pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+        fp = _fingerprint_pdf(pdf)
+        key = f"part-{pid:05d}-{fp:016x}.parquet"
+        skipped = committed.get(pid) == fp and store.exists(out_dir, key)
+        if not skipped:
+            table = _spark_readable(
+                pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
+                if len(pdf)
+                else arrow_schema.empty_table()
+            )
+            store.put_table(out_dir, key, table)
+        stats = _col_stats_sidecar_blooms(
+            _col_stats(pdf, bloom_cols, bloom_fpp), store, out_dir, key
+        )
+        yield pd.DataFrame(
+            {
+                "partition_id": [pid],
+                "fingerprint": [fp],
+                "row_count": [len(pdf)],
+                "bytes": [store.size(out_dir, key)],
+                "path": [key],
+                "skipped": [skipped],
+                "col_stats": [json.dumps(stats)],
+            }
+        )
+
+    return {
+        str(r.partition_id): {
+            "fingerprint": int(r.fingerprint),
+            "row_count": int(r.row_count),
+            "bytes": int(r.bytes),
+            "path": r.path,
+            "status": "committed",
+            "skipped_on_last_run": bool(r.skipped),
+            "stats": json.loads(r.col_stats),
+        }
+        for r in df.mapInPandas(
+            write_part,
+            "partition_id int, fingerprint long, row_count long, bytes long, "
+            "path string, skipped boolean, col_stats string",
+        ).collect()
+    }
+
+
 def write_checkpointed(
     df: DataFrame,
     out_dir: str,
@@ -1168,59 +1259,12 @@ def write_checkpointed(
     # rate — inherit the persisted value, else the 0.01 default
     if bloom_fpp is None:
         bloom_fpp = float(prior.get("bloom_fpp", 0.01))
-    spark = df.sparkSession
-    bc_committed = spark.sparkContext.broadcast(committed)
     if num_partitions:
         df = df.repartition(num_partitions)
-    arrow_schema = _arrow_schema_of(df)
-
-    def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = (ctx.partitionId() if ctx is not None else 0) + base_pid
-        parts = [b for b in batches if len(b)]
-        pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
-        fp = _fingerprint_pdf(pdf)
-        # content-addressed: a changed partition writes a NEW object, the
-        # old one stays referenced by the previous snapshot (time travel)
-        key = f"part-{pid:05d}-{fp:016x}.parquet"
-        skipped = bc_committed.value.get(pid) == fp and store.exists(out_dir, key)
-        if not skipped:
-            table = _spark_readable(
-                pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-                if len(pdf)
-                else arrow_schema.empty_table()
-            )
-            store.put_table(out_dir, key, table)
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "fingerprint": [fp],
-                "row_count": [len(pdf)],
-                "bytes": [store.size(out_dir, key)],
-                "path": [key],
-                "skipped": [skipped],
-                "col_stats": [json.dumps(_col_stats_sidecar_blooms(_col_stats(pdf, bloom_cols, bloom_fpp), store, out_dir, key))],
-            }
-        )
-
-    stats_schema = (
-        "partition_id int, fingerprint long, row_count long, bytes long, "
-        "path string, skipped boolean, col_stats string"
+    new_parts = _part_sink(
+        df, store, out_dir, _arrow_schema_of(df), base_pid, bloom_cols, bloom_fpp,
+        committed,
     )
-    stats = df.mapInPandas(sink, stats_schema).collect()
-
-    new_parts = {
-            str(r.partition_id): {
-                "fingerprint": int(r.fingerprint),
-                "row_count": int(r.row_count),
-                "bytes": int(r.bytes),
-                "path": r.path,
-                "status": "committed",
-                "skipped_on_last_run": bool(r.skipped),
-                "stats": json.loads(r.col_stats),
-            }
-            for r in stats
-    }
     # Iceberg commit loop: target the latest committed version + 1 and
     # let the exclusive root create arbitrate. On conflict, reload the
     # base — and in append mode RE-MERGE onto the rival's partitions
@@ -1236,7 +1280,7 @@ def write_checkpointed(
         manifest = {
             "version": base_version + 1,
             "lineage": lineage,
-            "schema": df.schema.simpleString(),
+            "schema": df.schema.json(),
             "committed_at": time.time(),
             "total_rows": int(sum(int(p["row_count"]) for p in all_parts.values())),
             "partitions": all_parts,
@@ -1269,13 +1313,7 @@ def read_snapshot(spark, out_dir: str, version: int | None = None, storage=None)
     phantom rows). ``version=None`` reads the latest commit; an integer
     time-travels to that archived snapshot."""
     store = storage or LocalStorage()
-    if version is None:
-        m = load_manifest(out_dir, store)
-    else:
-        text = store.get_text(out_dir, f"{MANIFESTS_DIR}/manifest-{version:06d}.json")
-        if text is None:
-            raise FileNotFoundError(f"no snapshot version {version} under {out_dir}")
-        m = _resolve_partitions(json.loads(text), out_dir, store)
+    m = _load_version(store, out_dir, version)
     keys = [_part_key(meta["path"]) for meta in m.get("partitions", {}).values()]
     if not keys:
         raise ValueError(f"snapshot has no committed partitions: {out_dir} v{version}")
@@ -1507,6 +1545,89 @@ def scan_bbox(
     return df, report
 
 
+def _cow_rewrite(spark, out_dir: str, store, shard_size: int, op: str, plan) -> dict:
+    """The copy-on-write commit loop behind :func:`delete_where`,
+    :func:`update_where` and :func:`merge_into`.
+
+    Each attempt loads the latest committed snapshot and calls
+    ``plan(prior)``, which returns the op's four parts:
+
+    * ``may_match(meta)`` — False only when a file's stats prove the op
+      touches none of its rows; such files carry over BY REFERENCE
+      (content-addressed, so snapshots share them);
+    * ``rewrite(old)`` — the rows that replace the affected files, given
+      their rows (``old`` is None when no file is affected); None writes
+      nothing;
+    * ``report(rows_before, rows_after)`` — the op's ``*_report`` fields
+      beyond ``files_total`` / ``files_rewritten``;
+    * ``lineage(report)`` — the snapshot's lineage text.
+
+    The rewrite goes through :func:`_part_sink` with the table's bloom
+    properties, one output file per affected file, under partition ids
+    past the prior's; the new manifest carries ``schema``, ``bloom_cols``
+    and ``bloom_fpp`` forward. ``shard_size`` is threaded to the commit,
+    so a rewrite of a sharded-manifest table stays sharded instead of
+    inlining 10^5-10^6 partitions into one root JSON.
+
+    Concurrency: a rival commit between our base read and our root create
+    fails the exclusive create. A rewrite derived from a replaced snapshot
+    cannot be merged (unlike an append), so the whole pass re-runs on the
+    new base, up to 8 attempts; part files written by a lost attempt are
+    orphans that vacuum's grace window collects."""
+    for _attempt in range(8):
+        prior = _load_committed(store, out_dir)
+        parts = prior.get("partitions", {})
+        if not parts:
+            raise ValueError(f"{op}: no committed snapshot under {out_dir}")
+        may_match, rewrite, report_fields, lineage = plan(prior)
+        affected = {pid: meta for pid, meta in parts.items() if may_match(meta)}
+        entries = {pid: meta for pid, meta in parts.items() if pid not in affected}
+        old = (
+            _read_parts(
+                spark, out_dir, [_part_key(m["path"]) for m in affected.values()],
+                store, prior,
+            )
+            if affected
+            else None
+        )
+        out = rewrite(old)
+        bloom_cols = prior.get("bloom_cols")
+        bloom_fpp = float(prior.get("bloom_fpp", 0.01))
+        if out is not None:
+            # files keep the table's column types: the arrow schema comes
+            # from the rows read back, not from what the rewrite computed
+            arrow_schema = _arrow_schema_of(out if old is None else old)
+            entries.update(_part_sink(
+                out.repartition(len(affected)) if affected else out,
+                store, out_dir, arrow_schema,
+                max(int(p) for p in parts) + 1, bloom_cols, bloom_fpp,
+            ))
+        rows_before = sum(int(p["row_count"]) for p in parts.values())
+        rows_after = sum(int(p["row_count"]) for p in entries.values())
+        report = {
+            "files_total": len(parts),
+            "files_rewritten": len(affected),
+            **report_fields(rows_before, rows_after),
+        }
+        manifest = {
+            "version": int(prior.get("version", 0) or 0) + 1,
+            "lineage": lineage(report),
+            "schema": prior.get("schema"),
+            **({"bloom_cols": list(bloom_cols), "bloom_fpp": bloom_fpp} if bloom_cols else {}),
+            "committed_at": time.time(),
+            "total_rows": rows_after,
+            "partitions": entries,
+            f"{op.split('_')[0]}_report": report,
+        }
+        if _try_commit(store, out_dir, manifest, shard_size=shard_size):
+            return manifest
+    raise RuntimeError(f"{op}: commit conflict persisted after 8 retries under {out_dir}")
+
+
+def _files_rewritten(report: dict) -> str:
+    return f"{report['files_rewritten']}/{report['files_total']} files rewritten"
+
+
 def delete_where(spark, out_dir: str, filters, storage=None, shard_size: int = 8192) -> dict:
     """Row-level DELETE, Iceberg copy-on-write style with FILE-LEVEL
     pruning: part files whose column stats prove no row matches the
@@ -1525,115 +1646,19 @@ def delete_where(spark, out_dir: str, filters, storage=None, shard_size: int = 8
     Returns the new manifest plus a ``delete_report`` entry
     {files_total, files_rewritten, rows_before, rows_deleted}."""
     store = storage or LocalStorage()
-    for _attempt in range(8):
-        manifest = _delete_where_once(spark, out_dir, filters, store, shard_size)
-        if manifest is not None:
-            return manifest
-    raise RuntimeError(
-        f"delete_where: commit conflict persisted after 8 retries under {out_dir}"
-    )
+    pred = _conjunction(filters)
 
-
-def _delete_where_once(spark, out_dir: str, filters, store, shard_size: int) -> dict | None:
-    from pyspark.sql import functions as F
-
-    prior = _load_committed(store, out_dir)
-    bloom_cols = prior.get("bloom_cols")
-    bloom_fpp = float(prior.get("bloom_fpp", 0.01))
-    parts = prior.get("partitions", {})
-    if not parts:
-        raise ValueError(f"delete_where: no committed snapshot under {out_dir}")
-    affected, kept_entries = {}, {}
-    for pid, meta in parts.items():
-        if _file_may_match(
-            meta.get("stats") or {}, int(meta["row_count"]), filters,
-            bloom_ctx=(store, out_dir),
-        ):
-            affected[pid] = meta
-        else:
-            kept_entries[pid] = meta
-    rows_before = sum(int(p["row_count"]) for p in parts.values())
-    report = {
-        "files_total": len(parts),
-        "files_rewritten": len(affected),
-        "rows_before": rows_before,
-        "rows_deleted": 0,
-    }
-    new_entries = dict(kept_entries)
-    if affected:
-        df = _read_parts(
-            spark, out_dir,
-            [_part_key(m["path"]) for m in affected.values()], store, prior,
+    def plan(prior):
+        return (
+            lambda meta: _meta_may_match(meta, filters, store, out_dir),
+            # NULL predicate values never match a delete (SQL three-valued
+            # logic): such rows survive
+            lambda old: None if old is None else old.filter((~pred) | pred.isNull()),
+            lambda before, after: {"rows_before": before, "rows_deleted": before - after},
+            lambda r: f"delete_where {filters!r} ({_files_rewritten(r)})",
         )
-        keep_pred = None
-        for col, op, value in filters:
-            c = _FILTER_OPS[op](F.col(col), value)
-            keep_pred = c if keep_pred is None else (keep_pred & c)
-        # NULL predicate values never match a delete (SQL three-valued
-        # logic): such rows survive
-        survivors = df.filter((~keep_pred) | keep_pred.isNull())
-        base_pid = max((int(p) for p in parts), default=-1) + 1
-        arrow_schema = _arrow_schema_of(df)
 
-        def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ctx = TaskContext.get()
-            pid = (ctx.partitionId() if ctx is not None else 0) + base_pid
-            pdfs = [b for b in batches if len(b)]
-            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else pd.DataFrame()
-            fp = _fingerprint_pdf(pdf)
-            key = f"part-{pid:05d}-{fp:016x}.parquet"
-            table = _spark_readable(
-                pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-                if len(pdf)
-                else arrow_schema.empty_table()
-            )
-            store.put_table(out_dir, key, table)
-            yield pd.DataFrame(
-                {
-                    "partition_id": [pid], "fingerprint": [fp],
-                    "row_count": [len(pdf)], "bytes": [store.size(out_dir, key)],
-                    "path": [key], "col_stats": [json.dumps(_col_stats_sidecar_blooms(_col_stats(pdf, bloom_cols, bloom_fpp), store, out_dir, key))],
-                }
-            )
-
-        n_parts = max(1, len(affected))
-        stats = (
-            survivors.repartition(n_parts)
-            .mapInPandas(
-                sink,
-                "partition_id int, fingerprint long, row_count long, bytes long, "
-                "path string, col_stats string",
-            )
-            .collect()
-        )
-        for r in stats:
-            new_entries[str(r.partition_id)] = {
-                "fingerprint": int(r.fingerprint),
-                "row_count": int(r.row_count),
-                "bytes": int(r.bytes),
-                "path": r.path,
-                "status": "committed",
-                "skipped_on_last_run": False,
-                "stats": json.loads(r.col_stats),
-            }
-    rows_after = sum(int(p["row_count"]) for p in new_entries.values())
-    report["rows_deleted"] = rows_before - rows_after
-
-    manifest = {
-        "version": int(prior.get("version", 0) or 0) + 1,
-        "lineage": f"delete_where {filters!r} ({report['files_rewritten']}/{report['files_total']} files rewritten)",
-        "schema": prior.get("schema"),
-        **({"bloom_cols": list(prior["bloom_cols"]), "bloom_fpp": bloom_fpp} if prior.get("bloom_cols") else {}),
-        "committed_at": time.time(),
-        "total_rows": rows_after,
-        "partitions": new_entries,
-        "delete_report": report,
-    }
-    # conflict => None: the caller retries the whole CoW pass on the new base
-    # shard_size threaded through (round-4 ADVICE): a DML rewrite of a
-    # sharded-manifest table must not inline 10^5-10^6 partitions back
-    # into a single root JSON
-    return manifest if _try_commit(store, out_dir, manifest, shard_size=shard_size) else None
+    return _cow_rewrite(spark, out_dir, store, shard_size, "delete_where", plan)
 
 
 def update_where(spark, out_dir: str, filters, set_exprs: dict, storage=None, shard_size: int = 8192) -> dict:
@@ -1643,110 +1668,29 @@ def update_where(spark, out_dir: str, filters, set_exprs: dict, storage=None, sh
     ``set_exprs`` (column -> Spark Column/literal) applied to matching
     rows only (NULL predicates never match). Completes the DML triad
     next to write (insert/overwrite), merge_upsert, and delete_where."""
-    store = storage or LocalStorage()
-    for _attempt in range(8):
-        manifest = _update_where_once(spark, out_dir, filters, set_exprs, store, shard_size)
-        if manifest is not None:
-            return manifest
-    raise RuntimeError(
-        f"update_where: commit conflict persisted after 8 retries under {out_dir}"
-    )
-
-
-def _update_where_once(spark, out_dir: str, filters, set_exprs: dict, store, shard_size: int) -> dict | None:
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 
-    prior = _load_committed(store, out_dir)
-    bloom_cols = prior.get("bloom_cols")
-    bloom_fpp = float(prior.get("bloom_fpp", 0.01))
-    parts = prior.get("partitions", {})
-    if not parts:
-        raise ValueError(f"update_where: no committed snapshot under {out_dir}")
-    affected, kept_entries = {}, {}
-    for pid, meta in parts.items():
-        if _file_may_match(
-            meta.get("stats") or {}, int(meta["row_count"]), filters,
-            bloom_ctx=(store, out_dir),
-        ):
-            affected[pid] = meta
-        else:
-            kept_entries[pid] = meta
-    report = {"files_total": len(parts), "files_rewritten": len(affected)}
-    new_entries = dict(kept_entries)
-    if affected:
-        df = _read_parts(
-            spark, out_dir,
-            [_part_key(m["path"]) for m in affected.values()], store, prior,
-        )
-        pred = None
-        for col, op, value in filters:
-            c = _FILTER_OPS[op](F.col(col), value)
-            pred = c if pred is None else (pred & c)
-        updated = df
+    store = storage or LocalStorage()
+    pred = _conjunction(filters)
+
+    def rewrite(old):
+        if old is None:
+            return None
         for col, expr in set_exprs.items():
             val = expr if isinstance(expr, Column) else F.lit(expr)
-            updated = updated.withColumn(
-                col, F.when(pred, val).otherwise(F.col(col))
-            )
-        base_pid = max((int(p) for p in parts), default=-1) + 1
-        arrow_schema = _arrow_schema_of(df)
+            old = old.withColumn(col, F.when(pred, val).otherwise(F.col(col)))
+        return old
 
-        def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ctx = TaskContext.get()
-            pid = (ctx.partitionId() if ctx is not None else 0) + base_pid
-            pdfs = [b for b in batches if len(b)]
-            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else pd.DataFrame()
-            fp = _fingerprint_pdf(pdf)
-            key = f"part-{pid:05d}-{fp:016x}.parquet"
-            table = _spark_readable(
-                pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-                if len(pdf)
-                else arrow_schema.empty_table()
-            )
-            store.put_table(out_dir, key, table)
-            yield pd.DataFrame(
-                {
-                    "partition_id": [pid], "fingerprint": [fp],
-                    "row_count": [len(pdf)], "bytes": [store.size(out_dir, key)],
-                    "path": [key], "col_stats": [json.dumps(_col_stats_sidecar_blooms(_col_stats(pdf, bloom_cols, bloom_fpp), store, out_dir, key))],
-                }
-            )
-
-        stats = (
-            updated.repartition(max(1, len(affected)))
-            .mapInPandas(
-                sink,
-                "partition_id int, fingerprint long, row_count long, bytes long, "
-                "path string, col_stats string",
-            )
-            .collect()
+    def plan(prior):
+        return (
+            lambda meta: _meta_may_match(meta, filters, store, out_dir),
+            rewrite,
+            lambda before, after: {},
+            lambda r: f"update_where {filters!r} ({_files_rewritten(r)})",
         )
-        for r in stats:
-            new_entries[str(r.partition_id)] = {
-                "fingerprint": int(r.fingerprint),
-                "row_count": int(r.row_count),
-                "bytes": int(r.bytes),
-                "path": r.path,
-                "status": "committed",
-                "skipped_on_last_run": False,
-                "stats": json.loads(r.col_stats),
-            }
-    manifest = {
-        "version": int(prior.get("version", 0) or 0) + 1,
-        "lineage": f"update_where {filters!r} ({report['files_rewritten']}/{report['files_total']} files rewritten)",
-        "schema": prior.get("schema"),
-        **({"bloom_cols": list(prior["bloom_cols"]), "bloom_fpp": bloom_fpp} if prior.get("bloom_cols") else {}),
-        "committed_at": time.time(),
-        "total_rows": sum(int(p["row_count"]) for p in new_entries.values()),
-        "partitions": new_entries,
-        "update_report": report,
-    }
-    # conflict => None: the caller retries the whole CoW pass on the new base
-    # shard_size threaded through (round-4 ADVICE): a DML rewrite of a
-    # sharded-manifest table must not inline 10^5-10^6 partitions back
-    # into a single root JSON
-    return manifest if _try_commit(store, out_dir, manifest, shard_size=shard_size) else None
+
+    return _cow_rewrite(spark, out_dir, store, shard_size, "update_where", plan)
 
 
 def merge_into(
@@ -1778,79 +1722,61 @@ def merge_into(
     Commit follows the DML retry protocol: optimistic commit via
     exclusive-create; on conflict the whole CoW pass re-runs on the new
     base (8 attempts)."""
-    store = storage or LocalStorage()
-    # pin the source: it is read up to three times per attempt (profile
-    # aggregate, key collect, anti-join) and again on commit retry — a
-    # non-deterministic source would otherwise pass the uniqueness/null
-    # checks yet merge a DIFFERENT key set. The profile aggregate below
-    # is a full pass, so it materializes the cache before any reuse.
-    source = source.persist()
-    try:
-        for _attempt in range(8):
-            manifest = _merge_into_once(
-                spark, out_dir, source, key, store, shard_size, max_probe_keys
-            )
-            if manifest is not None:
-                return manifest
-    finally:
-        source.unpersist()
-    raise RuntimeError(f"merge_into: commit conflict persisted after 8 retries under {out_dir}")
+    import bisect
 
-
-def _merge_into_once(
-    spark, out_dir: str, source, key: str, store, shard_size: int, max_probe_keys: int
-) -> dict | None:
     from pyspark.sql import functions as F
 
-    prior = _load_committed(store, out_dir)
-    bloom_cols = prior.get("bloom_cols")
-    bloom_fpp = float(prior.get("bloom_fpp", 0.01))
-    parts = prior.get("partitions", {})
-    if not parts:
-        raise ValueError(f"merge_into: no committed snapshot under {out_dir}")
-    table_schema = _snapshot_spark_schema(
-        spark, store, out_dir, prior, [_part_key(m["path"]) for m in parts.values()]
-    )
-    if sorted(source.columns) != sorted(table_schema.fieldNames()):
-        raise ValueError(
-            f"merge_into: source columns {sorted(source.columns)} != table "
-            f"columns {sorted(table_schema.fieldNames())} (MERGE is whole-row; "
-            "project/null-fill the source first)"
+    store = storage or LocalStorage()
+
+    def plan(prior):
+        table_schema = _snapshot_spark_schema(
+            spark, store, out_dir, prior,
+            [_part_key(m["path"]) for m in prior["partitions"].values()],
         )
-    if key not in source.columns:
-        raise ValueError(f"merge_into: key column {key!r} not in source")
-    # one source pass for the key profile: distinct/duplicate/null counts
-    # + bounds — everything the prune decision needs, as ONE aggregate
-    prof = source.agg(
-        F.count("*").alias("n"),
-        F.count(key).alias("n_nonnull"),
-        F.countDistinct(key).alias("n_keys"),
-        F.min(key).alias("mn"),
-        F.max(key).alias("mx"),
-    ).collect()[0]
-    if int(prof.n) == 0:
-        # empty merge: no-op, but still a committed snapshot for lineage
-        new_entries = dict(parts)
-        report = {"files_total": len(parts), "files_rewritten": 0, "source_rows": 0}
-    else:
-        if int(prof.n_nonnull) != int(prof.n):
-            raise ValueError("merge_into: source has NULL merge keys")
-        if int(prof.n_keys) != int(prof.n):
+        cols = table_schema.fieldNames()
+        if sorted(source.columns) != sorted(cols):
             raise ValueError(
-                f"merge_into: source keys not unique ({int(prof.n)} rows, "
+                f"merge_into: source columns {sorted(source.columns)} != table "
+                f"columns {sorted(cols)} (MERGE is whole-row; "
+                "project/null-fill the source first)"
+            )
+        if key not in source.columns:
+            raise ValueError(f"merge_into: key column {key!r} not in source")
+        # one source pass for the key profile: distinct/duplicate/null counts
+        # + bounds — everything the prune decision needs, as ONE aggregate
+        prof = source.agg(
+            F.count("*").alias("n"),
+            F.count(key).alias("n_nonnull"),
+            F.countDistinct(key).alias("n_keys"),
+            F.min(key).alias("mn"),
+            F.max(key).alias("mx"),
+        ).collect()[0]
+        n = int(prof.n)
+
+        def report(before, after):
+            return {"source_rows": n}
+
+        def lineage(r):
+            return f"merge_into on {key!r} ({_files_rewritten(r)}, {n} source rows)"
+
+        if n == 0:
+            # empty merge: no-op, but still a committed snapshot for lineage
+            return lambda meta: False, lambda old: None, report, lineage
+        if int(prof.n_nonnull) != n:
+            raise ValueError("merge_into: source has NULL merge keys")
+        if int(prof.n_keys) != n:
+            raise ValueError(
+                f"merge_into: source keys not unique ({n} rows, "
                 f"{int(prof.n_keys)} distinct {key!r}) — pre-aggregate the source"
             )
         if int(prof.n_keys) <= max_probe_keys:
-            import bisect
-
             key_vals = sorted(r[0] for r in source.select(key).collect())
 
             def may_match(meta: dict) -> bool:
                 # sorted-key fast path: bisect the file's [lo, hi] range
                 # once instead of scanning all K keys per file, and feed
                 # only the in-range slice to the Bloom probe
-                stats = meta.get("stats") or {}
-                ent = stats.get(key) or {}
+                ent = (meta.get("stats") or {}).get(key) or {}
                 lo, hi = ent.get("lo"), ent.get("hi")
                 cand = key_vals
                 if lo is not None and hi is not None:
@@ -1862,102 +1788,34 @@ def _merge_into_once(
                     if i >= j:
                         return False
                     cand = key_vals[i:j]
-                return _file_may_match(
-                    stats, int(meta["row_count"]), [(key, "in", cand)],
-                    bloom_ctx=(store, out_dir),
-                )
+                return _meta_may_match(meta, [(key, "in", cand)], store, out_dir)
 
         else:
             range_probe = [(key, ">=", prof.mn), (key, "<=", prof.mx)]
 
             def may_match(meta: dict) -> bool:
-                return _file_may_match(
-                    meta.get("stats") or {}, int(meta["row_count"]), range_probe,
-                    bloom_ctx=(store, out_dir),
-                )
+                return _meta_may_match(meta, range_probe, store, out_dir)
 
-        affected, kept_entries = {}, {}
-        for pid, meta in parts.items():
-            if may_match(meta):
-                affected[pid] = meta
-            else:
-                kept_entries[pid] = meta
-        report = {
-            "files_total": len(parts),
-            "files_rewritten": len(affected),
-            "source_rows": int(prof.n),
-        }
-        src = source.select(*table_schema.fieldNames())
-        if affected:
-            old = _read_parts(
-                spark, out_dir,
-                [_part_key(m["path"]) for m in affected.values()], store, prior,
-            )
-            survivors = old.join(src.select(key), on=key, how="left_anti").select(
-                *table_schema.fieldNames()
-            )
-            rewrite_df = survivors.unionByName(src)
-        else:
-            rewrite_df = src
-        base_pid = max((int(p) for p in parts), default=-1) + 1
-        arrow_schema = _arrow_schema_of(rewrite_df)
+        src = source.select(*cols)
 
-        def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ctx = TaskContext.get()
-            pid = (ctx.partitionId() if ctx is not None else 0) + base_pid
-            pdfs = [b for b in batches if len(b)]
-            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else pd.DataFrame()
-            fp = _fingerprint_pdf(pdf)
-            part_key = f"part-{pid:05d}-{fp:016x}.parquet"
-            table = _spark_readable(
-                pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-                if len(pdf)
-                else arrow_schema.empty_table()
-            )
-            store.put_table(out_dir, part_key, table)
-            yield pd.DataFrame(
-                {
-                    "partition_id": [pid], "fingerprint": [fp],
-                    "row_count": [len(pdf)], "bytes": [store.size(out_dir, part_key)],
-                    "path": [part_key],
-                    "col_stats": [json.dumps(_col_stats_sidecar_blooms(_col_stats(pdf, bloom_cols, bloom_fpp), store, out_dir, part_key))],
-                }
-            )
+        def rewrite(old):
+            if old is None:  # insert-only: no file holds a source key
+                return src.repartition(max(1, spark.sparkContext.defaultParallelism // 4))
+            survivors = old.join(src.select(key), on=key, how="left_anti")
+            return survivors.select(*cols).unionByName(src)
 
-        n_rewrite_parts = max(1, len(affected)) if affected else max(
-            1, spark.sparkContext.defaultParallelism // 4
-        )
-        stats = (
-            rewrite_df.repartition(n_rewrite_parts)
-            .mapInPandas(
-                sink,
-                "partition_id int, fingerprint long, row_count long, bytes long, "
-                "path string, col_stats string",
-            )
-            .collect()
-        )
-        new_entries = dict(kept_entries)
-        for r in stats:
-            new_entries[str(r.partition_id)] = {
-                "fingerprint": int(r.fingerprint),
-                "row_count": int(r.row_count),
-                "bytes": int(r.bytes),
-                "path": r.path,
-                "status": "committed",
-                "skipped_on_last_run": False,
-                "stats": json.loads(r.col_stats),
-            }
-    manifest = {
-        "version": int(prior.get("version", 0) or 0) + 1,
-        "lineage": f"merge_into on {key!r} ({report['files_rewritten']}/{report['files_total']} files rewritten, {report['source_rows']} source rows)",
-        "schema": prior.get("schema"),
-        **({"bloom_cols": list(prior["bloom_cols"]), "bloom_fpp": bloom_fpp} if prior.get("bloom_cols") else {}),
-        "committed_at": time.time(),
-        "total_rows": sum(int(p["row_count"]) for p in new_entries.values()),
-        "partitions": new_entries,
-        "merge_report": report,
-    }
-    return manifest if _try_commit(store, out_dir, manifest, shard_size=shard_size) else None
+        return may_match, rewrite, report, lineage
+
+    # pin the source: it is read up to three times per attempt (profile
+    # aggregate, key collect, anti-join) and again on commit retry — a
+    # non-deterministic source would otherwise pass the uniqueness/null
+    # checks yet merge a DIFFERENT key set. The profile aggregate is a
+    # full pass, so it materializes the cache before any reuse.
+    source = source.persist()
+    try:
+        return _cow_rewrite(spark, out_dir, store, shard_size, "merge_into", plan)
+    finally:
+        source.unpersist()
 
 
 def read_incremental(
@@ -1970,17 +1828,8 @@ def read_incremental(
     rewrote data — the diff is then not an append stream; consume such
     tables by full snapshot instead)."""
     store = storage or LocalStorage()
-
-    def _load(v):
-        if v is None:
-            return load_manifest(out_dir, store)
-        text = store.get_text(out_dir, f"{MANIFESTS_DIR}/manifest-{v:06d}.json")
-        if text is None:
-            raise FileNotFoundError(f"no snapshot version {v} under {out_dir}")
-        return _resolve_partitions(json.loads(text), out_dir, store)
-
-    m_from = _load(from_version)
-    m_to = _load(to_version)
+    m_from = _load_version(store, out_dir, from_version)
+    m_to = _load_version(store, out_dir, to_version)
     keys_from = {_part_key(p["path"]) for p in m_from.get("partitions", {}).values()}
     keys_to = {_part_key(p["path"]) for p in m_to.get("partitions", {}).values()}
     removed = keys_from - keys_to

@@ -49,9 +49,9 @@ def main() -> int:
 
     qs, oracles = e.queries(), e.oracle_sql()
     failures = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    run = [name for name in qs if not only or name in only]
+    for name in run:
+        fn = qs[name]
         try:
             got = fn(spark, sf_dir).toPandas()
         except Exception as ex:
@@ -97,7 +97,7 @@ def main() -> int:
             except AssertionError:
                 failures.append((name, str(ex)[:200]))
                 print(f"FAIL  {name}: value mismatch\n{str(ex)[:400]}")
-    print(f"\n{len(failures)} failures / {len(qs)} queries")
+    print(f"\n{len(failures)} failures / {len(run)} queries")
     for n, m in failures:
         print(" -", n, ":", m[:160])
     spark.stop()

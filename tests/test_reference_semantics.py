@@ -245,6 +245,119 @@ def test_manifest_fingerprint_changes_on_data_change(spark, tmp_path):
     assert not any(p["skipped_on_last_run"] for p in m["partitions"].values())
 
 
+# Manifest entries each writer produces on one fixed table: (digest of the
+# per-file stats, {pid: (key, row_count, bytes, skipped_on_last_run)}).
+# The part-file format is a contract between snapshots (keys are content
+# addresses, resume compares fingerprints), so none of it may drift. Byte
+# counts follow the parquet writer, so they move with pyarrow/pandas.
+_PINNED_ENTRIES = {
+    "write": (
+        "a95c9ed07c49c183",
+        {
+            "0": ("part-00000-02976e7fcda721aa.parquet", 16, 2542, False),
+            "1": ("part-00001-68b9b0f65cd1087c.parquet", 16, 2549, False),
+            "2": ("part-00002-4941cb891bf295ff.parquet", 16, 2544, False),
+            "3": ("part-00003-502147d1052ba151.parquet", 16, 2552, False),
+        },
+    ),
+    "resume": (
+        "a95c9ed07c49c183",
+        {
+            "0": ("part-00000-02976e7fcda721aa.parquet", 16, 2542, True),
+            "1": ("part-00001-68b9b0f65cd1087c.parquet", 16, 2549, True),
+            "2": ("part-00002-4941cb891bf295ff.parquet", 16, 2544, True),
+            "3": ("part-00003-502147d1052ba151.parquet", 16, 2552, True),
+        },
+    ),
+    "append": (
+        "896ada61aa247a4e",
+        {
+            "0": ("part-00000-02976e7fcda721aa.parquet", 16, 2542, True),
+            "1": ("part-00001-68b9b0f65cd1087c.parquet", 16, 2549, True),
+            "2": ("part-00002-4941cb891bf295ff.parquet", 16, 2544, True),
+            "3": ("part-00003-502147d1052ba151.parquet", 16, 2552, True),
+            "4": ("part-00004-02ab95419b859491.parquet", 16, 2548, False),
+        },
+    ),
+    "delete": (
+        "1775d942735e94bd",
+        {
+            "1": ("part-00001-68b9b0f65cd1087c.parquet", 16, 2549, True),
+            "2": ("part-00002-4941cb891bf295ff.parquet", 16, 2544, True),
+            "3": ("part-00003-502147d1052ba151.parquet", 16, 2552, True),
+            "4": ("part-00004-02ab95419b859491.parquet", 16, 2548, False),
+            "5": ("part-00005-7b1de96dca7a0336.parquet", 8, 2429, False),
+        },
+    ),
+    "update": (
+        "cb6242c73be9c6ef",
+        {
+            "1": ("part-00001-68b9b0f65cd1087c.parquet", 16, 2549, True),
+            "2": ("part-00002-4941cb891bf295ff.parquet", 16, 2544, True),
+            "5": ("part-00005-7b1de96dca7a0336.parquet", 8, 2429, False),
+            "6": ("part-00006-7fcd3c01e2ff251b.parquet", 16, 2493, False),
+            "7": ("part-00007-0ccfa11da6710e4e.parquet", 16, 2506, False),
+        },
+    ),
+    "merge": (
+        "038215163b38d6fb",
+        {
+            "5": ("part-00005-7b1de96dca7a0336.parquet", 8, 2429, False),
+            "6": ("part-00006-7fcd3c01e2ff251b.parquet", 16, 2493, False),
+            "7": ("part-00007-0ccfa11da6710e4e.parquet", 16, 2506, False),
+            "8": ("part-00008-6136438d246c5621.parquet", 19, 2577, False),
+            "9": ("part-00009-0295e7c114f44aa8.parquet", 15, 2527, False),
+        },
+    ),
+}
+
+
+def test_part_sink_entries_pinned(spark, tmp_path):
+    """Every writer — load, resume, append, delete, update, merge — goes
+    through one part-file sink; its keys, fingerprints, sizes and stats
+    must match the pinned entries exactly."""
+    import hashlib
+    import json
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            "id",
+            ((F.col("id") * 7) % 23).alias("v"),
+            F.concat(F.lit("k"), F.col("id").cast("string")).alias("tag"),
+        )
+
+    out = str(tmp_path / "pinned")
+    steps = {
+        "write": lambda: mf.write_checkpointed(
+            frame(0, 64).repartitionByRange(4, "id"), out, bloom_cols=["tag"]
+        ),
+        "resume": lambda: mf.write_checkpointed(frame(0, 64).repartitionByRange(4, "id"), out),
+        "append": lambda: mf.write_checkpointed(
+            frame(64, 80), out, num_partitions=1, mode="append"
+        ),
+        "delete": lambda: mf.delete_where(spark, out, [("id", "<", 8)]),
+        "update": lambda: mf.update_where(spark, out, [("id", ">=", 56)], {"v": F.lit(-1)}),
+        "merge": lambda: mf.merge_into(
+            spark, out,
+            frame(30, 34).unionByName(frame(100, 102)).withColumn("v", F.lit(-2).cast("long")),
+            key="id",
+        ),
+    }
+    for step, run in steps.items():
+        parts = run()["partitions"]
+        stats_digest, entries = _PINNED_ENTRIES[step]
+        got = {
+            pid: (p["path"], p["row_count"], p["bytes"], p["skipped_on_last_run"])
+            for pid, p in parts.items()
+        }
+        assert got == entries, step
+        for pid, p in parts.items():
+            assert p["path"] == f"part-{int(pid):05d}-{p['fingerprint']:016x}.parquet"
+        stats = {pid: p["stats"] for pid, p in parts.items()}
+        digest = hashlib.sha256(json.dumps(stats, sort_keys=True).encode()).hexdigest()
+        assert digest[:16] == stats_digest, step
+
+
 def _storage_for(kind: str, tmp_path):
     return None if kind == "local" else mf.ObjectStorage(str(tmp_path / "objstore"))
 
@@ -617,12 +730,27 @@ def test_occ_append_remerges_interleaved_commit(spark, tmp_path, kind):
     assert mf.load_manifest(out_dir, storage=store)["version"] == 3
 
 
-def test_occ_delete_retries_on_interleaved_commit(spark, tmp_path):
-    """A CoW DELETE computed against a replaced snapshot must abort and
-    re-run on the new base (a rewrite cannot be merged): rival appends
-    ids 1000..1099 after our base read; the delete of id < 100 must
-    still see them."""
-    out_dir = str(tmp_path / "occdel")
+_DML_OPS = {
+    "delete_where": lambda spark, out, store: mf.delete_where(
+        spark, out, [("id", "<", 100)], storage=store
+    ),
+    "update_where": lambda spark, out, store: mf.update_where(
+        spark, out, [("id", "<", 100)], {"v": F.lit(-1)}, storage=store
+    ),
+    "merge_into": lambda spark, out, store: mf.merge_into(
+        spark, out, spark.range(100).withColumn("v", F.lit(-1).cast("long")),
+        key="id", storage=store,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_DML_OPS))
+def test_occ_delete_retries_on_interleaved_commit(spark, tmp_path, op):
+    """A copy-on-write DML pass (delete, update or merge) computed against
+    a replaced snapshot must abort and re-run on the new base (a rewrite
+    cannot be merged): rival appends ids 1000..1099 after our base read;
+    the op on id < 100 must still see them."""
+    out_dir = str(tmp_path / "occdml")
     df = spark.range(1000).withColumn("v", F.col("id") * 2).repartitionByRange(8, "id")
     mf.write_checkpointed(df, out_dir)
     mf.write_checkpointed(
@@ -630,12 +758,20 @@ def test_occ_delete_retries_on_interleaved_commit(spark, tmp_path):
         mode="append", num_partitions=1,
     )
     stale = _StaleReadStorage(mf.LocalStorage(), visible_version=1)
-    m = mf.delete_where(spark, out_dir, [("id", "<", 100)], storage=stale)
+    m = _DML_OPS[op](spark, out_dir, stale)
     assert m["version"] == 3
-    assert m["delete_report"]["rows_before"] == 1100  # recomputed on v2
+    report = m[f"{op.split('_')[0]}_report"]
+    assert report["files_total"] == 9  # recomputed on v2: 8 files + the rival's
     back = mf.read_snapshot(spark, out_dir)
-    assert back.count() == 1000
-    assert back.filter(F.col("id") >= 1000).count() == 100  # rival rows intact
+    if op == "delete_where":
+        assert report["rows_before"] == 1100
+        assert back.count() == 1000
+    else:
+        assert back.count() == 1100
+        assert back.filter(F.col("v") == -1).count() == 100
+        assert back.filter(F.col("v") == -1).agg(F.max("id")).collect()[0][0] == 99
+    # rival rows intact
+    assert back.filter((F.col("id") >= 1000) & (F.col("v") == F.col("id") * 2)).count() == 100
 
 
 def test_live_pointer_never_rolls_back(spark, tmp_path):
@@ -956,6 +1092,27 @@ def test_merge_into_range_probe_big_source(spark, tmp_path):
     assert m["merge_report"]["files_rewritten"] < m["merge_report"]["files_total"]
     back = mf.read_snapshot(spark, out)
     assert back.count() == 1000 and back.filter(F.col("v") == -1).count() == 100
+
+
+def test_merge_into_writes_table_column_types(spark, tmp_path):
+    """A source column wider than the table's (long into int) does not
+    leak into the rewritten files: like update_where, the rewrite keeps
+    the table's types, so every part file matches the manifest schema."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "mrg_types")
+    df = spark.range(100).withColumn("v", F.col("id").cast("int")).repartitionByRange(4, "id")
+    mf.write_checkpointed(df, out)
+    src = spark.range(90, 110).withColumn("v", F.lit(-1).cast("long"))
+    m = mf.merge_into(spark, out, src, key="id")
+    assert 0 < m["merge_report"]["files_rewritten"] < m["merge_report"]["files_total"]
+    for p in m["partitions"].values():
+        assert str(pq.read_schema(os.path.join(out, p["path"])).field("v").type) == "int32"
+    back = mf.read_snapshot(spark, out)
+    assert dict(back.dtypes)["v"] == "int"
+    assert back.count() == 110 and back.filter(F.col("v") == -1).count() == 20
 
 
 def test_tableio_merge_upsert_uses_pruned_path(spark, tmp_path):

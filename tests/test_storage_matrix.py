@@ -132,3 +132,50 @@ def test_scan_mistyped_probe_falls_back(spark, store_ctx):
     _write(spark, out_dir, store)
     got, _rep = mf.scan(spark, out_dir, [("tag", "=", 5)], storage=store)
     assert got.count() == 0  # no string tag equals int 5; no crash
+
+
+# the reference N03 layer's column names (administrative code, prefecture,
+# municipality): unquoted non-ASCII identifiers that Spark's DDL parser
+# rejects, so the stored schema must round-trip without it
+CODE, PREF, CITY = "全国地方公共団体コード", "都道府県名", "市区町村名"
+
+
+def test_reference_column_names_merge_then_read(spark, store_ctx):
+    store, out_dir, _ = store_ctx
+    rows = [(f"13{i:03d}", "東京都", f"市{i}") for i in range(1, 41)]
+    df = spark.createDataFrame(rows, [CODE, PREF, CITY]).repartitionByRange(4, CODE)
+    mf.write_checkpointed(df, out_dir, storage=store)
+    src = spark.createDataFrame(
+        [("13005", "東京都", "千代田区"), ("14100", "神奈川県", "横浜市")],
+        [CODE, PREF, CITY],
+    )
+    m = mf.merge_into(spark, out_dir, src, key=CODE, storage=store)
+    assert m["merge_report"]["files_rewritten"] < m["merge_report"]["files_total"]
+    back = mf.read_snapshot(spark, out_dir, storage=store)
+    assert back.columns == [CODE, PREF, CITY]
+    got = {r[CODE]: (r[PREF], r[CITY]) for r in back.collect()}
+    assert len(got) == 41
+    assert got["13005"] == ("東京都", "千代田区")
+    assert got["14100"] == ("神奈川県", "横浜市")
+    assert got["13006"] == ("東京都", "市6")
+
+
+@pytest.mark.parametrize("store_ctx", ["memory", "http"], indirect=True)
+def test_legacy_simplestring_schema_reads_back(spark, store_ctx):
+    """Tables committed before the manifest stored Spark's JSON schema
+    carry ``df.schema.simpleString()``; the object-read path (the only
+    one that consults the stored schema) must still decode them."""
+    import json
+
+    store, out_dir, _ = store_ctx
+    m = _write(spark, out_dir, store, n=40, parts=2)
+    legacy = "struct<id:bigint,v:bigint,tag:string>"
+    for key in (mf.MANIFEST_NAME, mf._root_key(m["version"])):
+        body = json.loads(store.get_text(out_dir, key))
+        assert body["schema"].startswith("{")
+        body["schema"] = legacy
+        store.put_text(out_dir, key, json.dumps(body))
+    assert mf.load_manifest(out_dir, storage=store)["schema"] == legacy
+    back = mf.read_snapshot(spark, out_dir, storage=store)
+    assert back.dtypes == [("id", "bigint"), ("v", "bigint"), ("tag", "string")]
+    assert back.agg(F.sum("v")).collect()[0][0] == 3 * sum(range(40))
