@@ -32,6 +32,15 @@ _CC_CUT_DIRS: set[str] = set()
 # analyzed-plan size (chars) above which connected_components cuts label
 # lineage; ~2x this is the largest plan Catalyst ever re-analyzes
 _CC_CUT_PLAN_CHARS = 30_000
+# analyzed-plan size above which the CC edge frame is cut up front; flat
+# edge frames (scans, local relations, generators) sit far below it
+_CC_EDGE_CUT_PLAN_CHARS = 20_000
+
+# CC loop tuning (round 7, measured on the bench's 2M-node graphs): rows
+# per loop shuffle partition, and pointer jumps per round once a graph is
+# still changing after two rounds
+_CC_ROWS_PER_TASK = 250_000
+_CC_DEEP_JUMPS = 5
 
 # rounds used by the most recent connected_components() call on this
 # driver — observability for benchmarks (round COUNT x per-round cost is
@@ -54,6 +63,89 @@ def release_cc_spills() -> None:
     discarded — their lineage re-scans these files on recompute."""
     _cleanup_cc_cut_dirs()
     _CC_CUT_DIRS.clear()
+
+
+class _LineageCut:
+    """The lineage-cut policy of the iterative graph loops
+    (connected_components here, shortest_paths in ops/graph.py).
+
+    A loop whose plan grows per round cuts it flat once its analyzed plan
+    passes a size (:meth:`due`), by storing the frame and restarting from
+    the stored copy (:meth:`__call__`). Storage: with a cluster-visible
+    checkpoint dir on the session (``sparkContext.setCheckpointDir``) the
+    cut is Spark's ``df.checkpoint(eager=True)``, files managed by Spark;
+    otherwise a parquet spill into a temp dir registered in
+    ``_CC_CUT_DIRS``, chosen over ``localCheckpoint`` because its storage
+    has a deterministic delete (a local checkpoint's cannot be released
+    through any public handle — the round-4 cache leak). The spill is
+    only correct where driver and executors share a filesystem, so
+    construction fails loud on a non-local master without a checkpoint
+    dir (the spill would scatter parquet across executor disks and the
+    driver-side re-read would silently lose rows)."""
+
+    def __init__(self, spark, caller: str, disable_hint: str, prefix: str):
+        jsc = spark.sparkContext._jsc.sc()
+        self.reliable = jsc.getCheckpointDir().isDefined()
+        if not self.reliable and not jsc.isLocal():
+            raise RuntimeError(
+                f"{caller}: lineage cuts on a non-local master need a "
+                "cluster-visible checkpoint dir — call "
+                "spark.sparkContext.setCheckpointDir('<shared path>') first "
+                "(the driver-local parquet spill is only correct in local mode), "
+                f"or pass {disable_hint}"
+            )
+        self.prefix = prefix
+
+    @staticmethod
+    def due(df: DataFrame, limit: int | None = None) -> bool:
+        """Whether ``df``'s analyzed plan is past ``limit`` chars
+        (default ``_CC_CUT_PLAN_CHARS``)."""
+        limit = _CC_CUT_PLAN_CHARS if limit is None else limit
+        return len(df._jdf.queryExecution().analyzed().toString()) > limit
+
+    def __call__(self, df: DataFrame, prev_dir: str | None = None, metric=None, cols=None):
+        """Cut ``df``: store it, restart from a flat read of the stored
+        copy, persist and materialize that, then delete ``prev_dir`` (the
+        spill this cut supersedes). ``cols`` projects what is stored.
+
+        Returns (cut frame, value, spill dir or None). ``value`` is the
+        aggregate ``metric`` over ``df`` when given, else the cut's row
+        count; both come out of jobs the cut runs anyway. A spill carries
+        the metric as an Observation on its write; a checkpoint reads it
+        off a cache of ``df`` that the checkpoint is then taken from. The
+        returned dir must outlive the cut frame (a cache-evicted
+        recompute re-scans it): it is reclaimed by the next cut's
+        ``prev_dir``, :func:`release_cc_spills` or interpreter exit."""
+
+        def stored(d: DataFrame) -> DataFrame:
+            return d.select(*cols) if cols else d
+
+        value = new_dir = None
+        if self.reliable:
+            if metric is not None:
+                value = df.persist().agg(metric).collect()[0][0]
+            # re-persisted: the loops reference the cut more than once
+            # per round, and without a cache each reference re-reads the
+            # checkpoint files
+            cut = stored(df).checkpoint(eager=True).persist()
+            n = cut.count()
+            if metric is not None:
+                df.unpersist()
+        else:
+            new_dir = _tempfile.mkdtemp(prefix=self.prefix)
+            _CC_CUT_DIRS.add(new_dir)
+            if metric is not None:
+                obs = Observation()
+                df = df.observe(obs, metric)
+            stored(df).write.mode("overwrite").parquet(new_dir)
+            if metric is not None:
+                (value,) = obs.get.values()
+            cut = df.sparkSession.read.parquet(new_dir).persist()
+            n = cut.count()
+        if prev_dir is not None:
+            _shutil.rmtree(prev_dir, ignore_errors=True)
+            _CC_CUT_DIRS.discard(prev_dir)
+        return cut, (n if metric is None else value), new_dir
 
 
 def _hash_u64(a: np.ndarray) -> np.ndarray:
@@ -280,6 +372,42 @@ def minhash_signatures(
     return docs.select(F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("sig"))
 
 
+def _band_pairs(banded: DataFrame, key: str, payload: DataFrame | None = None) -> DataFrame:
+    """Candidate pairs (id_a < id_b) sharing at least one band key — the
+    LSH band self-join behind minhash_lsh_pairs, hamming_block_pairs and
+    embedding_neardup_lsh.
+
+    ``banded`` is the explode leg: one row per (id, band key), the band
+    index already folded into the single 8-byte ``key``. Any other column
+    of it rides the explode leg and comes out as ``<col>_a``/``<col>_b``.
+    The pair set is deduped on (id_a, id_b) before anything else joins,
+    so the band exchange carries the explode leg's columns only. Each
+    column of ``payload`` (keyed by ``id``) then re-joins once per side by
+    id, as ``<col>_a``/``<col>_b``: a payload value crosses the wire once
+    per surviving pair side, never on the band exchange."""
+    carry = [c for c in banded.columns if c not in ("id", key)]
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            F.col("id").alias(f"id_{s}"), *[F.col(c).alias(f"{c}_{s}") for c in carry], key
+        )
+
+    pairs = (
+        side("a")
+        .join(side("b"), [key])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *[f"{c}_{s}" for s in "ab" for c in carry])
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    if payload is not None:
+        for s in "ab":
+            pairs = pairs.join(
+                payload.select(*[F.col(c).alias(f"{c}_{s}") for c in payload.columns]),
+                f"id_{s}",
+            )
+    return pairs
+
+
 def minhash_lsh_pairs(
     sigs: DataFrame, bands: int = 16, rows_per_band: int = 4, min_jaccard_est: float = 0.0
 ) -> DataFrame:
@@ -317,17 +445,7 @@ def minhash_lsh_pairs(
             )
         ).alias("bucket"),
     )
-    a = banded.select(F.col("id").alias("id_a"), "bucket")
-    b = banded.select(F.col("id").alias("id_b"), "bucket")
-    pairs = (
-        a.join(b, ["bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sig_a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sig_b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    pairs = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
+    pairs = _band_pairs(banded, "bucket", payload=sigs.select("id", "sig"))
     est = (
         F.aggregate(
             F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
@@ -421,7 +539,7 @@ def hamming_block_pairs(
 
     bounds = np.linspace(0, 64, n_blocks + 1).astype(int)
     block_vals = [
-        F.shiftrightunsigned(F.col("hsh"), int(bounds[i])).bitwiseAND(
+        F.shiftrightunsigned(F.col("h"), int(bounds[i])).bitwiseAND(
             F.lit(int((1 << int(bounds[i + 1] - bounds[i])) - 1))
         )
         for i in range(n_blocks)
@@ -440,17 +558,10 @@ def hamming_block_pairs(
         ]
     )
     h = (
-        hashes.select(F.col(id_col).alias("id"), F.col(hash_col).alias("hsh"))
-        .select("id", "hsh", F.explode(keys).alias("kv"))
+        hashes.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
+        .select("id", "h", F.explode(keys).alias("kv"))
     )
-    a = h.select(F.col("id").alias("id_a"), F.col("hsh").alias("h_a"), "kv")
-    b = h.select(F.col("id").alias("id_b"), F.col("hsh").alias("h_b"), "kv")
-    cand = (
-        a.join(b, ["kv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "h_a", "h_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_pairs(h, "kv")
     ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming")
     return cand.select("id_a", "id_b", ham).filter(F.col("hamming") <= max_hamming)
 
@@ -641,20 +752,10 @@ def embedding_neardup_lsh(
             )
         ).alias("bkey"),
     )
-    a = banded.select(F.col("id").alias("id_a"), "bkey")
-    b = banded.select(F.col("id").alias("id_b"), "bkey")
-    pairs = (
-        a.join(b, ["bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
     v = emb.select(
         F.col(id_col).alias("id"), F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v")
     )
-    pairs = pairs.join(v.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a").join(
-        v.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")), "id_b"
-    )
+    pairs = _band_pairs(banded, "bkey", payload=v)
     dot = F.aggregate(F.zip_with("v_a", "v_b", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     na = F.sqrt(F.aggregate(F.transform("v_a", lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
     nb = F.sqrt(F.aggregate(F.transform("v_b", lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
@@ -727,69 +828,43 @@ def connected_components(
     cache before the previous round's cache is released, so execution
     never re-walks the chain of rounds.
 
-    Lineage discipline: the logical plan grows with every round, and
-    on graphs deeper than a few rounds Catalyst ANALYSIS time becomes
-    the bottleneck long before execution does (a depth-3 run already
-    produces a ~47k-line EXPLAIN). Every ``checkpoint_interval``
-    rounds the label frame is therefore cut flat: spilled to a parquet
-    temp dir and re-read as a fresh scan (the GraphFrames
-    connectedComponents checkpointInterval idea, but with DETERMINISTIC
-    cleanup — the superseded cut dir is deleted as soon as the next cut
-    lands, so at most two spills are ever live per call: the ids-only
-    edge materialization and the latest label cut).
-    A parquet spill is chosen over ``localCheckpoint`` deliberately:
-    the checkpoint RDD's storage cannot be released through any public
-    DataFrame handle (unpersisting the wrapper leaks one cached label
-    frame per cut — the round-4 regression), while a file cut has a
-    flat plan AND a deterministic delete. The final cut dir (if any)
-    must outlive the returned frame (recompute re-scans it); it is
-    removed at interpreter exit, or earlier via
-    :func:`release_cc_spills` (long-lived drivers calling this per
-    batch should release between batches). On a session with a
-    cluster-visible checkpoint dir configured, the cut uses
-    ``df.checkpoint(eager=True)`` instead — the driver-local spill
-    path is only correct where driver and executors share a
-    filesystem (local mode). Near-dup graphs converge in 2-4
-    rounds and (since the size trigger) never pay a label spill at all;
-    ``checkpoint_interval=0`` disables cutting entirely. Cuts are
-    SIZE-triggered rather than round-counted: the pointer jump is a
-    self-join, so the logical plan DOUBLES per round; the loop checks
-    the analyzed-plan size each round and cuts when it crosses
-    ``_CC_CUT_PLAN_CHARS`` — deep graphs stay bounded at ~2x the
-    threshold, while tiny-diameter graphs (and flat edge frames) skip
-    the parquet round trips entirely.
+    Lineage discipline: the logical plan grows with every round (the
+    pointer jump is a self-join, so it DOUBLES per round), and on graphs
+    deeper than a few rounds Catalyst ANALYSIS time becomes the
+    bottleneck long before execution does (a depth-3 run already
+    produces a ~47k-line EXPLAIN). Cuts are therefore SIZE-triggered,
+    not round-counted: each round the loop checks the analyzed-plan size
+    and, once it crosses ``_CC_CUT_PLAN_CHARS``, cuts the label frame
+    flat through :class:`_LineageCut` (a parquet spill re-read as a
+    fresh scan in local mode, ``df.checkpoint`` on a session with a
+    checkpoint dir) — the GraphFrames checkpointInterval idea made
+    adaptive, with DETERMINISTIC cleanup: the superseded spill is
+    deleted as soon as the next cut lands, so at most two spills are
+    ever live per call (the ids-only edge materialization and the latest
+    label cut). Deep graphs stay bounded at ~2x the threshold;
+    tiny-diameter near-dup graphs over flat edge frames converge in 2-4
+    rounds and never pay a cut. ``checkpoint_interval`` only switches
+    cutting: any non-zero value enables the size trigger, 0 disables
+    cutting entirely. The final spill dir (if any) must outlive the
+    returned frame (recompute re-scans it); it is removed at interpreter
+    exit, or earlier via :func:`release_cc_spills` (long-lived drivers
+    calling this per batch should release between batches).
 
     Returns (node, component) with component = min reachable
     node id; nodes are the edge endpoints (callers left-join their full
     id set and coalesce singletons to themselves).
     """
     spark = edges.sparkSession
-    # reliable-checkpoint mode: on a real cluster the driver-local parquet
-    # spill below would be wrong (executors write their own local disks),
-    # so when the session has a cluster-visible checkpoint dir configured
-    # (sparkContext.setCheckpointDir) the cut uses Spark's own
-    # df.checkpoint — same flat plan, cluster-correct storage, files
-    # managed by Spark (spark.cleaner.referenceTracking.cleanCheckpoints
-    # reclaims them). The local spill remains the local-mode default
-    # because its cleanup is deterministic.
-    _use_reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-    # runtime guard, not just a docstring: on a non-local master without a
-    # checkpoint dir, the tempfile spill would scatter label/edge parquet
-    # across executor-local disks and the driver-side re-read would lose
-    # data silently. Fail loud with the fix spelled out.
-    if (
-        checkpoint_interval
-        and not _use_reliable
-        and not spark.sparkContext._jsc.sc().isLocal()
-    ):
-        raise RuntimeError(
-            "connected_components: lineage cuts on a non-local master need a "
-            "cluster-visible checkpoint dir — call "
-            "spark.sparkContext.setCheckpointDir('<shared path>') first "
-            "(the driver-local parquet spill is only correct in local mode), "
-            "or pass checkpoint_interval=0 to disable cutting for "
-            "small-diameter graphs"
+    cut = (
+        _LineageCut(
+            spark,
+            "connected_components",
+            "checkpoint_interval=0 to disable cutting for small-diameter graphs",
+            "jpspark_cc_cut_",
         )
+        if checkpoint_interval
+        else None
+    )
     # NOTE: the symmetric edge set is deduped AFTER the dst repartition
     # below — hash partitioning on dst co-locates every (src, dst) twin,
     # so the dropDuplicates aggregate runs on the repartition exchange's
@@ -802,7 +877,6 @@ def connected_components(
     sym = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
         edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
-    cut_dir: str | None = None
     # cut the EDGE lineage up front when it is worth cutting: sym is
     # referenced once per round and the pointer-jump self-join doubles
     # every reference, so an upstream pair-finding pipeline (MinHash ->
@@ -813,24 +887,18 @@ def connected_components(
     # ALREADY flat (a scan, a local relation, a simple generator — the
     # common case for pre-materialized pair tables) skip the spill: it
     # would cost a parquet round trip to bound a plan that is bounded.
-    sym_plan_chars = len(sym._jdf.queryExecution().analyzed().toString())
-    if checkpoint_interval and sym_plan_chars > 20_000:
-        if _use_reliable:
-            sym = sym.checkpoint(eager=True)
-        else:
-            cut_dir = _tempfile.mkdtemp(prefix="jpspark_cc_cut_")
-            _CC_CUT_DIRS.add(cut_dir)
-            sym.write.parquet(f"{cut_dir}/edges")
-            sym = spark.read.parquet(f"{cut_dir}/edges")
-    sym0 = sym.persist()
-    n_sym = sym0.count()
-    edge_dir, cut_dir = cut_dir, None
+    if cut is not None and cut.due(sym, _CC_EDGE_CUT_PLAN_CHARS):
+        sym0, n_sym, _ = cut(sym)
+    else:
+        sym0 = sym.persist()
+        n_sym = sym0.count()
+    cut_dir: str | None = None
 
     # ---- round-7 loop tuning (guide §2.2/§2.4: fewer/larger partitions,
     # remove repeated shuffles). The per-round frames are fixed-width
     # (node, label) pairs a few MB per million rows, so at bench scale the
     # loop is TASK-OVERHEAD-bound, not byte-bound: sizing the loop's
-    # shuffle to ~rows_per_task rows per partition (capped at the
+    # shuffle to ~_CC_ROWS_PER_TASK rows per partition (capped at the
     # session's configured parallelism, so cluster configs are never
     # exceeded) cut the 2M-node chain bench ~35%. The edge frame is
     # additionally hash-partitioned by dst ONCE and persisted — every
@@ -846,15 +914,13 @@ def connected_components(
     # AQE/partition settings for the loop's duration.
     import os as _os
 
-    rows_per_task = int(_os.environ.get("JPSPARK_CC_ROWS_PER_TASK", "250000"))
-    _cc_deep_jumps = max(1, int(_os.environ.get("JPSPARK_CC_DEEP_JUMPS", "5")))
     default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # parallelism floor: once the graph has enough rows to give every
     # task >= 2k rows, run at least 8-way — a medium graph collapsed to
     # 1-2 partitions serializes every round on one core (measured ~25%
     # slower on a 60k-node graph than 8-12-way)
     floor_p = min(8, default_p, max(1, -(-n_sym // 2000)))
-    P = min(default_p, max(floor_p, -(-n_sym // max(rows_per_task, 1))))
+    P = min(default_p, max(floor_p, -(-n_sym // _CC_ROWS_PER_TASK)))
     keep_aqe = _os.environ.get("JPSPARK_CC_AQE", "0") == "1"
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -913,9 +979,9 @@ def connected_components(
             )
             # (2) pointer jump: label <- label(label). A graph still
             # changing after two full rounds is DEEP (near-dup stars
-            # converge in 2), so later rounds jump five times by default
-            # (`JPSPARK_CC_DEEP_JUMPS`) — each extra jump is one more
-            # self-join but collapses label-chain depth ~2x, cutting the
+            # converge in 2), so later rounds jump `_CC_DEEP_JUMPS` (5)
+            # times — each extra jump is one more self-join but
+            # collapses label-chain depth ~2x, cutting the
             # ROUND count (round cost is overhead-bound, so fewer rounds
             # beat cheaper rounds; on the 2M-node diameter-127 chain,
             # 3 jumps measured 30s -> 18s/5 rounds vs the round-6 loop,
@@ -929,7 +995,7 @@ def connected_components(
             # round's job: unpersisted, the nested self-joins re-execute
             # the whole round subtree per reference (measured 2-4x
             # blowup).
-            n_jumps = 1 if rnd < 2 else _cc_deep_jumps
+            n_jumps = 1 if rnd < 2 else _CC_DEEP_JUMPS
             j = stepped
             mids = []
             for ji in range(n_jumps):
@@ -955,76 +1021,39 @@ def connected_components(
             # round is cheap by induction — the plan never exceeds ~2x the
             # threshold before a cut fires — while tiny-diameter graphs
             # over flat edge frames (the near-dup common case) never pay a
-            # spill at all.
-            cut_now = checkpoint_interval and (
-                len(j._jdf.queryExecution().analyzed().toString())
-                > _CC_CUT_PLAN_CHARS
-            )
+            # cut at all.
             _changed_agg = F.sum(
                 (F.col("label") != F.col("old_label")).cast("long")
             ).alias("n")
-            if cut_now and not _use_reliable:
-                # lineage cut, SIZE-triggered: spill (node, label) to
-                # parquet and restart the plan from a flat scan. Round 7:
-                # the convergence scalar rides the spill write as an
-                # observed metric (CollectMetrics), so a cut round runs
-                # ONE compute job (write + changed-count) plus the
-                # re-read's cache-fill count — the former shape paid a
-                # separate aggregate job to materialize the round cache
-                # and then wrote from it. The previous cut's files are
-                # deleted once the new cut lands — bounded plan, cache,
-                # and disk, all deterministic.
-                obs = Observation()
-                new_dir = _tempfile.mkdtemp(prefix="jpspark_cc_cut_")
-                _CC_CUT_DIRS.add(new_dir)
-                (
-                    j.observe(obs, _changed_agg)
-                    .select("node", "label")
-                    .write.mode("overwrite")
-                    .parquet(f"{new_dir}/labels")
+            if cut is not None and cut.due(j):
+                # the convergence scalar comes out of the cut's own jobs
+                # (round 7: on a spill it rides the write as an observed
+                # metric, so a cut round runs the write plus the re-read's
+                # cache-fill count and no separate aggregate job)
+                kept, changed, cut_dir = cut(
+                    j, cut_dir, metric=_changed_agg, cols=("node", "label")
                 )
-                changed = obs.get["n"]
-                for m in mids:
-                    m.unpersist()
-                pinned.unpersist()
-                if cut_dir is not None:
-                    _shutil.rmtree(cut_dir, ignore_errors=True)
-                    _CC_CUT_DIRS.discard(cut_dir)
-                cut_dir = new_dir
-                labels = spark.read.parquet(f"{new_dir}/labels")
-                pinned = labels.persist()
-                labels.count()
+                labels = kept
             else:
-                jumped = j.persist()
+                kept = j.persist()
                 # convergence probe via ONE full aggregate: it must scan
                 # every partition so the ENTIRE frame lands in the cache
                 # before the parent is unpersisted below — a short-circuit
                 # probe (isEmpty) leaves unvisited partitions uncached and
                 # every later scan recomputes the full round lineage
                 # recursively (measured blowup: 5s/round -> 55s by round 4)
-                changed = jumped.agg(_changed_agg).collect()[0][0]
-                for m in mids:
-                    m.unpersist()
-                pinned.unpersist()
-                pinned = jumped  # persisted handle (labels projects it)
-                labels = jumped.select("node", "label")
-                if cut_now:
-                    # reliable-checkpoint mode (cluster): same shape as
-                    # before — checkpoint from the round cache, then
-                    # re-persist it (later rounds reference the labels
-                    # twice via the self-join and the convergence
-                    # aggregate once more; without a cache each reference
-                    # re-reads the checkpoint files)
-                    cut = labels.checkpoint(eager=True).persist()
-                    cut.count()
-                    pinned.unpersist()
-                    labels = cut
-                    pinned = cut
-            converged = not changed
-            if converged:
+                changed = kept.agg(_changed_agg).collect()[0][0]
+                labels = kept.select("node", "label")
+            for m in mids:
+                m.unpersist()
+            pinned.unpersist()
+            pinned = kept  # persisted handle backing labels
+            if not changed:
                 CC_LAST_ROUNDS = rnd + 1
                 break
         else:
+            sym.unpersist()
+            pinned.unpersist()
             raise RuntimeError(
                 f"connected_components: no convergence in {max_rounds} rounds "
                 "(graph diameter beyond the pointer-jump budget)"

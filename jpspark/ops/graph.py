@@ -5,10 +5,12 @@ the routing/reachability primitive over road-network or cell-adjacency
 graphs. Same execution discipline as ops/dedup.py connected_components:
 labels-only exchanges (node id + one double per row), one scalar to the
 driver per round (the improved-node count), per-round cache
-materialize-then-release, and size-triggered parquet lineage cuts (each
-round references the previous frame twice — union + min — so the plan
-doubles without cuts; the spill dirs share the CC registry and its
-release/atexit lifecycle).
+materialize-then-release, and size-triggered lineage cuts (each round
+references the previous frame twice — union + min — so the plan doubles
+without cuts). The cuts go through the one lineage-cut seam,
+ops/dedup.py ``_LineageCut``: it picks the storage (parquet spill or
+``df.checkpoint``), guards non-local masters, and registers spill dirs
+with the CC release/atexit lifecycle.
 
 At 10^12-row scale the full-relaxation form below is the WORST case
 (every edge re-relaxed every round); production SSSP keeps a frontier
@@ -20,12 +22,10 @@ pins down.
 
 from __future__ import annotations
 
-import tempfile as _tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _CC_CUT_DIRS, _CC_CUT_PLAN_CHARS
+from .dedup import _LineageCut
 
 SSSP_LAST_ROUNDS: int = 0
 
@@ -57,26 +57,16 @@ def shortest_paths(
     checkpoint dir."""
     global SSSP_LAST_ROUNDS
     spark = edges.sparkSession
-    if cut_plan_chars is None:
-        cut_plan_chars = _CC_CUT_PLAN_CHARS
-    # same storage discipline as connected_components: with a
-    # cluster-visible checkpoint dir the lineage cut uses df.checkpoint;
-    # the driver-local tempfile spill is only correct in local mode —
-    # fail loud on a non-local master rather than silently scatter
-    # parquet across executor disks (round-5 ADVICE on the CC twin)
-    _use_reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-    if (
-        cut_plan_chars
-        and not _use_reliable
-        and not spark.sparkContext._jsc.sc().isLocal()
-    ):
-        raise RuntimeError(
-            "shortest_paths: lineage cuts on a non-local master need a "
-            "cluster-visible checkpoint dir — call "
-            "spark.sparkContext.setCheckpointDir('<shared path>') first "
-            "(the driver-local parquet spill is only correct in local mode), "
-            "or pass cut_plan_chars=0 to disable cutting for shallow graphs"
+    cut = (
+        None
+        if cut_plan_chars == 0
+        else _LineageCut(
+            spark,
+            "shortest_paths",
+            "cut_plan_chars=0 to disable cutting for shallow graphs",
+            "jpspark-sssp-cut-",
         )
+    )
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
@@ -127,33 +117,13 @@ def shortest_paths(
         dist = new.select("node", "dist")
         if improved == 0:
             break
-        plan_chars = len(dist._jdf.queryExecution().analyzed().toString())
-        if cut_plan_chars and plan_chars > cut_plan_chars:
-            if _use_reliable:
-                # re-persist: the loop references dist twice per round
-                # (cand join, union), and without a cache each reference
-                # re-reads the checkpoint files
-                cut = dist.checkpoint(eager=True).persist()
-                cut.count()
-                pinned.unpersist()
-                dist = cut
-                pinned = cut
-            else:
-                new_dir = _tempfile.mkdtemp(prefix="jpspark-sssp-cut-")
-                _CC_CUT_DIRS.add(new_dir)
-                dist.write.mode("overwrite").parquet(new_dir)
-                pinned.unpersist()
-                dist = spark.read.parquet(new_dir).persist()
-                dist.count()
-                pinned = dist
-                if cut_dir is not None:
-                    import shutil as _shutil
-
-                    _shutil.rmtree(cut_dir, ignore_errors=True)
-                    _CC_CUT_DIRS.discard(cut_dir)
-                cut_dir = new_dir
+        if cut is not None and cut.due(dist, cut_plan_chars):
+            dist, _, cut_dir = cut(dist, cut_dir)
+            pinned.unpersist()
+            pinned = dist
     else:
         e.unpersist()
+        pinned.unpersist()
         raise RuntimeError(
             f"shortest_paths did not converge in {max_rounds} rounds"
         )

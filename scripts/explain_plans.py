@@ -7,6 +7,7 @@ no unexpected shuffles in the broadcast spatial paths.
 
 from __future__ import annotations
 
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -88,26 +89,40 @@ def audit_no_heavy_exchange(plan: str, markers: tuple[str, ...]) -> str:
     )
 
 
+def band_exchanges(plan: str, key_col: str, id_cols=("id_a", "id_b")) -> list[list[str]]:
+    """Input column names of every band-join exchange in a formatted
+    plan. A band exchange moves one explode leg of the LSH self-join: it
+    carries the band key and the id column of exactly ONE side. Exchanges
+    after the join (pair dedup, payload re-joins) carry both sides' ids,
+    so a key or payload column riding one of them is not counted here.
+    Both physical strategies count: BroadcastExchange (small side at test
+    SF) and shuffle Exchange (hashpartitioning at scale / AQE)."""
+    out = []
+    for b in plan.split("\n\n"):
+        lines = b.splitlines()
+        if not lines or not (") Exchange" in lines[0] or ") BroadcastExchange" in lines[0]):
+            continue
+        inp = next((ln for ln in lines if ln.startswith("Input [")), "")
+        cols = re.findall(r"(\w+)#\d+", inp)
+        if key_col in cols and sum(c in cols for c in id_cols) == 1:
+            out.append(cols)
+    return out
+
+
 def audit_band_exchange(plan: str, heavy_marker: str, key_col: str) -> str:
     """Assert the band-join exchanges don't carry the heavy payload column
     (VERDICT r01 item 4: 16x signature shuffle weight), and that the band
     index is folded INTO the single key column (round 7) rather than
     riding as its own column. Returns a comment line for PLANS.md."""
-    blocks = plan.split("\n\n")
-    # both physical strategies count: BroadcastExchange (small side at
-    # test SF) and shuffle Exchange (hashpartitioning at scale / AQE)
-    heads = [(b.splitlines()[0] if b.splitlines() else "", b) for b in blocks]
-    band_exchanges = [
-        b for head, b in heads
-        if (") Exchange" in head or ") BroadcastExchange" in head)
-        and f"{key_col}#" in b
-    ]
-    assert band_exchanges, "no band exchange found in plan"
-    for b in band_exchanges:
-        assert heavy_marker not in b, f"{heavy_marker} rides the band exchange:\n{b}"
-        assert "band#" not in b, f"separate band column rides the band exchange:\n{b}"
+    found = band_exchanges(plan, key_col)
+    assert found, "no band exchange found in plan"
+    for cols in found:
+        assert not any(heavy_marker in c for c in cols), (
+            f"{heavy_marker} rides the band exchange: {cols}"
+        )
+        assert "band" not in cols, f"separate band column rides the band exchange: {cols}"
     return (
-        f"AUDIT: {len(band_exchanges)} band exchange(s) carry (id, {key_col}) only — "
+        f"AUDIT: {len(found)} band exchange(s) carry (id, {key_col}) only — "
         f"band index folded into the key; {heavy_marker}* re-joins after pair dedup. PASS"
     )
 

@@ -392,10 +392,11 @@ def test_connected_components_lineage_cut_bounded_plan(spark):
     rounds; without the lineage cut the logical plan grows with every
     round and Catalyst analysis becomes the bottleneck (a depth-3 run
     already EXPLAINs to ~47k lines, and the pointer-jump self-join
-    DOUBLES the plan per round). With the default cut interval the
-    returned frame's plan must be bounded — at most interval rounds on
-    top of a flat parquet scan — and exactly ONE spill dir may stay
-    live (superseded cuts deleted eagerly), with no cache-handle leak."""
+    DOUBLES the plan per round). Cuts are size-triggered, so the
+    returned frame's plan must be bounded — at most ~2x the cut
+    threshold on top of a flat parquet scan — and exactly ONE spill dir
+    may stay live (superseded cuts deleted eagerly), with no
+    cache-handle leak."""
     import os
 
     from jpspark.ops.dedup import _CC_CUT_DIRS
@@ -414,8 +415,8 @@ def test_connected_components_lineage_cut_bounded_plan(spark):
     got = cc.toPandas().set_index("node")["component"]
     assert len(got) == n and all(got[f"c{i:03d}"] == "c000" for i in range(n))
     # bounded plan: a NO-cut run at this depth is O(rounds) joins deep
-    # (hundreds of thousands of chars); the cut keeps it to <= interval
-    # rounds over a LogicalRDD/scan leaf
+    # (hundreds of thousands of chars); the size-triggered cut keeps it
+    # under ~2x the threshold over a LogicalRDD/scan leaf
     assert len(plan) < 60_000, f"plan not cut: {len(plan)} chars"
     live = set(_CC_CUT_DIRS) - dirs0
     # the FINAL label cut (superseded label cuts deleted in-loop); the
@@ -442,7 +443,7 @@ def test_connected_components_convergence_guard(spark):
 
 def test_connected_components_jump_schedule_invariant(spark, monkeypatch):
     """Labels must be independent of the deep-round pointer-jump count
-    (`JPSPARK_CC_DEEP_JUMPS`, round-7 default 5): any schedule converges
+    (`_CC_DEEP_JUMPS`, round-7 value 5): any schedule converges
     to the same per-component min label, only the round count differs.
     Pinned on a diameter-499 path — deep enough that every setting takes
     multiple deep rounds."""
@@ -450,8 +451,8 @@ def test_connected_components_jump_schedule_invariant(spark, monkeypatch):
     chain = [(i, i + 1) for i in range(n - 1)]
     edges = spark.createDataFrame(chain, ["id_a", "id_b"])
     results = {}
-    for jumps in ("1", "3", "5"):
-        monkeypatch.setenv("JPSPARK_CC_DEEP_JUMPS", jumps)
+    for jumps in (1, 3, 5):
+        monkeypatch.setattr(dedup, "_CC_DEEP_JUMPS", jumps)
         got = (
             dedup.connected_components(edges, max_rounds=40)
             .toPandas()
@@ -460,8 +461,126 @@ def test_connected_components_jump_schedule_invariant(spark, monkeypatch):
         )
         results[jumps] = got
         assert (got["component"] == 0).all() and len(got) == n
-    pd.testing.assert_frame_equal(results["1"], results["3"])
-    pd.testing.assert_frame_equal(results["3"], results["5"])
+    pd.testing.assert_frame_equal(results[1], results[3])
+    pd.testing.assert_frame_equal(results[3], results[5])
+
+
+def test_iterative_ops_release_caches_on_non_convergence(spark):
+    """A call that hits max_rounds raises and returns nothing, so it must
+    leave no persisted frame behind: CC's edge and label caches, SSSP's
+    last distance cache."""
+    from jpspark.ops import graph
+
+    def n_cached():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    edges = spark.createDataFrame([("a", "b"), ("b", "c")], ["id_a", "id_b"])
+    before = n_cached()
+    with pytest.raises(RuntimeError, match="convergence"):
+        dedup.connected_components(edges, max_rounds=1)
+    assert n_cached() == before
+
+    chain = spark.createDataFrame(
+        pd.DataFrame({"src": [0, 1, 2], "dst": [1, 2, 3], "w": [1.0, 1.0, 1.0]})
+    )
+    before = n_cached()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.shortest_paths(chain, source=0, max_rounds=1)
+    assert n_cached() == before
+
+
+def test_reliable_checkpoint_cuts_match_spill(spark, tmp_path):
+    """With a checkpoint dir on the session the lineage cuts use
+    df.checkpoint instead of the parquet spill: CC labels (130-node
+    chain) and SSSP distances (24-node chain) must equal the spill-mode
+    results, and no spill dir may be registered."""
+    from jpspark.ops import graph
+
+    sc = spark.sparkContext
+    n = 130
+    chain = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(n - 1)]
+    cc_edges = spark.createDataFrame(chain, ["id_a", "id_b"])
+    m = 24
+    sp_edges = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "src": list(range(m - 1)),
+                "dst": list(range(1, m)),
+                "w": [1.0 + (i % 4) / 4.0 for i in range(m - 1)],
+            }
+        )
+    )
+
+    def run():
+        cc = dedup.connected_components(cc_edges)
+        labels = sorted(map(tuple, cc.collect()))
+        cc.unpersist()
+        dist = graph.shortest_paths(sp_edges, source=0)
+        return labels, sorted(map(tuple, dist.collect()))
+
+    spilled = run()
+    dirs0 = set(dedup._CC_CUT_DIRS)
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        checkpointed = run()
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    assert checkpointed == spilled
+    assert list(tmp_path.glob("*/rdd-*"))  # the checkpoint branch ran
+    assert set(dedup._CC_CUT_DIRS) == dirs0
+    dedup.release_cc_spills()
+
+
+def test_band_exchanges_carry_only_id_and_key(spark):
+    """The LSH band self-joins (minhash, embedding, Hamming) exchange the
+    explode leg only: one side's id and the 8-byte band key — plus, for
+    the Hamming join, the 8-byte hash. Signatures and vectors re-join
+    after the pair dedup and never ride a band exchange. Checked with
+    the band-join broadcast and with it forced to a shuffle."""
+    import importlib.util
+    from pathlib import Path
+
+    from jpspark.ops.bucketing import physical_plan
+
+    path = Path(__file__).resolve().parents[1] / "scripts" / "explain_plans.py"
+    spec = importlib.util.spec_from_file_location("explain_plans", path)
+    explain_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(explain_plans)
+
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            {"doc_id": list(range(6)), "text": ["a b c d e f"] * 3 + ["u v w x y z"] * 3}
+        )
+    )
+    rng = np.random.default_rng(0)
+    emb = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "vec_id": list(range(6)),
+                "embedding": [rng.normal(size=8).tolist() for _ in range(6)],
+            }
+        )
+    )
+    cases = [
+        (lambda: dedup.minhash_lsh_pairs(dedup.minhash_signatures(docs)), "bucket", ()),
+        (lambda: dedup.embedding_neardup_lsh(emb), "bkey", ()),
+        (lambda: dedup.hamming_block_pairs(dedup.simhash64(docs), "simhash", 3), "kv", ("h",)),
+    ]
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    try:
+        for threshold in (old, "-1"):
+            # frames are built under the setting: a plan is fixed on first use
+            spark.conf.set(conf, threshold)
+            for build, key, rides in cases:
+                found = explain_plans.band_exchanges(physical_plan(build()), key)
+                assert found, f"no band exchange keyed on {key}"
+                for cols in found:
+                    side = "a" if "id_a" in cols else "b"
+                    allowed = {f"id_{side}", key} | {f"{c}_{side}" for c in rides}
+                    assert key in cols and set(cols) <= allowed, (key, cols)
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_asof_join_reserved_column_guard(spark):
