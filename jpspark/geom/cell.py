@@ -62,11 +62,22 @@ def _grid_xy(lon, lat, res: int):
     n = 1 << res
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
-    x = np.floor((lon - LON0) / (LON1 - LON0) * n).astype(np.int64)
-    y = np.floor((lat - LAT0) / (LAT1 - LAT0) * n).astype(np.int64)
+    # clip before the int cast, so an infinite or huge coordinate lands in
+    # the edge cell on its own side instead of overflowing int64; the clip
+    # after it maps a NaN's undefined cast into the grid
+    x = np.floor(np.clip((lon - LON0) / (LON1 - LON0) * n, 0, n - 1)).astype(np.int64)
+    y = np.floor(np.clip((lat - LAT0) / (LAT1 - LAT0) * n, 0, n - 1)).astype(np.int64)
     x = np.clip(x, 0, n - 1)
     y = np.clip(y, 0, n - 1)
     return x, y
+
+
+def grid_xy(lon, lat, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized lon/lat -> integer (x, y) grid coordinates at ``res``:
+    the cell ``encode`` assigns, before Morton interleaving."""
+    if not 0 <= res <= MAX_RES:
+        raise ValueError(f"res must be in [0, {MAX_RES}]")
+    return _grid_xy(lon, lat, res)
 
 
 def from_xy(x, y, res: int) -> np.ndarray:
@@ -88,9 +99,7 @@ def to_xy(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 def encode(lon, lat, res: int) -> np.ndarray:
     """Vectorized lon/lat -> cell id at resolution ``res``."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}]")
-    x, y = _grid_xy(lon, lat, res)
+    x, y = grid_xy(lon, lat, res)
     return from_xy(x, y, res)
 
 
@@ -129,9 +138,8 @@ def bounds(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
 def ring(cell: int, k: int) -> np.ndarray:
     """Cell ids at Chebyshev grid distance exactly ``k`` (k=0 -> self).
 
-    This is the boundary-ring expansion primitive for kNN (SURVEY J5).
-    Edge-of-world cells are clipped (no wraparound; fixtures live in the
-    Japan bbox far from the antimeridian).
+    The H3 ``gridRing`` analog. Edge-of-world cells are clipped (no
+    wraparound; fixtures live in the Japan bbox far from the antimeridian).
     """
     x, y, r = to_xy(cell)
     x, y, r = int(x), int(y), int(r)

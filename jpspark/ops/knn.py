@@ -1,26 +1,41 @@
-"""Cell-local kNN join with boundary-ring expansion (SURVEY J5, north_rule).
+"""Exact broadcast kNN join with boundary-ring expansion on a target grid
+sized by k (SURVEY J5, north_rule).
 
 Exact k-nearest-neighbor of each query point against a target point set,
-using the cell index for locality:
+using the cell index for locality. The grid-partitioned candidate
+generation with guaranteed-complete expansion follows the distributed
+kNN-join literature (e.g. "Distributed Stream KNN Join", SIGMOD 2021; see
+repo PAPERS.md), re-expressed over the Spark DataFrame API.
 
-  explore disk(query_cell, r) for growing r; stop once the kth-nearest
-  distance found so far is <= r * min(cell_w, cell_h) — any target outside
-  the explored disk is at least that far away (cells outside a Chebyshev-
-  radius-r disk are separated from the query by >= r full cell widths) —
-  so the answer is provably exact.
+Target grid. ``knn_join_broadcast`` buckets the targets on the grid at
+the finest resolution >= the caller's ``res`` at which the occupied cells
+still hold >= k targets on average (while refining still splits a cell
+and the targets' occupied extent spans at most max(4 n, 4096) cells), so
+a few cells around a query hold about k targets whatever the target
+density. The caller's ``res`` is the coarsest grid, not the grid; the
+answer is exact at any resolution.
 
-The cell-local candidate + ring-expansion shape follows the distributed
-kNN-join literature (e.g. "Distributed Stream KNN Join", SIGMOD 2021 —
-grid-partitioned candidates with guaranteed-complete expansion; see
-repo PAPERS.md) re-expressed over the Spark DataFrame API.
+Candidates, per group of queries sharing a grid cell: explore
+disk(query_cell, r) ring by ring; a query is done once its kth-nearest
+distance so far is < r * min(cell_w, cell_h), since any target outside
+the explored disk is at least that far away (cells outside a Chebyshev-
+radius-r disk are separated from the query by >= r full cell widths), so
+the answer is provably exact. Rings are clipped to the targets' occupied
+extent: the walk starts at the first ring that reaches it and ends at
+the ring whose disk covers it, where every target has been seen, so a
+query far from every target walks at most the extent's width in rings.
+
+Selection per query is over a (query, candidate) distance matrix whose
+columns are in target-id order, built in row slices of at most 2^21
+cells: plain ``sqrt(dx*dx + dy*dy)`` (the SQL oracle's formula, bit for
+bit), a two-pivot ``argpartition`` for wide rows and a stable argsort
+otherwise, so ties break by target id (pinned; matches the pytest oracle
+and the DuckDB ``ORDER BY dist, id`` oracle). A NaN distance sorts last,
+as the oracle's ``NULLS LAST`` does.
 
 Physical strategy: the target side (facilities: ~1e5 rows of (id, lon,
-lat)) is grouped into a per-cell dict of coordinate arrays on the driver
-and broadcast; queries stream through ``mapInArrow`` — the 10^12-row side
-never shuffles. Queries are processed per-cell (all queries in one cell
-share candidate arrays), each expansion step a vectorized distance-matrix
-computation. Ties broken by target id (pinned; matches the pytest oracle
-and the DuckDB ORDER BY dist, id oracle).
+lat)) is indexed on the driver and broadcast; queries stream through
+``mapInArrow`` — the 10^12-row side never shuffles.
 """
 
 from __future__ import annotations
@@ -36,109 +51,169 @@ from pyspark.sql import types as T
 from ..geom import cell
 
 DEFAULT_RES = 6
+# the targets' occupied extent spans at most this many grid cells per
+# target (with a floor for small target sets): it bounds a far query's walk
+_CELLS_PER_TARGET, _MIN_GRID_CELLS = 4, 1 << 12
+# cells of one (queries x candidates) distance matrix: 16 MB per float64 array
+_MAX_MATRIX = 1 << 21
+
+
+def _grid_res(lon: np.ndarray, lat: np.ndarray, res: int, k: int) -> int:
+    """The finest resolution >= ``res`` at which the targets' occupied
+    cells still hold >= k targets on average, refining still splits an
+    occupied cell and the occupied extent fits the grid cap."""
+    n = len(lon)
+    if n == 0:
+        return res
+    cap = max(_MIN_GRID_CELLS, _CELLS_PER_TARGET * n)
+
+    def occupancy(r: int) -> tuple[int, int]:
+        x, y = cell.grid_xy(lon, lat, r)
+        extent = (int(x.max()) - int(x.min()) + 1) * (int(y.max()) - int(y.min()) + 1)
+        return len(np.unique(x * (1 << r) + y)), extent
+
+    occupied, _ = occupancy(res)
+    while res < cell.MAX_RES:
+        finer, extent = occupancy(res + 1)
+        if finer == occupied or n < k * finer or extent > cap:
+            break
+        res, occupied = res + 1, finer
+    return res
 
 
 class TargetIndex:
+    """Targets bucketed by grid cell at ``res``, in cell order, plus the
+    occupied extent (inclusive grid bounds x0..x1, y0..y1)."""
+
     def __init__(self, ids: np.ndarray, lon: np.ndarray, lat: np.ndarray, res: int = DEFAULT_RES):
         self.res = res
         self.ids = np.asarray(ids, dtype=np.int64)
         self.lon = np.asarray(lon, dtype=np.float64)
         self.lat = np.asarray(lat, dtype=np.float64)
-        cells = cell.encode(self.lon, self.lat, res)
-        order = np.argsort(cells, kind="stable")
-        self.sorted_cells = cells[order]
-        self.order = order
-        self.starts = np.flatnonzero(np.r_[True, self.sorted_cells[1:] != self.sorted_cells[:-1]])
-        self.uniq = self.sorted_cells[self.starts]
-        self.ends = np.r_[self.starts[1:], len(self.sorted_cells)]
         self.n_total = len(self.ids)
+        x, y = cell.grid_xy(self.lon, self.lat, res)
+        cells = cell.from_xy(x, y, res)
+        self.order = np.argsort(cells, kind="stable")
+        self.uniq, self.starts = np.unique(cells[self.order], return_index=True)
+        self.ends = np.r_[self.starts[1:], self.n_total]
+        if self.n_total:
+            self.x0, self.x1, self.y0, self.y1 = int(x.min()), int(x.max()), int(y.min()), int(y.max())
 
-    def members(self, c: int) -> np.ndarray:
-        """Target ordinals in cell c."""
-        i = np.searchsorted(self.uniq, c)
-        if i >= len(self.uniq) or self.uniq[i] != c:
-            return np.empty(0, dtype=np.int64)
-        return self.order[self.starts[i] : self.ends[i]]
+    def ring_members(self, cx: int, cy: int, r: int) -> np.ndarray:
+        """Target ordinals in the cells at Chebyshev distance exactly ``r``
+        from cell (cx, cy), the ring clipped to the occupied extent."""
+        if r == 0:
+            gx, gy = np.array([cx]), np.array([cy])
+        else:
+            xs = np.arange(max(cx - r, self.x0), min(cx + r, self.x1) + 1)
+            ys = np.arange(max(cy - r + 1, self.y0), min(cy + r - 1, self.y1) + 1)
+            sides = [(xs, np.full(len(xs), y)) for y in (cy - r, cy + r) if self.y0 <= y <= self.y1]
+            sides += [(np.full(len(ys), x), ys) for x in (cx - r, cx + r) if self.x0 <= x <= self.x1]
+            if not sides:
+                return np.empty(0, dtype=np.int64)
+            gx, gy = np.concatenate([s[0] for s in sides]), np.concatenate([s[1] for s in sides])
+        cells = cell.from_xy(gx, gy, self.res)
+        i = np.minimum(np.searchsorted(self.uniq, cells), len(self.uniq) - 1)
+        i = i[self.uniq[i] == cells]
+        n = self.ends[i] - self.starts[i]
+        # concatenation of arange(starts[i], ends[i]) over the hit cells
+        return self.order[np.arange(int(n.sum())) + np.repeat(self.starts[i] - np.cumsum(n) + n, n)]
+
+
+def _select(d: np.ndarray, t: np.ndarray, kk: int):
+    """Per row, the kk (dist, id)-smallest entries sorted by (dist, id).
+    The columns must be in ascending target-id order: a STABLE argsort on
+    distance then tie-breaks by id for free."""
+    if d.shape[1] > 4 * kk:
+        # cheap unordered top-kk first, then sort the small slice. Two
+        # pivots (kk-1, kk): position kk holds the (kk+1)-th smallest
+        # distance, giving an O(Q) boundary-tie test with no extra pass
+        # over the full distance matrix.
+        part_full = np.argpartition(d, (kk - 1, kk), axis=1)
+        part = part_full[:, :kk]
+        dpart = np.take_along_axis(d, part, axis=1)
+        # boundary-tie guard: argpartition picks an ARBITRARY subset of
+        # the candidates whose distance ties exactly at the kth boundary,
+        # breaking the pinned (dist, id) tie-break. The selection is
+        # unambiguous iff the (kk+1)-th smallest distance is strictly
+        # greater than the kth (a NaN kth is never unambiguous); tied
+        # rows fall back to the full stable argsort.
+        kth_d = dpart.max(axis=1)
+        next_d = np.take_along_axis(d, part_full[:, kk : kk + 1], axis=1)[:, 0]
+        ambiguous = ~(next_d > kth_d)
+        # re-sort by (dist, id): stable argsort of dist over id-ascending
+        # columns needs column order restored first
+        part = np.take_along_axis(part, np.argsort(part, axis=1, kind="stable"), axis=1)
+        dpart = np.take_along_axis(d, part, axis=1)
+        sel = np.take_along_axis(part, np.argsort(dpart, axis=1, kind="stable"), axis=1)
+        if ambiguous.any():
+            amb = np.flatnonzero(ambiguous)
+            sel[amb] = np.argsort(d[amb], axis=1, kind="stable")[:, :kk]
+    else:
+        sel = np.argsort(d, axis=1, kind="stable")[:, :kk]
+    return t[sel], np.take_along_axis(d, sel, axis=1)
 
 
 def _knn_for_cell(idx: TargetIndex, qc: int, qx: np.ndarray, qy: np.ndarray, k: int):
-    """Exact kNN for all queries sharing cell qc. Returns (tid, dist) arrays
-    of shape (Q, k'), k' = min(k, n_targets)."""
-    cw, ch = cell.cell_size_deg(idx.res)
-    guard = min(cw, ch)
-    cand = idx.members(qc)
-    seen = {int(qc)}
-    r = 0
-    kth = np.full(len(qx), np.inf)
-    best_t: np.ndarray | None = None
-    best_d: np.ndarray | None = None
-    while True:
-        r += 1
-        new_cells = [c for c in cell.ring(qc, r) if int(c) not in seen]
-        seen.update(int(c) for c in new_cells)
-        new = [idx.members(int(c)) for c in new_cells]
-        new = [m for m in new if len(m)]
-        if new:
-            cand = np.concatenate([cand] + new)
-        enough = len(cand) >= min(k, idx.n_total)
-        if enough:
-            tids = idx.ids[cand]
-            # candidates pre-sorted by target id: a STABLE argsort on the
-            # distance matrix then tie-breaks by id for free, fully
-            # vectorized (no per-query Python loop)
-            id_order = np.argsort(tids, kind="stable")
-            cand_sorted = cand[id_order]
-            tids = tids[id_order]
-            dx = idx.lon[cand_sorted][None, :] - qx[:, None]
-            dy = idx.lat[cand_sorted][None, :] - qy[:, None]
-            # plain sqrt(dx^2+dy^2) (NOT hypot): bit-identical to the SQL
-            # oracle's formula so value-hash comparisons match exactly
-            d = np.sqrt(dx * dx + dy * dy)
-            kk = min(k, d.shape[1])
-            if d.shape[1] > 4 * kk:
-                # cheap unordered top-kk first, then sort the small slice.
-                # Two pivots (kk-1, kk): position kk holds the (kk+1)-th
-                # smallest distance, giving an O(Q) boundary-tie test with
-                # no extra pass over the full distance matrix.
-                part_full = np.argpartition(d, (kk - 1, kk), axis=1)
-                part = part_full[:, :kk]
-                dpart = np.take_along_axis(d, part, axis=1)
-                # boundary-tie guard: argpartition picks an ARBITRARY subset
-                # of candidates whose distance ties exactly at the kth
-                # boundary, breaking the pinned (dist, id) tie-break. The
-                # selection is unambiguous iff the (kk+1)-th smallest
-                # distance is strictly greater than the kth; tied rows fall
-                # back to the full stable argsort (rare: exact dist ties).
-                kth_d = dpart.max(axis=1)
-                next_d = np.take_along_axis(d, part_full[:, kk : kk + 1], axis=1)[:, 0]
-                ambiguous = next_d <= kth_d
-                # re-sort by (dist, id): stable argsort of dist over
-                # id-ascending columns needs id order restored first
-                id_in_part = np.argsort(part, axis=1, kind="stable")
-                part = np.take_along_axis(part, id_in_part, axis=1)
-                dpart = np.take_along_axis(dpart, id_in_part, axis=1)
-                sel_local = np.argsort(dpart, axis=1, kind="stable")
-                best_t = tids[np.take_along_axis(part, sel_local, axis=1)]
-                best_d = np.take_along_axis(dpart, sel_local, axis=1)
-                if ambiguous.any():
-                    amb = np.flatnonzero(ambiguous)
-                    sel = np.argsort(d[amb], axis=1, kind="stable")[:, :kk]
-                    best_t[amb] = tids[sel]
-                    best_d[amb] = np.take_along_axis(d[amb], sel, axis=1)
-            else:
-                sel = np.argsort(d, axis=1, kind="stable")[:, :kk]
-                best_t = tids[sel]
-                best_d = np.take_along_axis(d, sel, axis=1)
-            kth = best_d[:, -1]
-        # exactness guarantee: everything outside explored disk(r) is
-        # at least r*guard away. STRICT comparison (round-3 ADVICE): at
-        # kth == r*guard an unseen boundary target could tie the kth
-        # distance and win the (dist, id) tie-break, so equality expands
-        # one more ring instead of declaring victory.
-        if enough and np.all(kth < r * guard):
-            return best_t, best_d
-        if len(seen) >= (1 << idx.res) ** 2 or (enough and r * guard > 720):
-            return best_t, best_d
+    """Exact kNN for all queries sharing cell qc. Returns (tid, dist)
+    arrays of shape (Q, kk), kk = min(k, n_targets)."""
+    q, kk = len(qx), min(k, idx.n_total)
+    best_t, best_d = np.empty((q, kk), dtype=np.int64), np.empty((q, kk))
+    if kk == 0:
+        return best_t, best_d
+    guard = min(cell.cell_size_deg(idx.res))
+    x, y, _ = cell.to_xy(qc)
+    cx, cy = int(x), int(y)
+    # rings nearer than `near` miss the occupied extent; disk(far) covers it
+    near = max(idx.x0 - cx, cx - idx.x1, idx.y0 - cy, cy - idx.y1, 0)
+    far = max(cx - idx.x0, idx.x1 - cx, cy - idx.y0, idx.y1 - cy)
+    cand = np.empty(0, dtype=np.int64)
+    todo = np.arange(q)
+    stale = False
+    for r in range(near, far + 1):
+        new = idx.ring_members(cx, cy, r)
+        if len(new):
+            cand = np.concatenate([cand, new])
+            cand = cand[np.argsort(idx.ids[cand], kind="stable")]
+            stale = True
+        # no query passes the bound at r = 0; disk(far) holds every target
+        if len(cand) < kk or (r == 0 and far > 0):
+            continue
+        if stale:
+            stale = False
+            # (re)select the queries not yet done, a row slice at a time
+            tids, tlon, tlat = idx.ids[cand], idx.lon[cand], idx.lat[cand]
+            step = max(1, _MAX_MATRIX // len(cand))
+            for s in range(0, len(todo), step):
+                rows = todo[s : s + step]
+                # plain sqrt(dx^2+dy^2) (NOT hypot): bit-identical to the SQL
+                # oracle's formula so value-hash comparisons match exactly
+                dx = tlon[None, :] - qx[rows, None]
+                dy = tlat[None, :] - qy[rows, None]
+                best_t[rows], best_d[rows] = _select(np.sqrt(dx * dx + dy * dy), tids, kk)
+        # exactness guarantee: everything outside the explored disk(r) is
+        # at least r*guard away. STRICT comparison: at kth == r*guard an
+        # unseen boundary target could tie the kth distance and win the
+        # (dist, id) tie-break, so equality expands one more ring instead.
+        todo = todo[~(best_d[todo, -1] < r * guard)]
+        if len(todo) == 0:
+            break
+    return best_t, best_d
+
+
+def knn_chunk(index: TargetIndex, qx: np.ndarray, qy: np.ndarray, k: int):
+    """Exact kNN of a batch of queries, grouped by grid cell: (order, tid,
+    dist), where row i of the (Q, kk) arrays answers query ``order[i]``."""
+    cells = cell.encode(qx, qy, index.res)
+    order = np.argsort(cells, kind="stable")
+    sc = cells[order]
+    starts = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
+    kk = min(k, index.n_total)
+    t, d = np.empty((len(qx), kk), dtype=np.int64), np.empty((len(qx), kk))
+    for s, e in zip(starts, np.r_[starts[1:], len(sc)]):
+        sel = order[s:e]
+        t[s:e], d[s:e] = _knn_for_cell(index, int(sc[s]), qx[sel], qy[sel], k)
+    return order, t, d
 
 
 def knn_join_broadcast(
@@ -158,14 +233,14 @@ def knn_join_broadcast(
     neighbor (oracle-friendly). ``as_arrays=True`` emits one row per query
     (query_id, target_ids, dists) — k times fewer rows through Arrow and
     any downstream shuffle, the preferred shape at 10^12-query scale.
+    ``res`` is the coarsest target grid; the index refines it to the
+    target density (module docstring). With no targets every query has
+    no neighbour: no rows, or empty lists with ``as_arrays``.
     """
     spark = queries.sparkSession
-    idx = TargetIndex(
-        targets_pdf[target_id_col].to_numpy(),
-        targets_pdf[lon].to_numpy(),
-        targets_pdf[lat].to_numpy(),
-        res,
-    )
+    tlon = targets_pdf[lon].to_numpy(dtype=np.float64)
+    tlat = targets_pdf[lat].to_numpy(dtype=np.float64)
+    idx = TargetIndex(targets_pdf[target_id_col].to_numpy(), tlon, tlat, _grid_res(tlon, tlat, res, k))
     bc = spark.sparkContext.broadcast(idx)
     if as_arrays:
         out_schema = T.StructType(
@@ -197,45 +272,26 @@ def knn_join_broadcast(
 
     def kernel(batches):
         index: TargetIndex = bc.value
+        kk = min(k, index.n_total)
 
         def flush(buf: list) -> "pa.RecordBatch":
             tbl = pa.Table.from_batches(buf)
             qx = tbl.column(lon).to_numpy(zero_copy_only=False)
             qy = tbl.column(lat).to_numpy(zero_copy_only=False)
             qid_arr = tbl.column(query_id_col).combine_chunks()
-            cells = cell.encode(qx, qy, index.res)
-            order = np.argsort(cells, kind="stable")
-            sc = cells[order]
-            starts = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-            ends = np.r_[starts[1:], len(sc)]
-            sel_all, t_parts, d_parts, kks = [], [], [], []
-            for s, e in zip(starts, ends):
-                sel = order[s:e]
-                t, d = _knn_for_cell(index, int(sc[s]), qx[sel], qy[sel], k)
-                sel_all.append(sel)
-                t_parts.append(t)
-                d_parts.append(d)
-                kks.append(t.shape[1])
-            sel_cat = np.concatenate(sel_all)
-            kk_per_q = np.concatenate([np.full(len(s), kk) for s, kk in zip(sel_all, kks)])
-            flat_t = np.concatenate([t.ravel() for t in t_parts])
-            flat_d = np.concatenate([d.ravel() for d in d_parts])
+            order, t, d = knn_chunk(index, qx, qy, k)
+            flat_t, flat_d = t.ravel(), d.ravel()
             if as_arrays:
-                offsets = np.zeros(len(sel_cat) + 1, dtype=np.int32)
-                np.cumsum(kk_per_q, out=offsets[1:])
+                offsets = np.arange(len(order) + 1, dtype=np.int32) * kk
                 cols = [
-                    qid_arr.take(pa.array(sel_cat)),
+                    qid_arr.take(pa.array(order)),
                     pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat_t)),
                     pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat_d)),
                 ]
             else:
-                rep_idx = np.repeat(sel_cat, kk_per_q)
-                ranks = np.concatenate(
-                    [np.tile(np.arange(1, kk + 1, dtype=np.int32), len(s)) for s, kk in zip(sel_all, kks)]
-                )
                 cols = [
-                    qid_arr.take(pa.array(rep_idx)),
-                    pa.array(ranks),
+                    qid_arr.take(pa.array(np.repeat(order, kk))),
+                    pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), len(order))),
                     pa.array(flat_t),
                     pa.array(flat_d),
                 ]

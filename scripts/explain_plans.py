@@ -17,6 +17,7 @@ from jpspark.session import get_spark  # noqa: E402
 
 AUDIT = [
     "geo_pip_join",       # expect: scan -> project -> mapInArrow -> hashagg (no join shuffle)
+    "geo_knn",            # expect: scan -> project -> ONE mapInArrow; targets broadcast inside it, zero exchanges
     "geo_tile_assign",    # expect: pure codegen, partial+final agg
     "pricing_summary",    # expect: PushedFilters on l_shipdate, partial agg
     "fk_broadcast_join",  # expect: BroadcastHashJoin
@@ -147,6 +148,9 @@ def audit_single_shuffle(plan: str, max_shuffles: int = 1) -> str:
 
 
 SINGLE_SHUFFLE_AUDITS = {
+    # the kNN query side never shuffles: the target index is a Python
+    # broadcast read inside the one mapInArrow
+    "geo_knn": 0,
     "asof_join": 1,
     "grouping_sets": 1,
     "window_functions": 1,

@@ -32,6 +32,18 @@ def test_cell_encode_in_bounds():
     assert np.all((lat >= lat0) & (lat < lat1))
 
 
+@pytest.mark.parametrize("res", [0, 6, 26])
+def test_cell_encode_clips_huge_coordinates_to_their_own_edge(res):
+    """Coordinates past int64 once scaled to grid units (or infinite)
+    land in the edge cell on their own side, like any out-of-range one."""
+    edge = (1 << res) - 1
+    big = np.array([1e20, -1e20, np.inf, -np.inf, 1e300, 181.0])
+    x, _, _ = cell.to_xy(cell.encode(big, np.zeros(6), res))
+    assert list(x) == [edge, 0, edge, 0, edge, edge]
+    _, y, _ = cell.to_xy(cell.encode(np.zeros(6), big, res))
+    assert list(y) == [edge, 0, edge, 0, edge, edge]
+
+
 def test_cell_parent_children():
     c = int(cell.encode(139.7, 35.7, 10)[()])
     p = int(cell.parent(c, 8)[()])

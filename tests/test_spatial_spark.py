@@ -140,6 +140,18 @@ def test_knn_broadcast_matches_oracle(spark, polys, images_pdf, points_sdf):
     pd.testing.assert_frame_equal(got, exp, check_exact=True)
 
 
+def test_knn_broadcast_no_targets_is_a_cross_join(spark, polys, points_sdf):
+    """An empty target table has the oracle's CROSS JOIN semantics: no
+    neighbour rows, or one row of empty lists per query with as_arrays."""
+    empty = fx.facilities(5, polys).iloc[:0]
+    queries = points_sdf.limit(30)
+    assert knn_ops.knn_join_broadcast(queries, empty, 5).count() == 0
+    arrays = knn_ops.knn_join_broadcast(queries, empty, 5, as_arrays=True).toPandas()
+    assert sorted(arrays["query_id"]) == sorted(r.image_id for r in queries.select("image_id").collect())
+    assert all(len(t) == 0 for t in arrays["target_ids"])
+    assert all(len(d) == 0 for d in arrays["dists"])
+
+
 def test_knn_shuffle_matches_oracle(spark, polys, images_pdf, points_sdf):
     fac = fx.facilities(150, polys)
     fac_sdf = spark.createDataFrame(fac[["ogc_fid", "lon", "lat"]])
