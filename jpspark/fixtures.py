@@ -18,8 +18,6 @@ concentrate there (the hot-key skew cell from the north_star).
 
 from __future__ import annotations
 
-import unicodedata
-
 import numpy as np
 import pandas as pd
 
@@ -512,10 +510,6 @@ def knn_oracle(
         for r, t in enumerate(order):
             rows.append((qi, r + 1, int(tids[t]), float(d[t])))
     return pd.DataFrame(rows, columns=["query_idx", "rank", "target_id", "dist"])
-
-
-def nfkc(s: str) -> str:
-    return unicodedata.normalize("NFKC", s)
 
 
 def palette_pattern(i: int, w: int, h: int, n_colors: int = 16) -> np.ndarray:

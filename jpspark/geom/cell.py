@@ -62,13 +62,14 @@ def _grid_xy(lon, lat, res: int):
     n = 1 << res
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
-    # clip before the int cast, so an infinite or huge coordinate lands in
-    # the edge cell on its own side instead of overflowing int64; the clip
-    # after it maps a NaN's undefined cast into the grid
-    x = np.floor(np.clip((lon - LON0) / (LON1 - LON0) * n, 0, n - 1)).astype(np.int64)
-    y = np.floor(np.clip((lat - LAT0) / (LAT1 - LAT0) * n, 0, n - 1)).astype(np.int64)
-    x = np.clip(x, 0, n - 1)
-    y = np.clip(y, 0, n - 1)
+    # NaN goes to column/row 0 explicitly (casting it is undefined), and
+    # the clip comes before the int cast, so an infinite or huge
+    # coordinate lands in the edge cell on its own side instead of
+    # overflowing int64
+    gx = np.nan_to_num((lon - LON0) / (LON1 - LON0) * n, nan=0.0)
+    gy = np.nan_to_num((lat - LAT0) / (LAT1 - LAT0) * n, nan=0.0)
+    x = np.floor(np.clip(gx, 0, n - 1)).astype(np.int64)
+    y = np.floor(np.clip(gy, 0, n - 1)).astype(np.int64)
     return x, y
 
 

@@ -28,14 +28,13 @@ Storage backend: ALL I/O — part files, manifest JSON, listing, deletion —
 goes through the ``Storage`` seam below, whose contract is an OBJECT STORE,
 not a POSIX filesystem: flat ``(root, key)`` namespace, atomic whole-object
 PUT, list-by-prefix, no rename/mkdir/partial-write anywhere in the
-protocol. The default ``LocalStorage`` maps keys onto a filesystem shared
-between driver and executors (true in local mode, NFS, or a FUSE-mounted
-object store); ``ObjectStorage`` emulates an S3-style store (flat keys,
-PUT-is-atomic, no directories) and is the template for a real fsspec/s3
-implementation (the ``fsspec`` package itself is absent from this
-environment, so the non-POSIX contract is proven against the emulation —
-same interface, same test suite, see tests/test_reference_semantics.py).
-Storage objects ship to executors, so they must be picklable.
+protocol. Two backends implement it, one per distinct contract: the
+default ``LocalStorage`` maps keys onto a filesystem shared between
+driver and executors (local mode, NFS, a FUSE-mounted bucket), so Spark
+reads part files by URI; ``storage_http.HttpStorage`` has no filesystem
+address (the S3/GCS shape), so executors fetch part objects by key
+(see ``_read_parts``). Storage objects ship to executors, so they must
+be picklable.
 
 Manifests store part-file KEYS relative to the table root (never absolute
 paths), so a table directory can be renamed/moved — or addressed with a
@@ -79,40 +78,54 @@ MANIFEST_NAME = "_manifest.json"
 MANIFESTS_DIR = "_manifests"
 
 
-class LocalStorage:
-    """Default storage backend: local/shared POSIX filesystem.
+class Storage:
+    """The Storage seam: the object-store contract every part file,
+    manifest commit, resume, vacuum and DML goes through — flat
+    ``(root, key)`` namespace, atomic whole-object PUT, exclusive create,
+    list-by-prefix, no rename/mkdir/partial write.
 
-    Implements the object-store contract (atomic PUT, prefix list) with
-    plain ``os`` calls — keys map to paths under the table root. Requires
-    a filesystem shared between driver and executors. Must be picklable
-    (it ships to executors).
-    """
+    A backend implements only the byte primitives: ``put_bytes``,
+    ``put_text_new`` (exclusive create; False if the key exists),
+    ``get_bytes`` (None if missing), ``exists``, ``size``, ``mtime``,
+    ``list``, ``delete`` and ``uri``. The text and Parquet-table
+    conversions are derived here, once. Backends ship to executors, so
+    they must be picklable."""
+
+    def put_text(self, root: str, key: str, text: str) -> None:
+        self.put_bytes(root, key, text.encode())
+
+    def put_table(self, root: str, key: str, table: "pa.Table") -> None:
+        sink = pa.BufferOutputStream()
+        pq.write_table(table, sink)
+        self.put_bytes(root, key, sink.getvalue())
+
+    def get_text(self, root: str, key: str) -> str | None:
+        data = self.get_bytes(root, key)
+        return None if data is None else data.decode()
+
+    def get_table(self, root: str, key: str) -> "pa.Table":
+        data = self.get_bytes(root, key)
+        if data is None:
+            raise FileNotFoundError(f"{root}: no object {key}")
+        return pq.read_table(pa.BufferReader(data))
+
+
+class LocalStorage(Storage):
+    """Default backend, the filesystem-addressable contract: keys map to
+    paths under the table root on a filesystem shared by driver and
+    executors (local mode, NFS, a FUSE-mounted bucket), and ``uri()``
+    hands Spark's parquet reader that path."""
 
     def _p(self, root: str, key: str) -> str:
         return os.path.join(root, key)
 
-    def put_table(self, root: str, key: str, table: "pa.Table") -> None:
-        path = self._p(root, key)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)  # atomic: data complete before visible
-
-    def put_text(self, root: str, key: str, text: str) -> None:
-        path = self._p(root, key)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(text)
-        os.replace(tmp, path)
-
-    def put_bytes(self, root: str, key: str, data: bytes) -> None:
+    def put_bytes(self, root: str, key: str, data) -> None:
         path = self._p(root, key)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = path + ".tmp"
         with open(tmp, "wb") as f:
             f.write(data)
-        os.replace(tmp, path)
+        os.replace(tmp, path)  # atomic: data complete before visible
 
     def put_text_new(self, root: str, key: str, text: str) -> bool:
         """Exclusive create (the object-store conditional PUT /
@@ -121,25 +134,18 @@ class LocalStorage:
         path = self._p(root, key)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         try:
-            with open(path, "x") as f:
-                f.write(text)
+            with open(path, "xb") as f:
+                f.write(text.encode())
             return True
         except FileExistsError:
             return False
 
     def get_bytes(self, root: str, key: str) -> bytes | None:
-        path = self._p(root, key)
-        if not os.path.exists(path):
+        try:
+            with open(self._p(root, key), "rb") as f:
+                return f.read()
+        except FileNotFoundError:
             return None
-        with open(path, "rb") as f:
-            return f.read()
-
-    def get_text(self, root: str, key: str) -> str | None:
-        path = self._p(root, key)
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return f.read()
 
     def exists(self, root: str, key: str) -> bool:
         return os.path.exists(self._p(root, key))
@@ -172,247 +178,6 @@ class LocalStorage:
     def uri(self, root: str, key: str) -> str:
         """Location Spark's parquet reader resolves for this object."""
         return self._p(root, key)
-
-
-class ObjectStorage:
-    """Emulated object store: flat key→blob namespace rooted at ``base``.
-
-    S3-style semantics the protocol is proven against: no directories
-    (keys are opaque strings; '/' is not special), whole-object atomic
-    PUT, existence/size/list-by-prefix, delete. Blobs are physically
-    single flat files named by the percent-quoted full key, so Spark's
-    parquet reader can open them via ``uri()`` — exactly how a real
-    s3a://-backed store is consumed. A production fsspec/boto3 backend
-    implements this same interface with remote calls.
-    """
-
-    def __init__(self, base: str):
-        self.base = base
-
-    def _k(self, root: str, key: str) -> str:
-        # one flat namespace: the table root is just a key prefix
-        return f"{root}/{key}".replace("//", "/")
-
-    def _blob(self, root: str, key: str) -> str:
-        quoted = self._k(root, key).replace("%", "%25").replace("/", "%2F")
-        return os.path.join(self.base, quoted)
-
-    def put_table(self, root: str, key: str, table: "pa.Table") -> None:
-        os.makedirs(self.base, exist_ok=True)
-        blob = self._blob(root, key)
-        tmp = blob + ".staging"  # internal emulation of PUT atomicity
-        pq.write_table(table, tmp)
-        os.replace(tmp, blob)
-
-    def put_text(self, root: str, key: str, text: str) -> None:
-        os.makedirs(self.base, exist_ok=True)
-        blob = self._blob(root, key)
-        tmp = blob + ".staging"
-        with open(tmp, "w") as f:
-            f.write(text)
-        os.replace(tmp, blob)
-
-    def put_bytes(self, root: str, key: str, data: bytes) -> None:
-        os.makedirs(self.base, exist_ok=True)
-        blob = self._blob(root, key)
-        tmp = blob + ".staging"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, blob)
-
-    def put_text_new(self, root: str, key: str, text: str) -> bool:
-        os.makedirs(self.base, exist_ok=True)
-        try:
-            with open(self._blob(root, key), "x") as f:
-                f.write(text)
-            return True
-        except FileExistsError:
-            return False
-
-    def get_bytes(self, root: str, key: str) -> bytes | None:
-        blob = self._blob(root, key)
-        if not os.path.exists(blob):
-            return None
-        with open(blob, "rb") as f:
-            return f.read()
-
-    def get_text(self, root: str, key: str) -> str | None:
-        blob = self._blob(root, key)
-        if not os.path.exists(blob):
-            return None
-        with open(blob) as f:
-            return f.read()
-
-    def exists(self, root: str, key: str) -> bool:
-        return os.path.exists(self._blob(root, key))
-
-    def size(self, root: str, key: str) -> int:
-        return os.path.getsize(self._blob(root, key))
-
-    def list(self, root: str, prefix: str) -> list[str]:
-        full = self._k(root, prefix)
-        out = []
-        for f in os.listdir(self.base) if os.path.isdir(self.base) else []:
-            if f.endswith(".staging"):
-                continue
-            key = f.replace("%2F", "/").replace("%25", "%")
-            if key.startswith(full):
-                out.append(key[len(self._k(root, "")):])
-        return sorted(out)
-
-    def delete(self, root: str, key: str) -> None:
-        os.remove(self._blob(root, key))
-
-    def mtime(self, root: str, key: str) -> float:
-        """Last-modified time (epoch seconds) — object-store PUT time.
-        vacuum's orphan grace window is measured against this."""
-        return os.path.getmtime(self._blob(root, key))
-
-    def uri(self, root: str, key: str) -> str:
-        return self._blob(root, key)
-
-
-_MEM_SERVER_STORE: dict = {}
-
-
-def _mem_get_dict():
-    """Runs inside the KV server process; returns ITS dict (the single
-    shared namespace every connected client proxies to)."""
-    return _MEM_SERVER_STORE
-
-
-class _KVManager(__import__("multiprocessing.managers", fromlist=["BaseManager"]).BaseManager):
-    pass
-
-
-_KVManager.register(
-    "get_dict",
-    callable=_mem_get_dict,
-    proxytype=__import__("multiprocessing.managers", fromlist=["DictProxy"]).DictProxy,
-)
-
-
-class MemoryStorage:
-    """In-memory object store with NO filesystem at all: blobs live in a
-    dict inside a driver-spawned KV server process (multiprocessing
-    ``BaseManager``); every process — Spark Python workers included —
-    reaches it over a loopback socket with an explicit authkey, so the
-    full distributed write path (mapInPandas sinks) runs against it.
-    This is the non-POSIX existence proof for the commit protocol: the
-    same seam a real fsspec/S3 backend implements, with exclusive create
-    mapping to S3's If-None-Match conditional PUT (what Iceberg's S3
-    commit uses) — here ``DictProxy.setdefault``, atomic because it
-    executes as one operation in the server process.
-
-    Limitations, by design: ``uri()`` raises — Spark's JVM parquet scan
-    needs an addressable filesystem, so read objects back with
-    :meth:`get_table` / ``get_bytes`` + pyarrow. The store dies with the
-    server process (call :meth:`shutdown` when done)."""
-
-    def __init__(self):
-        import os as _os
-
-        self._mgr = _KVManager(address=("127.0.0.1", 0), authkey=_os.urandom(16))
-        self._mgr.start()
-        self._addr = self._mgr.address
-        self._authkey = bytes(self._mgr._authkey)
-        self._d = self._mgr.get_dict()  # key -> (nonce, mtime, bytes)
-
-    # ship only (address, authkey); each process reconnects its own client
-    def __getstate__(self):
-        return {"_addr": self._addr, "_authkey": self._authkey}
-
-    def __setstate__(self, state):
-        self.__dict__.update(state)
-        self._mgr = None
-        self._d = None
-
-    def _dict(self):
-        if self._d is None:
-            client = _KVManager(address=self._addr, authkey=self._authkey)
-            client.connect()
-            self._client = client  # keep the connection alive
-            self._d = client.get_dict()
-        return self._d
-
-    def shutdown(self) -> None:
-        if getattr(self, "_mgr", None) is not None:
-            self._mgr.shutdown()
-            self._mgr = None
-            self._d = None
-
-    def _k(self, root: str, key: str) -> str:
-        return f"{root}/{key}".replace("//", "/")
-
-    def _nonce(self) -> bytes:
-        # os.urandom, not (pid, id(self), counter): after unpickling in a
-        # reused executor process id(self) can be recycled and the counter
-        # restarts, so two handles could emit identical nonces and the
-        # put_text_new winner check would misreport a losing racer as the
-        # commit winner — this token is what the whole OCC protocol
-        # arbitrates on (round-4 ADVICE).
-        return os.urandom(16)
-
-    def _put(self, root: str, key: str, data: bytes) -> None:
-        self._dict()[self._k(root, key)] = (self._nonce(), time.time(), data)
-
-    def put_table(self, root: str, key: str, table: "pa.Table") -> None:
-        import io
-
-        buf = io.BytesIO()
-        pq.write_table(table, buf)
-        self._put(root, key, buf.getvalue())
-
-    def get_table(self, root: str, key: str) -> "pa.Table":
-        import io
-
-        return pq.read_table(io.BytesIO(self.get_bytes(root, key)))
-
-    def put_text(self, root: str, key: str, text: str) -> None:
-        self._put(root, key, text.encode())
-
-    def put_bytes(self, root: str, key: str, data: bytes) -> None:
-        self._put(root, key, bytes(data))
-
-    def put_text_new(self, root: str, key: str, text: str) -> bool:
-        nonce = self._nonce()
-        got = self._dict().setdefault(
-            self._k(root, key), (nonce, time.time(), text.encode())
-        )
-        return got[0] == nonce
-
-    def get_bytes(self, root: str, key: str) -> bytes | None:
-        v = self._dict().get(self._k(root, key))
-        return None if v is None else v[2]
-
-    def get_text(self, root: str, key: str) -> str | None:
-        b = self.get_bytes(root, key)
-        return None if b is None else b.decode()
-
-    def exists(self, root: str, key: str) -> bool:
-        return self._dict().get(self._k(root, key)) is not None
-
-    def size(self, root: str, key: str) -> int:
-        return len(self._dict()[self._k(root, key)][2])
-
-    def mtime(self, root: str, key: str) -> float:
-        return self._dict()[self._k(root, key)][1]
-
-    def list(self, root: str, prefix: str) -> list[str]:
-        full = self._k(root, prefix)
-        base = self._k(root, "")
-        return sorted(
-            k[len(base):] for k in self._dict().keys() if k.startswith(full)
-        )
-
-    def delete(self, root: str, key: str) -> None:
-        del self._dict()[self._k(root, key)]
-
-    def uri(self, root: str, key: str) -> str:
-        raise NotImplementedError(
-            "MemoryStorage has no filesystem address for Spark's parquet "
-            "scan; read objects back via get_table()/get_bytes()"
-        )
 
 
 def _arrow_schema_of(df: "DataFrame") -> "pa.Schema":
@@ -876,7 +641,7 @@ def _read_parts(spark, out_dir: str, keys, store, m: dict, filters=None):
     fast path, with parquet row-group pushdown, vectorized decode, and
     data-locality scheduling all owned by Spark. Object stores with no
     filesystem address (``uri()`` raises NotImplementedError: the HTTP/S3
-    shape, the in-memory KV) read the DATA PLANE through the Storage seam
+    shape) read the DATA PLANE through the Storage seam
     instead: the driver ships only the key list; each executor task
     fetches its part objects with ``get_bytes`` and decodes them
     from the buffer with pyarrow inside ``mapInArrow`` — no local

@@ -68,18 +68,6 @@ def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Composite 0..1 quality score from the features (heuristic weights
-    fixed; deterministic)."""
-    f = quality_features(docs, text_col, id_col)
-    score = (
-        F.least(F.col("n_tokens") / 100.0, F.lit(1.0)) * 0.4
-        + (1.0 - F.least(F.col("punct_ratio") * 5.0, F.lit(1.0))) * 0.3
-        + F.least(F.col("stopword_ratio") * 4.0, F.lit(1.0)) * 0.3
-    )
-    return f.withColumn("quality", F.round(score, 4))
-
-
 def fingerprint(col: Column) -> Column:
     """Normalized-content fingerprint: md5 of lowercased,
     whitespace-collapsed, trimmed text. Stable under formatting noise."""

@@ -4,12 +4,10 @@
 the same wire shape an S3/GCS/fsspec backend has: whole-object GET/PUT/
 DELETE, HEAD for existence/size/mtime, list-by-prefix, and S3's
 ``If-None-Match: *`` conditional PUT as the exclusive-create primitive
-the OCC commit protocol arbitrates on. Unlike ``MemoryStorage`` (a
-multiprocessing dict proxy), every operation here crosses a real socket
-with HTTP framing and status-code error mapping, so the commit protocol
-is exercised against genuine request/response latency and a server that
-enforces atomicity on ITS side (the way S3 does), not via client-side
-data structures.
+the OCC commit protocol arbitrates on. It is the fetch-by-key contract:
+there is no filesystem address, so every operation crosses a real
+socket with HTTP framing and status-code error mapping, and the server
+enforces atomicity on ITS side (the way S3 does), not the client.
 
 ``HttpStoreServer`` is the matching stdlib ``ThreadingHTTPServer``
 fixture (test/CI use): blobs in a lock-guarded dict, conditional PUT
@@ -17,7 +15,7 @@ decided under the lock. The client never imports the server — pointing
 ``HttpStorage`` at any host that honors the five verbs works the same.
 
 Storage objects ship to Spark executors, so the client pickles to just
-``(host, port)`` and opens fresh connections per process.
+``(host, port, timeout)`` and opens fresh connections per process.
 
 Wire protocol (all keys percent-encoded into the path):
   PUT    /o/<key>            store body (201); with ``If-None-Match: *``
@@ -30,7 +28,6 @@ Wire protocol (all keys percent-encoded into the path):
 
 from __future__ import annotations
 
-import io
 import threading
 import time
 import urllib.error
@@ -38,31 +35,22 @@ import urllib.parse
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-import pyarrow as pa
-import pyarrow.parquet as pq
+from .manifest import Storage
 
 
-class HttpStorage:
+class HttpStorage(Storage):
     """Storage-seam client for an HTTP object store (see module doc).
 
-    Like ``MemoryStorage``, ``uri()`` raises: Spark's JVM parquet scan
-    needs an addressable filesystem, so tables read back via
-    :meth:`get_table` / ``get_bytes`` + Arrow. Everything else — the
-    distributed mapInPandas sinks, commit, OCC, vacuum — runs unchanged
-    over the socket.
+    ``uri()`` raises: Spark's JVM parquet scan needs an addressable
+    filesystem, so tables read back via :meth:`get_table` /
+    ``get_bytes`` + Arrow. Everything else — the distributed mapInPandas
+    sinks, commit, OCC, vacuum — runs unchanged over the socket.
     """
 
     def __init__(self, host: str, port: int, timeout: float = 10.0):
         self.host = host
         self.port = port
         self.timeout = timeout
-
-    # ships to executors as just the address
-    def __getstate__(self):
-        return {"host": self.host, "port": self.port, "timeout": self.timeout}
-
-    def __setstate__(self, state):
-        self.__dict__.update(state)
 
     def _k(self, root: str, key: str) -> str:
         return f"{root}/{key}".replace("//", "/")
@@ -78,17 +66,9 @@ class HttpStorage:
         return urllib.request.urlopen(req, timeout=self.timeout)
 
     # ------------------------------------------------------------- puts
-    def put_bytes(self, root: str, key: str, data: bytes) -> None:
+    def put_bytes(self, root: str, key: str, data) -> None:
         with self._req("PUT", self._url(root, key), data=bytes(data)):
             pass
-
-    def put_text(self, root: str, key: str, text: str) -> None:
-        self.put_bytes(root, key, text.encode())
-
-    def put_table(self, root: str, key: str, table: "pa.Table") -> None:
-        buf = io.BytesIO()
-        pq.write_table(table, buf)
-        self.put_bytes(root, key, buf.getvalue())
 
     def put_text_new(self, root: str, key: str, text: str) -> bool:
         """Exclusive create: S3-style ``If-None-Match: *`` conditional
@@ -116,16 +96,6 @@ class HttpStorage:
             if e.code == 404:
                 return None
             raise
-
-    def get_text(self, root: str, key: str) -> str | None:
-        b = self.get_bytes(root, key)
-        return None if b is None else b.decode()
-
-    def get_table(self, root: str, key: str) -> "pa.Table":
-        b = self.get_bytes(root, key)
-        if b is None:  # 404 → the seam's not-found contract, not TypeError
-            raise FileNotFoundError(self._k(root, key))
-        return pq.read_table(io.BytesIO(b))
 
     def _head(self, root: str, key: str):
         try:

@@ -59,9 +59,10 @@ def iceberg_catalog(spark: SparkSession) -> str | None:
 
 class TableIO:
     def __init__(self, spark: SparkSession, root: str, namespace: str = "jpksj", storage=None):
-        """``storage``: a manifest.Storage-shaped backend for the parquet
-        fallback (default LocalStorage; pass manifest.ObjectStorage or an
-        fsspec/s3 implementation for non-POSIX stores)."""
+        """``storage``: a ``manifest.Storage`` backend for the parquet
+        fallback (default LocalStorage; pass ``storage_http.HttpStorage``
+        or another fetch-by-key backend for stores with no filesystem
+        address)."""
         self.spark = spark
         self.root = root
         self.namespace = namespace

@@ -44,6 +44,25 @@ def test_cell_encode_clips_huge_coordinates_to_their_own_edge(res):
     assert list(y) == [edge, 0, edge, 0, edge, edge]
 
 
+@pytest.mark.parametrize("res", [0, 10, 26])
+def test_cell_encode_non_finite_without_cast_warning(res):
+    """NaN lands in column/row 0 by an explicit mapping, not by the
+    platform-dependent int cast of NaN; infinite and huge coordinates go
+    to their own edge. No RuntimeWarning on the way."""
+    import warnings
+
+    edge = (1 << res) - 1
+    nan, inf = float("nan"), float("inf")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        x, y, _ = cell.to_xy(
+            cell.encode([nan, 139.0, inf, -inf, 1e20], [35.0, nan, -inf, inf, 1e20], res)
+        )
+    x0, y0, _ = cell.to_xy(cell.encode([139.0], [35.0], res))
+    assert list(x) == [0, x0[0], edge, 0, edge]
+    assert list(y) == [y0[0], 0, 0, edge, edge]
+
+
 def test_cell_parent_children():
     c = int(cell.encode(139.7, 35.7, 10)[()])
     p = int(cell.parent(c, 8)[()])

@@ -358,17 +358,30 @@ def test_part_sink_entries_pinned(spark, tmp_path):
         assert digest[:16] == stats_digest, step
 
 
-def _storage_for(kind: str, tmp_path):
-    return None if kind == "local" else mf.ObjectStorage(str(tmp_path / "objstore"))
+@pytest.fixture
+def store(request):
+    """The two Storage contracts: ``local`` yields None (the default
+    LocalStorage, exactly as a user passes it: filesystem-addressable,
+    Spark reads URIs); ``http`` yields a client of a loopback HTTP object
+    store (no filesystem address, executors fetch bytes by key)."""
+    if request.param == "local":
+        yield None
+        return
+    from jpspark.storage_http import HttpStoreServer
+
+    server = HttpStoreServer()
+    try:
+        yield server.client()
+    finally:
+        server.shutdown()
 
 
-@pytest.mark.parametrize("kind", ["local", "object"])
-def test_manifest_protocol_on_both_backends(spark, tmp_path, kind):
+@pytest.mark.parametrize("store", ["local", "http"], indirect=True)
+def test_manifest_protocol_on_both_backends(spark, tmp_path, store):
     """The full commit protocol — write, idempotent resume, partition-loss
     recovery, snapshot archive, vacuum — driven purely through the Storage
-    seam, proven on POSIX (LocalStorage) and on the emulated object store
+    seam, proven on POSIX (LocalStorage) and on an HTTP object store
     (flat keys, atomic PUT, no rename/mkdir in the protocol)."""
-    store = _storage_for(kind, tmp_path)
     out_dir = str(tmp_path / "tbl")
     df = spark.range(400).withColumn("v", F.col("id") * 3)
     m1 = mf.write_checkpointed(df, out_dir, num_partitions=4, storage=store)
@@ -489,16 +502,14 @@ def test_spark_type_to_pg_map():
     assert cat.spark_type_to_pg("map<string,int>") == "varchar"  # fallback
 
 
-@pytest.mark.parametrize("kind", ["local", "object"])
-def test_sharded_manifests_full_lifecycle(spark, tmp_path, kind):
+@pytest.mark.parametrize("store", ["local", "http"], indirect=True)
+def test_sharded_manifests_full_lifecycle(spark, tmp_path, store):
     """Manifest-of-manifests (round 3, DESIGN §10 item 1): commits larger
     than shard_size split the partition map across shard files; the root
     stays O(shards). Resume, partition-loss recovery, time travel, and
     vacuum (including shard expiry) must all work identically."""
     import json
-    import os
 
-    store = _storage_for(kind, tmp_path)
     eff = store or mf.LocalStorage()
     out_dir = str(tmp_path / "sharded")
     df = spark.range(600).withColumn("v", F.col("id") * 5)
@@ -698,14 +709,14 @@ def test_write_clustered_scan_bbox(spark, tmp_path):
 from jpspark.testing import StaleReadStorage as _StaleReadStorage
 
 
-@pytest.mark.parametrize("kind", ["local", "object"])
-def test_occ_append_remerges_interleaved_commit(spark, tmp_path, kind):
+@pytest.mark.parametrize("store", ["local", "http"], indirect=True)
+def test_occ_append_remerges_interleaved_commit(spark, tmp_path, store):
     """Round-3 ADVICE (lost update): an appender whose snapshot base was
     read BEFORE a rival's append committed must not drop the rival's
     partitions. The Iceberg commit loop detects the conflict at the
     exclusive root create, reloads the base, re-merges (remapping
     partition ids past the rival's tail), and commits the union."""
-    store = _storage_for(kind, tmp_path) or mf.LocalStorage()
+    store = store or mf.LocalStorage()
     out_dir = str(tmp_path / "occ")
     mf.write_checkpointed(
         spark.range(100).withColumn("v", F.lit(1)), out_dir,
@@ -840,65 +851,53 @@ def test_scan_nan_rows_not_pruned(spark, tmp_path):
     assert report["files_read"] < report["files_total"]  # all-NaN files pruned
 
 
-@pytest.mark.parametrize("backend", ["memory", "http"])
-def test_non_posix_storage_commit_protocol(spark, backend):
+@pytest.mark.parametrize("store", ["http"], indirect=True)
+def test_non_posix_storage_commit_protocol(spark, store):
     """The commit protocol on a store with NO filesystem: distributed
-    mapInPandas sinks write over a loopback server, commit/OCC/resume/
-    vacuum run unchanged, and the data reads back via Arrow. Proven on
-    TWO non-POSIX transports: the multiprocessing KV proxy
-    (MemoryStorage) and a real HTTP object store (HttpStorage — socket
+    mapInPandas sinks write over a loopback HTTP object store (socket
     framing, status-code errors, If-None-Match conditional PUT decided
-    server-side, exactly the S3 commit shape)."""
-    if backend == "memory":
-        server = store = mf.MemoryStorage()
-    else:
-        from jpspark.storage_http import HttpStoreServer
-
-        server = HttpStoreServer()
-        store = server.client()
-    try:
-        out_dir = "mem://tbl"
-        m1 = mf.write_checkpointed(
-            spark.range(100).withColumn("v", F.lit(1)), out_dir,
-            num_partitions=2, storage=store,
-        )
-        assert m1["version"] == 1 and m1["total_rows"] == 100
-        m2 = mf.write_checkpointed(
-            spark.range(100, 130).withColumn("v", F.lit(2)), out_dir,
-            num_partitions=2, storage=store, mode="append",
-        )
-        assert m2["version"] == 2 and m2["total_rows"] == 130
-        # idempotent resume: identical overwrite skips every partition
-        m3 = mf.write_checkpointed(
-            spark.range(100).withColumn("v", F.lit(1)), out_dir,
-            num_partitions=2, storage=store,
-        )
-        assert all(p["skipped_on_last_run"] for p in m3["partitions"].values())
-        # read back through Arrow (no filesystem to hand to Spark)
-        m = mf.load_manifest(out_dir, storage=store)
-        total = sum(
-            store.get_table(out_dir, mf._part_key(p["path"])).num_rows
-            for p in m["partitions"].values()
-        )
-        assert total == m["total_rows"] == 100
-        # OCC on the KV store: stale appender re-merges the rival commit
-        stale = _StaleReadStorage(store, visible_version=2)
-        stale.stale = True
-        m4 = mf.write_checkpointed(
-            spark.range(200, 220).withColumn("v", F.lit(4)), out_dir,
-            num_partitions=1, storage=stale, mode="append",
-        )
-        assert m4["version"] == 4
-        res = mf.vacuum(out_dir, keep_last=1, storage=store, grace_seconds=0)
-        assert res["removed_snapshots"] == 3
-        m = mf.load_manifest(out_dir, storage=store)
-        total = sum(
-            store.get_table(out_dir, mf._part_key(p["path"])).num_rows
-            for p in m["partitions"].values()
-        )
-        assert total == m["total_rows"] == 120
-    finally:
-        server.shutdown()
+    server-side, exactly the S3 commit shape), commit/OCC/resume/vacuum
+    run unchanged, and the data reads back via Arrow."""
+    out_dir = "bucket/tbl"
+    m1 = mf.write_checkpointed(
+        spark.range(100).withColumn("v", F.lit(1)), out_dir,
+        num_partitions=2, storage=store,
+    )
+    assert m1["version"] == 1 and m1["total_rows"] == 100
+    m2 = mf.write_checkpointed(
+        spark.range(100, 130).withColumn("v", F.lit(2)), out_dir,
+        num_partitions=2, storage=store, mode="append",
+    )
+    assert m2["version"] == 2 and m2["total_rows"] == 130
+    # idempotent resume: identical overwrite skips every partition
+    m3 = mf.write_checkpointed(
+        spark.range(100).withColumn("v", F.lit(1)), out_dir,
+        num_partitions=2, storage=store,
+    )
+    assert all(p["skipped_on_last_run"] for p in m3["partitions"].values())
+    # read back through Arrow (no filesystem to hand to Spark)
+    m = mf.load_manifest(out_dir, storage=store)
+    total = sum(
+        store.get_table(out_dir, mf._part_key(p["path"])).num_rows
+        for p in m["partitions"].values()
+    )
+    assert total == m["total_rows"] == 100
+    # OCC on the object store: stale appender re-merges the rival commit
+    stale = _StaleReadStorage(store, visible_version=2)
+    stale.stale = True
+    m4 = mf.write_checkpointed(
+        spark.range(200, 220).withColumn("v", F.lit(4)), out_dir,
+        num_partitions=1, storage=stale, mode="append",
+    )
+    assert m4["version"] == 4
+    res = mf.vacuum(out_dir, keep_last=1, storage=store, grace_seconds=0)
+    assert res["removed_snapshots"] == 3
+    m = mf.load_manifest(out_dir, storage=store)
+    total = sum(
+        store.get_table(out_dir, mf._part_key(p["path"])).num_rows
+        for p in m["partitions"].values()
+    )
+    assert total == m["total_rows"] == 120
 
 
 # ------------------------------------------------- row-level delete (CoW)
@@ -1179,22 +1178,6 @@ def test_dml_preserves_sharded_manifest(spark, tmp_path):
     assert back.filter(F.col("v") == 0).count() == 100
 
 
-def test_memory_storage_nonce_unique_after_unpickle():
-    """Round-4 ADVICE: the OCC winner token must not collide after a
-    storage handle is unpickled in a reused executor process (pid +
-    id(self) + restarting counter could repeat); urandom nonces cannot."""
-    import pickle
-
-    ms = mf.MemoryStorage()
-    try:
-        clones = [pickle.loads(pickle.dumps(ms)) for _ in range(3)]
-        nonces = [h._nonce() for h in [ms, *clones] for _ in range(16)]
-        assert len(set(nonces)) == len(nonces)
-        assert all(isinstance(n, bytes) and len(n) == 16 for n in nonces)
-    finally:
-        ms.shutdown()
-
-
 def test_publish_pointer_contention_writes_final_body():
     """Round-4 ADVICE: under pathological contention (a newer committed
     root appears on every lap) _publish_pointer must still leave the
@@ -1227,56 +1210,56 @@ def test_publish_pointer_contention_writes_final_body():
     assert json.loads(st.pointer)["version"] >= st.v - 1
 
 
-def test_http_storage_seam_primitives():
-    """HttpStorage contract details the protocol test doesn't isolate:
-    status-code mapping (404->None, delete->FileNotFoundError), prefix
-    list, HEAD metadata, and — the OCC-critical one — N threads racing
-    the same If-None-Match conditional PUT must produce exactly ONE
-    winner, decided on the server side."""
+@pytest.mark.parametrize("store", ["local", "http"], indirect=True)
+def test_storage_seam_primitives(tmp_path, store):
+    """Seam contract details the protocol test doesn't isolate, on both
+    backends: not-found mapping (get_* -> None, get_table/delete/size/
+    mtime -> FileNotFoundError), prefix list, size/mtime metadata,
+    overwriting PUT, and — the OCC-critical one — N threads racing the
+    same exclusive create (O_EXCL locally, If-None-Match decided on the
+    server over HTTP) must produce exactly ONE winner."""
     import threading
 
-    from jpspark.storage_http import HttpStoreServer
+    st = store or mf.LocalStorage()
+    root = str(tmp_path / "x")
+    assert st.get_bytes(root, "missing") is None
+    assert st.get_text(root, "missing") is None
+    assert not st.exists(root, "missing")
+    with pytest.raises(FileNotFoundError):  # not TypeError on BytesIO(None)
+        st.get_table(root, "missing.parquet")
+    with pytest.raises(FileNotFoundError):
+        st.delete(root, "missing")
+    with pytest.raises(FileNotFoundError):
+        st.size(root, "missing")
+    with pytest.raises(FileNotFoundError):
+        st.mtime(root, "missing")
+    st.put_text(root, "a/one.json", '{"v":1}')
+    st.put_bytes(root, "a/two.bin", b"\x00\xffdata")
+    st.put_text(root, "b/three.json", "{}")
+    assert st.get_text(root, "a/one.json") == '{"v":1}'
+    assert st.get_bytes(root, "a/two.bin") == b"\x00\xffdata"
+    assert st.size(root, "a/two.bin") == 6
+    assert st.mtime(root, "a/one.json") > 0
+    assert st.list(root, "a/") == ["a/one.json", "a/two.bin"]
+    # unconditional PUT overwrites; conditional PUT refuses
+    st.put_text(root, "a/one.json", '{"v":2}')
+    assert st.get_text(root, "a/one.json") == '{"v":2}'
+    assert st.put_text_new(root, "a/one.json", "nope") is False
+    wins = []
+    barrier = threading.Barrier(8)
 
-    srv = HttpStoreServer()
-    st = srv.client()
-    try:
-        root = "t://x"
-        assert st.get_bytes(root, "missing") is None
-        assert st.get_text(root, "missing") is None
-        assert not st.exists(root, "missing")
-        with pytest.raises(FileNotFoundError):  # not TypeError on BytesIO(None)
-            st.get_table(root, "missing.parquet")
-        with pytest.raises(FileNotFoundError):
-            st.delete(root, "missing")
-        st.put_text(root, "a/one.json", '{"v":1}')
-        st.put_bytes(root, "a/two.bin", b"\x00\xffdata")
-        st.put_text(root, "b/three.json", "{}")
-        assert st.get_text(root, "a/one.json") == '{"v":1}'
-        assert st.get_bytes(root, "a/two.bin") == b"\x00\xffdata"
-        assert st.size(root, "a/two.bin") == 6
-        assert st.mtime(root, "a/one.json") > 0
-        assert st.list(root, "a/") == ["a/one.json", "a/two.bin"]
-        # unconditional PUT overwrites; conditional PUT refuses
-        st.put_text(root, "a/one.json", '{"v":2}')
-        assert st.get_text(root, "a/one.json") == '{"v":2}'
-        assert st.put_text_new(root, "a/one.json", "nope") is False
-        wins = []
-        barrier = threading.Barrier(8)
+    def race(i):
+        barrier.wait()
+        if st.put_text_new(root, "claim.json", f"writer-{i}"):
+            wins.append(i)
 
-        def race(i):
-            barrier.wait()
-            if st.put_text_new(root, "claim.json", f"writer-{i}"):
-                wins.append(i)
-
-        ts = [threading.Thread(target=race, args=(i,)) for i in range(8)]
-        [t.start() for t in ts]
-        [t.join() for t in ts]
-        assert len(wins) == 1
-        assert st.get_text(root, "claim.json") == f"writer-{wins[0]}"
-        st.delete(root, "a/one.json")
-        assert st.get_bytes(root, "a/one.json") is None
-    finally:
-        srv.shutdown()
+    ts = [threading.Thread(target=race, args=(i,)) for i in range(8)]
+    [t.start() for t in ts]
+    [t.join() for t in ts]
+    assert len(wins) == 1
+    assert st.get_text(root, "claim.json") == f"writer-{wins[0]}"
+    st.delete(root, "a/one.json")
+    assert st.get_bytes(root, "a/one.json") is None
 
 
 def test_bloom_filter_file_skipping(spark, tmp_path):
