@@ -4,11 +4,14 @@
 from __future__ import annotations
 
 import io
+import os
 import re
 import zipfile
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -1260,6 +1263,102 @@ def test_storage_seam_primitives(tmp_path, store):
     assert st.get_text(root, "claim.json") == f"writer-{wins[0]}"
     st.delete(root, "a/one.json")
     assert st.get_bytes(root, "a/one.json") is None
+
+
+@pytest.mark.parametrize("store", ["local", "http"], indirect=True)
+def test_storage_derived_conversions_roundtrip(tmp_path, store):
+    """The text and table conversions are written once over the byte
+    primitives: put_table stores exactly the bytes pq.write_table
+    produces (part files stay byte-identical whatever the backend),
+    get_table returns the same schema and values (nulls, non-ASCII
+    strings, int64 extremes, timestamps), and text is UTF-8 both ways."""
+    import datetime as dt
+
+    st = store or mf.LocalStorage()
+    root = str(tmp_path / "conv")
+    table = pa.table({
+        "id": pa.array([-(2**63), 0, 2**63 - 1], pa.int64()),
+        "name": pa.array(["東京", None, "aéb"], pa.string()),
+        "ts": pa.array(
+            [dt.datetime(2020, 1, 1), None, dt.datetime(1969, 12, 31, 23, 59)],
+            pa.timestamp("us"),
+        ),
+    })
+    st.put_table(root, "t/part-0.parquet", table)
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink)
+    assert st.get_bytes(root, "t/part-0.parquet") == sink.getvalue().to_pybytes()
+    back = st.get_table(root, "t/part-0.parquet")
+    assert back.schema == table.schema
+    assert back.equals(table)
+    st.put_text(root, "t/note.json", '{"名": "ü"}')
+    assert st.get_bytes(root, "t/note.json") == '{"名": "ü"}'.encode("utf-8")
+    assert st.get_text(root, "t/note.json") == '{"名": "ü"}'
+    assert st.put_text_new(root, "t/new.json", "ß") is True
+    assert st.get_text(root, "t/new.json") == "ß"
+
+
+@pytest.mark.parametrize("store", ["local", "http"], indirect=True)
+def test_storage_uri_marks_the_contract(tmp_path, store):
+    """``uri()`` is what ``_read_parts`` routes on: the filesystem-
+    addressable backend returns a path any parquet reader opens to the
+    same table get_table returns; the fetch-by-key backend raises
+    NotImplementedError, so executors fetch bytes instead."""
+    st = store or mf.LocalStorage()
+    root = str(tmp_path / "addr")
+    table = pa.table({"k": [1, 2, 3]})
+    st.put_table(root, "p/part-0.parquet", table)
+    if store is None:
+        path = st.uri(root, "p/part-0.parquet")
+        assert os.path.isfile(path)
+        assert pq.read_table(path).equals(st.get_table(root, "p/part-0.parquet"))
+    else:
+        with pytest.raises(NotImplementedError):
+            st.uri(root, "p/part-0.parquet")
+
+
+@pytest.mark.parametrize("store", ["local", "http"], indirect=True)
+def test_storage_unpickled_copy_shares_store(tmp_path, store):
+    """Backends ship to executors by pickle. The unpickled copy must see
+    the same objects as the original, and an exclusive create it races
+    against the original must still have exactly one winner: the store
+    (the filesystem, or the HTTP server) arbitrates, not client state."""
+    import pickle
+
+    st = store or mf.LocalStorage()
+    root = str(tmp_path / "pk")
+    st.put_text(root, "seen.json", "from-driver")
+    copy = pickle.loads(pickle.dumps(st))
+    assert copy.get_text(root, "seen.json") == "from-driver"
+    copy.put_bytes(root, "back.bin", b"from-executor")
+    assert st.get_bytes(root, "back.bin") == b"from-executor"
+    assert st.list(root, "") == copy.list(root, "") == ["back.bin", "seen.json"]
+    assert st.put_text_new(root, "claim.json", "driver") is True
+    assert copy.put_text_new(root, "claim.json", "executor") is False
+    assert copy.get_text(root, "claim.json") == "driver"
+
+
+def test_local_storage_put_leaves_only_the_key(tmp_path):
+    """Every LocalStorage write creates missing parent directories and
+    leaves exactly the written key behind — no temp-file residue for
+    ``list`` (and so vacuum's orphan sweep) to see — whether the PUT is
+    fresh, an overwrite, or a losing exclusive create."""
+    st = mf.LocalStorage()
+    root = str(tmp_path / "lt")
+    st.put_bytes(root, "a/b/c.bin", b"1")
+    st.put_bytes(root, "a/b/c.bin", b"22")
+    st.put_text(root, "a/b/d.json", "{}")
+    st.put_table(root, "a/b/e.parquet", pa.table({"x": [1]}))
+    assert st.put_text_new(root, "a/b/f.json", "first") is True
+    assert st.put_text_new(root, "a/b/f.json", "second") is False
+    assert sorted(os.listdir(os.path.join(root, "a", "b"))) == [
+        "c.bin", "d.json", "e.parquet", "f.json",
+    ]
+    assert st.list(root, "a/b/") == [
+        "a/b/c.bin", "a/b/d.json", "a/b/e.parquet", "a/b/f.json",
+    ]
+    assert st.get_bytes(root, "a/b/c.bin") == b"22"
+    assert st.get_text(root, "a/b/f.json") == "first"
 
 
 def test_bloom_filter_file_skipping(spark, tmp_path):
