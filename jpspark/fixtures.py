@@ -516,9 +516,9 @@ def palette_pattern(i: int, w: int, h: int, n_colors: int = 16) -> np.ndarray:
     """Deterministic palette-limited image (for the GIF fidelity rows):
     ≤ ``n_colors`` distinct colors, indices from modular math, palette
     from the shared integer hash — reconstructible from (i, w, h) alone."""
-    pal_raw = _hash_u64(
-        np.arange(n_colors, dtype=np.uint64) + np.uint64(i) * np.uint64(0x9E3779B97F4A7C15)
-    )
+    # the product is masked in Python ints: NumPy scalar products warn on wrap
+    mixed = np.uint64((int(i) * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF)
+    pal_raw = _hash_u64(np.arange(n_colors, dtype=np.uint64) + mixed)
     pal = np.stack(
         [
             (pal_raw % np.uint64(256)).astype(np.uint8),

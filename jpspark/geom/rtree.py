@@ -90,23 +90,6 @@ class PackedRTree:
             idx = child_idx[hit]
         return self.item_ids[idx]
 
-    def query_points(self, px: np.ndarray, py: np.ndarray) -> list[np.ndarray]:
-        """Per-point candidate ids (bbox containment). Vectorized at the
-        leaf: brute bbox test when the tree is small, tree walk otherwise."""
-        if len(self.item_boxes) <= 256:
-            b = self.item_boxes
-            out = []
-            hit_all = (
-                (px[:, None] >= b[None, :, 0])
-                & (px[:, None] <= b[None, :, 2])
-                & (py[:, None] >= b[None, :, 1])
-                & (py[:, None] <= b[None, :, 3])
-            )
-            for i in range(len(px)):
-                out.append(self.item_ids[hit_all[i]])
-            return out
-        return [self.query(x, y, x, y) for x, y in zip(px, py)]
-
     # ------------------------------------------------------------ serde
 
     def to_bytes(self) -> bytes:

@@ -10,7 +10,8 @@ output first (gdal.rs:144-148 -> mode("overwrite")). Spark-first:
   full GeoParquet metadata embedding can be layered on; the data layout
   is already columnar WKB.
 - GeoJSON: newline-delimited Feature objects (RFC 7946 geometries decoded
-  from WKB in an Arrow-batched kernel), written with the JSON sink.
+  from WKB in an Arrow-batched kernel), one string per row for the text
+  sink (``to_geojson_features(df).write.text(path)``).
 - FlatGeobuf: single-file Hilbert-ordered export (codec/fgb.py, written
   from the public spec). Inherently a BOUNDED sink — one file, one
   writer — so features are gathered to the driver; the distributed
@@ -29,7 +30,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..geom import cell as cell_mod
 from ..geom import wkb
+from ..geom.cell import LAT0, LON0
 
 
 def write_geoparquet(
@@ -96,10 +99,6 @@ def to_geojson_features(df: DataFrame, geom_col: str = "geom") -> DataFrame:
             yield pd.DataFrame({"feature": feats})
 
     return df.mapInPandas(kernel, "feature string")
-
-
-def write_geojson(df: DataFrame, path: str, geom_col: str = "geom") -> None:
-    to_geojson_features(df, geom_col).write.mode("overwrite").text(path)
 
 
 # ----------------------------------------------------------------- FlatGeobuf
@@ -210,6 +209,70 @@ def read_flatgeobuf(path: str) -> dict:
 
 # ------------------------------------------------------ Mapbox Vector Tiles
 
+def _tile_frame(z: int, tx: int, ty: int, pad_px: int = 0, extent: int = 4096):
+    """Tile (z, tx, ty) in degrees: its west edge ``lon0``, its north edge
+    ``lat_top`` (MVT y runs down from there) and its box padded by
+    ``pad_px`` pixels of ``extent`` — the clip box of the polygon and line
+    sinks, as ``(x0, y0, x1, y1)``."""
+    sx, sy = cell_mod.cell_size_deg(z)
+    lon0 = LON0 + tx * sx
+    lat_top = LAT0 + (ty + 1) * sy
+    bx, by = pad_px * sx / extent, pad_px * sy / extent
+    return lon0, lat_top, (lon0 - bx, lat_top - sy - by, lon0 + sx + bx, lat_top + by)
+
+
+def _tile_stream(src: DataFrame, z: int, build, schema: str) -> DataFrame:
+    """The per-tile execution of every MVT sink: ONE hash exchange on
+    (tile_x, tile_y), a sort within each partition on the same key, and
+    a ``mapInPandas`` stream that cuts the sorted Arrow batches where the
+    key changes. A tile whose rows span several batches is concatenated
+    before ``build`` sees it, so kernel memory stays one tile's rows.
+
+    Not a grouped-map pandas UDF: that plan has the same exchange and
+    sort, but moves one tiny Arrow batch per tile across the Python
+    boundary (thousands of tiles x ~1 ms of per-group conversion at
+    z=10); this stream moves full-size batches.
+
+    ``build(pdf, tx, ty)`` returns the tile's result columns after the
+    key as a dict; ``schema`` is the full output schema, key first."""
+    def build_stream(batches):
+        buf: list[pd.DataFrame] = []
+        cur = None
+        rows: list[dict] = []
+
+        def flush():
+            if buf:
+                pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
+                tx, ty = cur
+                rows.append({"tile_z": z, "tile_x": tx, "tile_y": ty, **build(pdf, tx, ty)})
+                buf.clear()
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            txa = pdf["tile_x"].to_numpy()
+            tya = pdf["tile_y"].to_numpy()
+            change = np.flatnonzero((txa[1:] != txa[:-1]) | (tya[1:] != tya[:-1])) + 1
+            for s, e in zip(np.r_[0, change], np.r_[change, len(pdf)]):
+                key = (int(txa[s]), int(tya[s]))
+                if key != cur:
+                    flush()
+                    cur = key
+                buf.append(pdf.iloc[int(s):int(e)])
+            if len(rows) >= 256:
+                yield pd.DataFrame(rows)
+                rows.clear()
+        flush()
+        if rows:
+            yield pd.DataFrame(rows)
+
+    return (
+        src.repartition("tile_x", "tile_y")
+        .sortWithinPartitions("tile_x", "tile_y")
+        .mapInPandas(build_stream, schema=schema)
+    )
+
+
 def mvt_tiles_points(
     df: DataFrame,
     z: int,
@@ -228,21 +291,13 @@ def mvt_tiles_points(
 
     100-TB shape: tile assignment is pure codegen column math, then ONE
     hash exchange on the tile key and every tile serializes independently
-    — no driver gather, no cross-tile state, so the sink parallelizes to
-    however many tiles exist (quadtree keys are uniform; a genuinely hot
-    tile is capped by its own point count, and callers shed it by raising
-    ``z``). Contrast write_flatgeobuf, which is a bounded single-writer
-    export by design.
-
-    Round 7 (guide §4.1): the per-tile ``applyInPandas`` became a
-    ``repartition + sortWithinPartitions + mapInPandas`` stream — the
-    same exchange and the same within-partition sort the grouped form
-    already paid, but the Python boundary now moves full-size Arrow
-    batches instead of one tiny batch per tile (thousands of tiles x
-    ~1 ms of per-group conversion overhead at z=10). Tiles arrive
-    contiguously, so kernel memory stays one tile's rows, exactly like
-    the grouped form. Feature order inside a tile remains
-    shuffle-arrival order (unchanged; consumers aggregate after decode).
+    in the shared tile stream (:func:`_tile_stream`) — no driver gather,
+    no cross-tile state, so the sink parallelizes to however many tiles
+    exist (quadtree keys are uniform; a genuinely hot tile is capped by
+    its own point count, and callers shed it by raising ``z``). Contrast
+    write_flatgeobuf, which is a bounded single-writer export by design.
+    Feature order inside a tile is shuffle-arrival order (consumers
+    aggregate after decode).
 
     Quantization (y DOWN, MVT screen axes): qx = floor((lon-lon0)/sx*extent),
     qy = floor((lat_top-lat)/sy*extent), both clamped to extent-1 — exact
@@ -251,19 +306,15 @@ def mvt_tiles_points(
     Returns (tile_z, tile_x, tile_y, n_features, bytes).
     """
     from ..codec import mvt
-    from ..geom.cell import LAT0, LON0, LAT1, LON1
     from . import tiles as tile_ops
 
-    sx = (LON1 - LON0) / float(1 << z)
-    sy = (LAT1 - LAT0) / float(1 << z)
+    sx, sy = cell_mod.cell_size_deg(z)
     cols = [lon, lat, *([id_col] if id_col else []), *attr_cols]
     tx, ty = tile_ops.tile_xy_cols(lon, lat, z)
     src = df.select(*cols).withColumn("tile_x", tx).withColumn("tile_y", ty)
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        txv, tyv = int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0])
-        lon0 = LON0 + txv * sx
-        lat_top = LAT0 + (tyv + 1) * sy
+    def build(pdf: pd.DataFrame, txv: int, tyv: int) -> dict:
+        lon0, lat_top, _ = _tile_frame(z, txv, tyv)
         qx = np.minimum(
             np.floor((pdf[lon].to_numpy(np.float64) - lon0) / sx * extent),
             extent - 1,
@@ -284,13 +335,7 @@ def mvt_tiles_points(
                 + feats_blob
                 + mvt._vi(5, extent)
             )
-            return pd.DataFrame(
-                {
-                    "tile_z": [z], "tile_x": [txv], "tile_y": [tyv],
-                    "n_features": [len(pdf)],
-                    "bytes": [mvt.encode_tile([layer_body])],
-                }
-            )
+            return {"n_features": len(pdf), "bytes": mvt.encode_tile([layer_body])}
         keys = list(attr_cols)
         values: list = []
         vindex: dict = {}
@@ -316,52 +361,10 @@ def mvt_tiles_points(
         blob = mvt.encode_tile(
             [mvt.encode_layer(layer_name, feats, keys, values, extent=extent)]
         )
-        return pd.DataFrame(
-            {
-                "tile_z": [z], "tile_x": [txv], "tile_y": [tyv],
-                "n_features": [len(feats)], "bytes": [blob],
-            }
-        )
+        return {"n_features": len(feats), "bytes": blob}
 
-    out_schema = "tile_z int, tile_x long, tile_y long, n_features long, bytes binary"
-
-    def build_stream(batches):
-        buf: list[pd.DataFrame] = []
-        cur = None
-        done: list[pd.DataFrame] = []
-
-        def flush():
-            if not buf:
-                return
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            done.append(build(pdf))
-            buf.clear()
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            txa = pdf["tile_x"].to_numpy()
-            tya = pdf["tile_y"].to_numpy()
-            change = np.flatnonzero((txa[1:] != txa[:-1]) | (tya[1:] != tya[:-1])) + 1
-            starts = np.r_[0, change]
-            ends = np.r_[change, len(pdf)]
-            for s, e in zip(starts, ends):
-                key = (txa[s], tya[s])
-                if cur is not None and key != cur:
-                    flush()
-                cur = key
-                buf.append(pdf.iloc[int(s):int(e)])
-            if len(done) >= 256:
-                yield pd.concat(done, ignore_index=True)
-                done = []
-        flush()
-        if done:
-            yield pd.concat(done, ignore_index=True)
-
-    return (
-        src.repartition("tile_x", "tile_y")
-        .sortWithinPartitions("tile_x", "tile_y")
-        .mapInPandas(build_stream, schema=out_schema)
+    return _tile_stream(
+        src, z, build, "tile_z int, tile_x long, tile_y long, n_features long, bytes binary"
     )
 
 
@@ -384,8 +387,9 @@ def mvt_tiles_polygons(
     tile coords (y down), and encodes one MVT blob. Winding is normalized
     by codec/mvt.py (exterior positive screen area per §4.3.3.3).
 
-    Same scale shape as the point sink: one exchange on the tile key,
-    per-tile independent serialization. Holes that survive clipping are
+    Same scale shape as the point sink, through the same tile stream
+    (:func:`_tile_stream`): one exchange on the tile key, per-tile
+    independent serialization. Holes that survive clipping are
     emitted as interior rings; a hole partially cut by the tile edge is
     clipped per-ring (the standard tiling approximation — ``buffer_px``
     pushes the artifact outside the rendered area).
@@ -398,28 +402,20 @@ def mvt_tiles_polygons(
     from ..codec import mvt
     from ..geom import clip as gclip
     from ..geom import simplify as simp
-    from ..geom.cell import LAT0, LON0, LAT1, LON1
     from . import tiles as tile_ops
 
-    sx = (LON1 - LON0) / float(1 << z)
-    sy = (LAT1 - LAT0) / float(1 << z)
-    buf_deg_x = buffer_px * sx / extent
-    buf_deg_y = buffer_px * sy / extent
+    sx, sy = cell_mod.cell_size_deg(z)
     cover = tile_ops.polygon_tiles(polys.select(id_col, geom_col), z, geom_col=geom_col)
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        txv, tyv = int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0])
-        lon0 = LON0 + txv * sx
-        lat_top = LAT0 + (tyv + 1) * sy
-        cx0, cx1 = lon0 - buf_deg_x, lon0 + sx + buf_deg_x
-        cy0, cy1 = lat_top - sy - buf_deg_y, lat_top + buf_deg_y
+    def build(pdf: pd.DataFrame, txv: int, tyv: int) -> dict:
+        lon0, lat_top, box = _tile_frame(z, txv, tyv, buffer_px, extent)
         feats = []
         n_rings = 0
         for fid, g in zip(pdf[id_col].to_numpy(), pdf[geom_col].to_numpy()):
             rings_signed = []
             for rings in wkb.parse_multipolygon(bytes(g)):
                 for ri, ring in enumerate(rings):
-                    c = gclip.clip_ring_bbox(ring, cx0, cy0, cx1, cy1)
+                    c = gclip.clip_ring_bbox(ring, *box)
                     if len(c) < 3:
                         continue
                     if simplify_px > 0:
@@ -449,19 +445,11 @@ def mvt_tiles_polygons(
                     )
                 )
         blob = mvt.encode_tile([mvt.encode_layer(layer_name, feats, extent=extent)])
-        return pd.DataFrame(
-            {
-                "tile_z": [z], "tile_x": [txv], "tile_y": [tyv],
-                "n_features": [len(feats)], "n_rings": [n_rings], "bytes": [blob],
-            }
-        )
+        return {"n_features": len(feats), "n_rings": n_rings, "bytes": blob}
 
-    out = cover.groupBy("tile_x", "tile_y").applyInPandas(
-        build,
-        schema=(
-            "tile_z int, tile_x long, tile_y long, n_features long, "
-            "n_rings long, bytes binary"
-        ),
+    out = _tile_stream(
+        cover, z, build,
+        "tile_z int, tile_x long, tile_y long, n_features long, n_rings long, bytes binary",
     )
     # bbox cover is conservative: a tile can cover a polygon's bbox yet
     # clip to nothing — drop those empties (tippecanoe behavior) unless
@@ -478,6 +466,14 @@ def _multilinestring_parts(buf: bytes) -> list[np.ndarray]:
     raise ValueError(f"expected (multi)linestring, got geometry type {gtype}")
 
 
+def _multilinestring_bbox(buf: bytes) -> tuple[float, float, float, float]:
+    pts = np.vstack(_multilinestring_parts(buf))
+    return (
+        float(pts[:, 0].min()), float(pts[:, 1].min()),
+        float(pts[:, 0].max()), float(pts[:, 1].max()),
+    )
+
+
 def mvt_tiles_lines(
     lines: DataFrame,
     z: int,
@@ -492,69 +488,32 @@ def mvt_tiles_lines(
 ) -> DataFrame:
     """Distributed vector-tile sink, LINESTRING features (roads, routes —
     the reference's N07-style line layers): lines explode onto covering
-    tiles by bbox, each tile clips its lines to the buffered tile bbox
-    (Liang–Barsky with run reassembly, so a line that leaves and
-    re-enters yields multiple paths of ONE MultiLineString feature),
-    quantizes (floor, the point-sink convention) and encodes. Same scale
-    shape as the other sinks: one exchange on the tile key, per-tile
+    tiles by bbox (the polygon sink's cover, tiles.bbox_tiles), each tile
+    clips its lines to the buffered tile bbox (Liang–Barsky with run
+    reassembly, so a line that leaves and re-enters yields multiple paths
+    of ONE MultiLineString feature), quantizes (floor, the point-sink
+    convention) and encodes. Same scale shape as the other sinks, through
+    the same tile stream: one exchange on the tile key, per-tile
     independent serialization, bytes born post-exchange.
 
     Returns (tile_z, tile_x, tile_y, n_features, n_paths, bytes)."""
     from ..codec import mvt
     from ..geom import clip as gclip
     from ..geom import simplify as simp
-    from ..geom.cell import LAT0, LON0, LAT1, LON1
-    from ..geom import cell as cell_mod
+    from . import tiles as tile_ops
 
-    sx = (LON1 - LON0) / float(1 << z)
-    sy = (LAT1 - LAT0) / float(1 << z)
-    buf_x = buffer_px * sx / extent
-    buf_y = buffer_px * sy / extent
-
-    @F.pandas_udf("array<long>")
-    def cover_udf(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            pts = np.vstack(_multilinestring_parts(g))
-            out.append(
-                cell_mod.cover_bbox(
-                    float(pts[:, 0].min()), float(pts[:, 1].min()),
-                    float(pts[:, 0].max()), float(pts[:, 1].max()), z,
-                ).tolist()
-            )
-        return pd.Series(out)
-
-    exploded = lines.select(id_col, geom_col).withColumn(
-        "cell_id", F.explode(cover_udf(F.col(geom_col)))
-    )
-    mask = F.lit((1 << 58) - 1)
-    m = F.col("cell_id").bitwiseAND(mask)
-
-    def unspread(c):
-        v = c
-        v = v.bitwiseAND(F.lit(0x5555555555555555))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 1)).bitwiseAND(F.lit(0x3333333333333333))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 2)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 4)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 8)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 16)).bitwiseAND(F.lit(0x00000000FFFFFFFF))
-        return v
-
-    cover = exploded.withColumn("tile_x", unspread(m)).withColumn(
-        "tile_y", unspread(F.shiftrightunsigned(m, 1))
+    sx, sy = cell_mod.cell_size_deg(z)
+    cover = tile_ops.bbox_tiles(
+        lines.select(id_col, geom_col), z, geom_col, _multilinestring_bbox
     )
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        txv, tyv = int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0])
-        lon0 = LON0 + txv * sx
-        lat_top = LAT0 + (tyv + 1) * sy
-        cx0, cx1 = lon0 - buf_x, lon0 + sx + buf_x
-        cy0, cy1 = lat_top - sy - buf_y, lat_top + buf_y
+    def build(pdf: pd.DataFrame, txv: int, tyv: int) -> dict:
+        lon0, lat_top, box = _tile_frame(z, txv, tyv, buffer_px, extent)
         feats, n_paths = [], 0
         for fid, g in zip(pdf[id_col].to_numpy(), pdf[geom_col].to_numpy()):
             paths = []
             for part in _multilinestring_parts(g):
-                for c in gclip.clip_polyline_bbox(part, cx0, cy0, cx1, cy1):
+                for c in gclip.clip_polyline_bbox(part, *box):
                     if simplify_px > 0:
                         tol = simplify_px * min(sx, sy) / extent
                         c = simp.simplify_polyline(c, tol)
@@ -575,19 +534,11 @@ def mvt_tiles_lines(
                     )
                 )
         blob = mvt.encode_tile([mvt.encode_layer(layer_name, feats, extent=extent)])
-        return pd.DataFrame(
-            {
-                "tile_z": [z], "tile_x": [txv], "tile_y": [tyv],
-                "n_features": [len(feats)], "n_paths": [n_paths], "bytes": [blob],
-            }
-        )
+        return {"n_features": len(feats), "n_paths": n_paths, "bytes": blob}
 
-    out = cover.groupBy("tile_x", "tile_y").applyInPandas(
-        build,
-        schema=(
-            "tile_z int, tile_x long, tile_y long, n_features long, "
-            "n_paths long, bytes binary"
-        ),
+    out = _tile_stream(
+        cover, z, build,
+        "tile_z int, tile_x long, tile_y long, n_features long, n_paths long, bytes binary",
     )
     return out.filter(F.col("n_features") > 0) if drop_empty else out
 
@@ -612,7 +563,6 @@ def write_mvt_directory(
     idiom: a crash leaves tiles without metadata, never metadata naming
     missing tiles. Y is flipped to the XYZ convention (origin top-left)
     so standard viewers address tiles directly."""
-    from ..geom.cell import LAT0, LON0, LAT1, LON1
     from ..manifest import LocalStorage
 
     store = storage or LocalStorage()
@@ -634,8 +584,7 @@ def write_mvt_directory(
                 n += 1
                 total += len(blob)
                 zs.add(z)
-                sx = (LON1 - LON0) / (1 << z)
-                sy = (LAT1 - LAT0) / (1 << z)
+                sx, sy = cell_mod.cell_size_deg(z)
                 xmin = min(xmin, LON0 + x * sx); xmax = max(xmax, LON0 + (x + 1) * sx)
                 ymin = min(ymin, LAT0 + y * sy); ymax = max(ymax, LAT0 + (y + 1) * sy)
         yield pd.DataFrame(
@@ -689,7 +638,6 @@ def read_mvt_directory(spark, path: str) -> DataFrame:
     import re
 
     from ..codec import mvt
-    from ..geom.cell import LAT0, LON0, LAT1, LON1
 
     files = spark.read.format("binaryFile").load(f"{path}/*/*/*.mvt")
     rx = re.compile(r"/(\d+)/(\d+)/(\d+)\.mvt$")
@@ -706,10 +654,8 @@ def read_mvt_directory(spark, path: str) -> DataFrame:
                     raise ValueError(f"not a z/x/y.mvt path: {p}")
                 z, x, y_xyz = int(m.group(1)), int(m.group(2)), int(m.group(3))
                 y = (1 << z) - 1 - y_xyz  # back to northward tile_y
-                sx = (LON1 - LON0) / (1 << z)
-                sy = (LAT1 - LAT0) / (1 << z)
-                lon0 = LON0 + x * sx
-                lat_top = LAT0 + (y + 1) * sy
+                sx, sy = cell_mod.cell_size_deg(z)
+                lon0, lat_top, _ = _tile_frame(z, x, y)
                 for layer in mvt.decode_tile(bytes(blob)):
                     ext = layer["extent"]
 

@@ -39,17 +39,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pyspark.sql.pandas.types import to_arrow_schema
+
 from ..geom import cell, pip, rtree, wkb
-
-try:  # public since Spark 3.x: StructType -> pyarrow schema
-    from pyspark.sql.pandas.types import to_arrow_schema
-except ImportError:  # pragma: no cover - fallback for API moves
-    def to_arrow_schema(schema):
-        import pyarrow as pa
-
-        return pa.Schema.from_pandas(
-            __import__("pandas").DataFrame(columns=[f.name for f in schema.fields])
-        )
+from .tiles import explode_bbox_cover
 
 DEFAULT_RES = 7
 
@@ -76,6 +69,16 @@ def _ring_parity_grid(pys: np.ndarray, pxs: np.ndarray, pre) -> np.ndarray:
     np.add.at(delta, (r_idx, j), 1)
     n_le = np.cumsum(delta[:, :C], axis=1)
     return ((m[:, None] - n_le) & 1).astype(bool)
+
+
+class _FrameMemo:
+    """An index memoized on one DataFrame's ``attrs``; copies of it are None."""
+
+    def __init__(self, index):
+        self.index = index
+
+    def __deepcopy__(self, memo):
+        return None
 
 
 class PolygonIndex:
@@ -224,13 +227,19 @@ class PolygonIndex:
         is memoized on ``pdf.attrs`` keyed by the build parameters — real
         jobs build the index once and run many batches against it, so
         repeated joins against the same table shouldn't pay the
-        (sub-second, but serial) settled-grid construction again."""
+        (sub-second, but serial) settled-grid construction again.
+
+        The memo holds for this frame OBJECT only: pandas deep-copies
+        ``attrs`` into every frame derived from it (selection, filter,
+        ``copy()``), and the holder deep-copies to None, so a derived
+        frame neither inherits the index nor pays to copy it. In-place
+        edits of ``pdf`` after the first build are NOT detected."""
         key = ("_jpspark_polygon_index", id_col, geom_col, res, settled_cells)
         cached = pdf.attrs.get(key)
         if cached is not None:
-            return cached
+            return cached.index
         idx = cls(pdf[id_col].tolist(), pdf[geom_col].tolist(), res, settled_cells=settled_cells)
-        pdf.attrs[key] = idx
+        pdf.attrs[key] = _FrameMemo(idx)
         return idx
 
     def assign(self, px: np.ndarray, py: np.ndarray) -> np.ndarray:
@@ -452,15 +461,7 @@ def pip_count_broadcast(
 def explode_polygons_to_cells(polys: DataFrame, geom_col: str = "geom", res: int = DEFAULT_RES) -> DataFrame:
     """Polygon side of the shuffle strategy: one row per covering cell.
     Cover is bbox-conservative; exact PIP later removes false positives."""
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover_udf(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            x0, y0, x1, y1 = wkb.multipolygon_bbox(bytes(g))
-            out.append(cell.cover_bbox(x0, y0, x1, y1, res).tolist())
-        return pd.Series(out)
-
-    return polys.withColumn("cell_id", F.explode(cover_udf(F.col(geom_col))))
+    return explode_bbox_cover(polys, geom_col, res, wkb.multipolygon_bbox)
 
 
 def attach_cell(points: DataFrame, lon: str = "lon", lat: str = "lat", res: int = DEFAULT_RES) -> DataFrame:

@@ -1,5 +1,5 @@
-"""Text-analysis operators for the documents table: language ID, quality
-scoring, token counting, document fingerprinting.
+"""Text-analysis operators for the documents table: language ID, token
+counting, document fingerprinting.
 
 Everything here is pure Column algebra (JVM-side, codegen'd) so it runs at
 scan speed with predicate pushdown intact — no Python in the hot path.
@@ -44,27 +44,6 @@ def lang_id_heuristic(col: Column) -> Column:
         .when(ascii_ratio(col) < 0.7, F.lit("other"))
         .when(has_en_stop, F.lit("en"))
         .otherwise(F.lit("latin"))
-    )
-
-
-def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-doc quality features: length, token count, mean word length,
-    punctuation ratio, stopword ratio, all-caps ratio."""
-    t = F.col(text_col)
-    n_tok = token_count(t)
-    punct = F.length(F.regexp_replace(t, r"[^!-/:-@\[-`{-~]", ""))
-    stop_pattern = "|".join(STOPWORDS)
-    words_lower = F.split(F.lower(F.trim(t)), r"\s+")
-    n_stop = F.size(F.filter(words_lower, lambda w: w.rlike(f"^({stop_pattern})$")))
-    return docs.select(
-        F.col(id_col),
-        F.length(t).alias("n_chars"),
-        n_tok.alias("n_tokens"),
-        F.round((F.length(F.regexp_replace(t, r"\s+", "")) / F.greatest(n_tok, F.lit(1))), 4).alias(
-            "mean_word_len"
-        ),
-        F.round(punct / F.greatest(F.length(t), F.lit(1)), 4).alias("punct_ratio"),
-        F.round(n_stop / F.greatest(n_tok, F.lit(1)), 4).alias("stopword_ratio"),
     )
 
 

@@ -19,6 +19,9 @@ Operators:
                        coarser zoom (two-phase partial agg)
   tile_render_manifest — per-tile row groups for a renderer: tile id,
                        row count, byte budget (the tiles/sec bench unit)
+  explode_bbox_cover / bbox_tiles / polygon_tiles — the one bbox → cell
+                       (→ tile) cover explode behind the shuffle PIP join
+                       and the polygon and line MVT sinks
 """
 
 from __future__ import annotations
@@ -64,6 +67,23 @@ def cell_id_from_tile(tx_col, ty_col, z: int):
     )
 
 
+def tile_xy_from_cell(cell_col):
+    """Column exprs: tile x/y of a Morton cell id — the SQL translation of
+    geom.cell.to_xy, the inverse of :func:`cell_id_from_tile`."""
+    def unspread(c):
+        v = c
+        v = v.bitwiseAND(F.lit(0x5555555555555555))
+        v = v.bitwiseOR(F.shiftrightunsigned(v, 1)).bitwiseAND(F.lit(0x3333333333333333))
+        v = v.bitwiseOR(F.shiftrightunsigned(v, 2)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
+        v = v.bitwiseOR(F.shiftrightunsigned(v, 4)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
+        v = v.bitwiseOR(F.shiftrightunsigned(v, 8)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
+        v = v.bitwiseOR(F.shiftrightunsigned(v, 16)).bitwiseAND(F.lit(0x00000000FFFFFFFF))
+        return v
+
+    m = cell_col.bitwiseAND(F.lit((1 << _RES_SHIFT) - 1))
+    return unspread(m), unspread(F.shiftrightunsigned(m, 1))
+
+
 def tile_assign(images: DataFrame, z: int, lon: str = "lon", lat: str = "lat") -> DataFrame:
     """Assign each image row to its raster tile and matching vector cell."""
     tx, ty = tile_xy_cols(lon, lat, z)
@@ -89,39 +109,39 @@ def tile_rollup(assigned: DataFrame, parent_z: int, z: int) -> DataFrame:
     )
 
 
+def explode_bbox_cover(df: DataFrame, geom_col: str, res: int, bbox) -> DataFrame:
+    """One row per (row, cell at ``res`` intersecting the row's geometry
+    bbox), in a new ``cell_id`` column. ``bbox(wkb_bytes)`` returns
+    (xmin, ymin, xmax, ymax). Conservative: exact refinement (PIP, tile
+    clipping) removes the cells the geometry only grazes by bbox."""
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def cover_udf(geom: pd.Series) -> pd.Series:
+        return pd.Series(
+            [cell_mod.cover_bbox(*bbox(bytes(g)), res).tolist() for g in geom]
+        )
+
+    return df.withColumn("cell_id", F.explode(cover_udf(F.col(geom_col))))
+
+
+def bbox_tiles(df: DataFrame, z: int, geom_col: str, bbox) -> DataFrame:
+    """:func:`explode_bbox_cover` at zoom ``z`` plus the covering tile's
+    (tile_z, tile_x, tile_y), decoded JVM-side from the cell id."""
+    tx, ty = tile_xy_from_cell(F.col("cell_id"))
+    return (
+        explode_bbox_cover(df, geom_col, z, bbox)
+        .withColumn("tile_z", F.lit(z))
+        .withColumn("tile_x", tx)
+        .withColumn("tile_y", ty)
+    )
+
+
 def polygon_tiles(polys: DataFrame, z: int, geom_col: str = "geom") -> DataFrame:
     """Vector-cell side of raster↔vector assignment: one row per (polygon,
     tile) whose tile square intersects the polygon bbox at zoom z —
     the explode that lets raster tiles equi-join vector layers on
     (tile_z, tile_x, tile_y). Conservative bbox cover (exact refinement
     is the PIP join's job)."""
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover_udf(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            x0, y0, x1, y1 = wkb.multipolygon_bbox(bytes(g))
-            out.append(cell_mod.cover_bbox(x0, y0, x1, y1, z).tolist())
-        return pd.Series(out)
-
-    exploded = polys.withColumn("cell_id", F.explode(cover_udf(F.col(geom_col))))
-    # recover tile x/y from the Morton cell id (JVM-side bit math)
-    def unspread(c):
-        v = c
-        v = v.bitwiseAND(F.lit(0x5555555555555555))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 1)).bitwiseAND(F.lit(0x3333333333333333))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 2)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 4)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 8)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 16)).bitwiseAND(F.lit(0x00000000FFFFFFFF))
-        return v
-
-    mask = F.lit((1 << 58) - 1)
-    m = F.col("cell_id").bitwiseAND(mask)
-    return (
-        exploded.withColumn("tile_z", F.lit(z))
-        .withColumn("tile_x", unspread(m))
-        .withColumn("tile_y", unspread(F.shiftrightunsigned(m, 1)))
-    )
+    return bbox_tiles(polys, z, geom_col, wkb.multipolygon_bbox)
 
 
 def tile_pyramid(

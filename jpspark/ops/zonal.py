@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..codec import image as img
 from ..geom import wkb
-from ..geom.cell import LAT0, LAT1, LON0, LON1
+from ..geom.cell import LAT0, LON0, cell_size_deg
 from ..geom.pip import PreparedPolygon
 
 #: broadcast budget: zones ride to every executor as parsed float64 rings.
@@ -103,8 +103,7 @@ def zonal_stats(
         _collect_zones(zones, zone_id, geom_col, max_zones)
     )
     id_dtype = dict(zip(zones.columns, zones.schema))[zone_id].dataType.simpleString()
-    sx = (LON1 - LON0) / float((1 << z))  # tile width in degrees
-    sy = (LAT1 - LAT0) / float((1 << z))
+    sx, sy = cell_size_deg(z)  # tile width/height in degrees
 
     src = tiles.select(
         F.col("tile_x").cast("long").alias("tile_x"),
@@ -243,8 +242,7 @@ def rasterize(
             )
         )
     bc = tile_grid.sparkSession.sparkContext.broadcast(parsed)
-    sx = (LON1 - LON0) / float(1 << z)
-    sy = (LAT1 - LAT0) / float(1 << z)
+    sx, sy = cell_size_deg(z)
     src = tile_grid.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
@@ -422,8 +420,7 @@ def polygonize(
     """
     from typing import Iterator as _It
 
-    sx = (LON1 - LON0) / float(1 << z)
-    sy = (LAT1 - LAT0) / float(1 << z)
+    sx, sy = cell_size_deg(z)
     src = tiles.select(
         F.col("tile_x").cast("long"), F.col("tile_y").cast("long"), "w", "h", "fmt", "bytes"
     )

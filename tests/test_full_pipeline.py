@@ -63,7 +63,7 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
     src_dir = tmp_path / "zips"
     src_dir.mkdir()
     n_src = 4
-    per_src = np.array_split(polys, n_src)
+    per_src = [polys.iloc[ix] for ix in np.array_split(np.arange(len(polys)), n_src)]
     for i, chunk in enumerate(per_src):
         payload = json.dumps(
             {

@@ -416,3 +416,73 @@ def test_sinks_drop_empty_tiles(spark):
     nk, na = kept.count(), all_t.count()
     assert nk < na  # bbox-covered but untouched tiles existed and were dropped
     assert kept.filter(F.col("n_features") == 0).count() == 0
+
+
+def test_sinks_one_row_per_tile_across_arrow_batches(spark):
+    """Tiles whose rows span many Arrow batches (maxRecordsPerBatch=2):
+    every sink emits each tile key exactly once, and the decoded feature
+    ids per tile equal the driver-side tile assignment."""
+    z = 5
+    sx, sy = (LON1 - LON0) / 32, (LAT1 - LAT0) / 32
+    rng = np.random.default_rng(41)
+    n = 400
+    pts = pd.DataFrame(
+        {"pid": np.arange(n), "lon": rng.uniform(0, 90, n), "lat": rng.uniform(0, 45, n)}
+    )
+    exp_pts: dict = {}
+    for pid, lo, la in zip(pts.pid, pts.lon, pts.lat):
+        key = (int((lo - LON0) // sx), int((la - LAT0) // sy))
+        exp_pts.setdefault(key, set()).add(int(pid))
+    # rectangles and horizontal lines whose corners sit a quarter tile
+    # inside their first and last tiles: every bbox-covered tile holds a
+    # piece at least a quarter tile wide, so no tile clips to empty
+    polys, lines, exp_polys, exp_lines = [], [], {}, {}
+    for i in range(60):
+        tx0, ty0 = int(rng.integers(16, 24)), int(rng.integers(16, 20))
+        w, h = int(rng.integers(0, 3)), int(rng.integers(0, 3))
+        x0, y0 = LON0 + (tx0 + 0.25) * sx, LAT0 + (ty0 + 0.25) * sy
+        x1, y1 = LON0 + (tx0 + w + 0.75) * sx, LAT0 + (ty0 + h + 0.75) * sy
+        ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+        polys.append(wkb.encode_multipolygon([[ring]]))
+        lines.append(wkb.encode_multilinestring([np.array([[x0, y0], [x1, y0]])]))
+        for tx in range(tx0, tx0 + w + 1):
+            exp_lines.setdefault((tx, ty0), set()).add(i)
+            for ty in range(ty0, ty0 + h + 1):
+                exp_polys.setdefault((tx, ty), set()).add(i)
+    geo = pd.DataFrame({"fid": np.arange(60), "poly": polys, "line": lines})
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        outs = {
+            "points": (
+                export.mvt_tiles_points(spark.createDataFrame(pts), z, id_col="pid").collect(),
+                exp_pts,
+            ),
+            "polygons": (
+                export.mvt_tiles_polygons(
+                    spark.createDataFrame(geo[["fid", "poly"]]), z, id_col="fid",
+                    geom_col="poly", buffer_px=0,
+                ).collect(),
+                exp_polys,
+            ),
+            "lines": (
+                export.mvt_tiles_lines(
+                    spark.createDataFrame(geo[["fid", "line"]]), z, id_col="fid",
+                    geom_col="line", buffer_px=0,
+                ).collect(),
+                exp_lines,
+            ),
+        }
+    finally:
+        spark.conf.set(key, old)
+    for name, (rows, expected) in outs.items():
+        keys = [(r.tile_x, r.tile_y) for r in rows]
+        assert len(keys) == len(set(keys)), f"{name}: a tile key repeats"
+        got = {
+            (r.tile_x, r.tile_y): {f["id"] for f in mvt.decode_tile(bytes(r.bytes))[0]["features"]}
+            for r in rows
+        }
+        assert got == expected, name
+        assert all(r.tile_z == z and r.n_features == len(got[(r.tile_x, r.tile_y)]) for r in rows)

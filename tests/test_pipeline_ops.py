@@ -256,6 +256,28 @@ def test_image_validate_all_rows_pass(spark):
     assert (lossless["psnr_db"] == 99.0).all()  # capped inf (GIF lossless too)
 
 
+def test_palette_pattern_pinned_without_overflow_warning():
+    """The palette hash wraps modulo 2^64 without NumPy's scalar-overflow
+    warning, and the palettes stay the ones the image fixtures (and the
+    image_validate rows) were built from."""
+    import hashlib
+    import warnings
+
+    from jpspark import fixtures as fx
+
+    pinned = [
+        "a4807a39b28cd35a", "08560b30e93f3be9", "29e6db8531682783",
+        "931b9032cc6de67d", "b6d229f26f1d8b26", "214e8015a2a818f0",
+    ]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = [
+            hashlib.sha256(fx.palette_pattern(i, 16, 16).tobytes()).hexdigest()[:16]
+            for i in range(6)
+        ]
+    assert got == pinned
+
+
 def test_rolling_hashes_overlap_detection(spark):
     from jpspark.ops.textstats import rolling_hashes
 

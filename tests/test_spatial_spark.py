@@ -229,6 +229,27 @@ def test_settled_grid_matches_exact_path(polys):
     assert np.array_equal(a, b)
 
 
+def test_polygon_index_memo_not_inherited_by_derived_frames():
+    """The index memo on ``attrs`` answers for the frame it was built on
+    only. pandas deep-copies ``attrs`` into selections, filters and
+    copies; such a frame must build its own index, not answer with the
+    parent's polygons."""
+    def square(x0):
+        ring = np.array([[x0, 30], [x0 + 1, 30], [x0 + 1, 31], [x0, 31], [x0, 30]], float)
+        return wkb.encode_multipolygon([[ring]])
+
+    pdf = pd.DataFrame({"id": [1, 2], "geom": [square(130.0), square(132.0)]})
+    px, py = np.array([130.5, 132.5]), np.array([30.5, 30.5])
+    idx = sj.PolygonIndex.from_pandas(pdf, "id")
+    assert sj.PolygonIndex.from_pandas(pdf, "id") is idx  # same frame: memo hit
+    assert list(idx.assign(px, py)) == [1, 2]
+    only2 = pdf[pdf.id == 2]
+    assert list(sj.PolygonIndex.from_pandas(only2, "id").assign(px, py)) == [None, 2]
+    moved = pdf.copy()
+    moved.at[0, "geom"] = square(132.0)
+    assert list(sj.PolygonIndex.from_pandas(moved, "id").assign(px, py)) == [None, 1]
+
+
 def test_knn_shuffle_guard_errors_when_ring_too_small(spark):
     """Deliberately undersized max_ring: the kth neighbor lies outside the
     replicated disk. The guard must fail the job loudly instead of
