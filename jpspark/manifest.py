@@ -1262,10 +1262,9 @@ def write_clustered_by_cell(
     align with spatial predicates."""
     from pyspark.sql import functions as F
 
-    from .ops.tiles import cell_id_from_tile, tile_xy_cols
+    from .ops.tiles import cell_id_col
 
-    tx, ty = tile_xy_cols(lon_col, lat_col, res)
-    with_cell = df.withColumn("cell_id", cell_id_from_tile(tx, ty, res))
+    with_cell = df.withColumn("cell_id", cell_id_col(lon_col, lat_col, res))
     n = num_partitions or with_cell.rdd.getNumPartitions()
     clustered = with_cell.repartitionByRange(n, "cell_id")
     return write_checkpointed(

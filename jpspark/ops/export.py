@@ -405,7 +405,10 @@ def mvt_tiles_polygons(
     from . import tiles as tile_ops
 
     sx, sy = cell_mod.cell_size_deg(z)
-    cover = tile_ops.polygon_tiles(polys.select(id_col, geom_col), z, geom_col=geom_col)
+    # no build reads cell_id or tile_z: keep them off the tile-key exchange
+    cover = tile_ops.polygon_tiles(
+        polys.select(id_col, geom_col), z, geom_col=geom_col
+    ).drop("cell_id", "tile_z")
 
     def build(pdf: pd.DataFrame, txv: int, tyv: int) -> dict:
         lon0, lat_top, box = _tile_frame(z, txv, tyv, buffer_px, extent)
@@ -505,7 +508,7 @@ def mvt_tiles_lines(
     sx, sy = cell_mod.cell_size_deg(z)
     cover = tile_ops.bbox_tiles(
         lines.select(id_col, geom_col), z, geom_col, _multilinestring_bbox
-    )
+    ).drop("cell_id", "tile_z")
 
     def build(pdf: pd.DataFrame, txv: int, tyv: int) -> dict:
         lon0, lat_top, box = _tile_frame(z, txv, tyv, buffer_px, extent)

@@ -40,17 +40,20 @@ lat)) is indexed on the driver and broadcast; queries stream through
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geom import cell
+from .spatial_join import _broadcast_probe
+from .tiles import cell_id_col
 
 DEFAULT_RES = 6
+# rows per kernel call of the broadcast kNN join
+_KNN_CHUNK_ROWS = 1 << 17
 # the targets' occupied extent spans at most this many grid cells per
 # target (with a floor for small target sets): it bounds a far query's walk
 _CELLS_PER_TARGET, _MIN_GRID_CELLS = 4, 1 << 12
@@ -237,45 +240,32 @@ def knn_join_broadcast(
     target density (module docstring). With no targets every query has
     no neighbour: no rows, or empty lists with ``as_arrays``.
     """
-    spark = queries.sparkSession
     tlon = targets_pdf[lon].to_numpy(dtype=np.float64)
     tlat = targets_pdf[lat].to_numpy(dtype=np.float64)
     idx = TargetIndex(targets_pdf[target_id_col].to_numpy(), tlon, tlat, _grid_res(tlon, tlat, res, k))
-    bc = spark.sparkContext.broadcast(idx)
-    if as_arrays:
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[query_id_col].dataType),
-                T.StructField("target_ids", T.ArrayType(T.LongType())),
-                T.StructField("dists", T.ArrayType(T.DoubleType())),
-            ]
-        )
-    else:
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[query_id_col].dataType),
-                T.StructField("rank", T.IntegerType()),
-                T.StructField("target_id", T.LongType()),
-                T.StructField("dist", T.DoubleType()),
-            ]
-        )
+    qid = T.StructField("query_id", queries.schema[query_id_col].dataType)
+    out_schema = T.StructType(
+        [
+            qid,
+            T.StructField("target_ids", T.ArrayType(T.LongType())),
+            T.StructField("dists", T.ArrayType(T.DoubleType())),
+        ]
+        if as_arrays
+        else [
+            qid,
+            T.StructField("rank", T.IntegerType()),
+            T.StructField("target_id", T.LongType()),
+            T.StructField("dist", T.DoubleType()),
+        ]
+    )
 
-    # mapInArrow: results assembled as Arrow arrays straight from NumPy —
-    # list columns via ListArray.from_arrays(offsets, flat values), ids via
-    # take() — zero per-row Python objects in either output mode.
-    import pyarrow as pa
-
-    from .spatial_join import to_arrow_schema
-
-    out_arrow = to_arrow_schema(out_schema)
-    CHUNK_ROWS = 1 << 17
-
-    def kernel(batches):
-        index: TargetIndex = bc.value
+    # results assembled as Arrow arrays straight from NumPy — list columns
+    # via ListArray.from_arrays(offsets, flat values), ids via take() —
+    # zero per-row Python objects in either output mode
+    def make_probe(index: TargetIndex, out_arrow):
         kk = min(k, index.n_total)
 
-        def flush(buf: list) -> "pa.RecordBatch":
-            tbl = pa.Table.from_batches(buf)
+        def probe(tbl: pa.Table) -> list:
             qx = tbl.column(lon).to_numpy(zero_copy_only=False)
             qy = tbl.column(lat).to_numpy(zero_copy_only=False)
             qid_arr = tbl.column(query_id_col).combine_chunks()
@@ -283,32 +273,23 @@ def knn_join_broadcast(
             flat_t, flat_d = t.ravel(), d.ravel()
             if as_arrays:
                 offsets = np.arange(len(order) + 1, dtype=np.int32) * kk
-                cols = [
+                return [
                     qid_arr.take(pa.array(order)),
                     pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat_t)),
                     pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat_d)),
                 ]
-            else:
-                cols = [
-                    qid_arr.take(pa.array(np.repeat(order, kk))),
-                    pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), len(order))),
-                    pa.array(flat_t),
-                    pa.array(flat_d),
-                ]
-            return pa.RecordBatch.from_arrays(cols, schema=out_arrow)
+            return [
+                qid_arr.take(pa.array(np.repeat(order, kk))),
+                pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), len(order))),
+                pa.array(flat_t),
+                pa.array(flat_d),
+            ]
 
-        buf: list = []
-        n = 0
-        for rb in batches:
-            buf.append(rb)
-            n += rb.num_rows
-            if n >= CHUNK_ROWS:
-                yield flush(buf)
-                buf, n = [], 0
-        if buf:
-            yield flush(buf)
+        return probe
 
-    return queries.select(query_id_col, lon, lat).mapInArrow(kernel, out_schema)
+    return _broadcast_probe(
+        queries.select(query_id_col, lon, lat), idx, out_schema, _KNN_CHUNK_ROWS, make_probe
+    )
 
 
 def shuffle_candidate_pairs(
@@ -348,14 +329,9 @@ def shuffle_candidate_pairs(
         return pd.Series([cell.disk(int(c), max_ring).tolist() for c in cells])
 
     tgt = tgt.withColumn("cell_id", F.explode(disk_udf("t_lon", "t_lat")))
-
-    @F.pandas_udf(T.LongType())
-    def cell_udf(lons: pd.Series, lats: pd.Series) -> pd.Series:
-        return pd.Series(cell.encode(lons.to_numpy(), lats.to_numpy(), res))
-
     qry = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(lon).alias("q_lon"), F.col(lat).alias("q_lat")
-    ).withColumn("cell_id", cell_udf("q_lon", "q_lat"))
+    ).withColumn("cell_id", cell_id_col("q_lon", "q_lat", res))
 
     # guarded modes use a LEFT join so queries whose disk holds ZERO
     # candidates still surface (as a null-target row) — an inner join

@@ -15,9 +15,11 @@ Two physical strategies (SURVEY §4):
 * ``pip_join_broadcast`` — the polygon side (admin boundaries: ~1e5 rows,
   ~100 MB WKB nationwide) is packed into a per-cell candidate index + an
   STR R-tree, broadcast to executors, and the join becomes a single
-  ``mapInPandas`` pass over the point table: **zero shuffle of the 10^12-row
+  ``mapInArrow`` pass over the point table: **zero shuffle of the 10^12-row
   image side**. This is the plan you want at 100 TB — the big side streams
-  through map tasks, the small side rides the broadcast.
+  through map tasks, the small side rides the broadcast. The broadcast,
+  the chunking and the ``mapInArrow`` call are :func:`_broadcast_probe`,
+  shared with ``pip_count_broadcast`` and the broadcast kNN join.
 
 * ``pip_join_shuffle`` — both sides distributed: polygons exploded onto
   covering cells, hash-partitioned equi-join on ``cell_id`` (AQE skew-join
@@ -27,7 +29,7 @@ Two physical strategies (SURVEY §4):
 Skew note: the broadcast path has no join skew by construction (no shuffle).
 The shuffle path relies on AQE skew-join plus optional salting of the
 explode (``salt_cells``) so one hot cell's candidate pairs split across
-``n_salt`` reducers.
+``salt_cells`` reducers.
 """
 
 from __future__ import annotations
@@ -35,16 +37,19 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..geom import cell, pip, rtree, wkb
-from .tiles import explode_bbox_cover
+from .tiles import cell_id_col, explode_bbox_cover
 
 DEFAULT_RES = 7
+# rows per kernel call of the broadcast PIP join and count
+_PIP_JOIN_CHUNK_ROWS = 1 << 18
+_PIP_COUNT_CHUNK_ROWS = 1 << 19
 
 
 def _ring_parity_grid(pys: np.ndarray, pxs: np.ndarray, pre) -> np.ndarray:
@@ -307,6 +312,58 @@ class PolygonIndex:
         return out
 
 
+def _broadcast_probe(frame: DataFrame, index, out_schema: T.StructType, chunk_rows: int, make_probe) -> DataFrame:
+    """The broadcast-probe plan of the PIP and kNN kernels: broadcast the
+    driver-built ``index`` and stream ``frame`` through one ``mapInArrow``.
+
+    mapInArrow, not mapInPandas: Arrow batches are sized for fat image
+    rows (``spark.sql.execution.arrow.maxRecordsPerBatch``), and building
+    a pandas DataFrame per batch costs more than the kernel math itself
+    at 10^6+ rows/task.
+    Record batches are packed into chunks of ``chunk_rows`` rows (the
+    last one shorter), amortizing per-cell dispatch.
+
+    ``make_probe(index, out_arrow)`` runs once per task (per-task setup
+    lives there) and returns the probe: a ``pa.Table`` chunk -> the
+    output column arrays, assembled here against ``out_arrow``."""
+    bc = frame.sparkSession.sparkContext.broadcast(index)
+    out_arrow = to_arrow_schema(out_schema)
+
+    def kernel(batches):
+        probe = make_probe(bc.value, out_arrow)
+
+        def flush(buf: list) -> pa.RecordBatch:
+            return pa.RecordBatch.from_arrays(probe(pa.Table.from_batches(buf)), schema=out_arrow)
+
+        buf: list = []
+        n = 0
+        for rb in batches:
+            buf.append(rb)
+            n += rb.num_rows
+            if n >= chunk_rows:
+                yield flush(buf)
+                buf, n = [], 0
+        if buf:
+            yield flush(buf)
+
+    return frame.mapInArrow(kernel, out_schema)
+
+
+def _pip_side(polys_pdf: pd.DataFrame, poly_id_col: str, res: int, settled_cells, out_type):
+    """The broadcast PIP side: the (memoized) polygon index and the output
+    id type, inferred from the polygon id dtype when not given (a string
+    default would mis-type the Arrow id array of an integer-keyed layer)."""
+    index = PolygonIndex.from_pandas(polys_pdf, poly_id_col, res=res, settled_cells=settled_cells)
+    if out_type is None:
+        kind = polys_pdf[poly_id_col].dtype.kind
+        out_type = (
+            T.LongType() if kind in "iu"
+            else T.DoubleType() if kind == "f"
+            else T.StringType()
+        )
+    return index, out_type
+
+
 def pip_join_broadcast(
     points: DataFrame,
     polys_pdf: pd.DataFrame,
@@ -323,61 +380,25 @@ def pip_join_broadcast(
     polygon's id. No shuffle of the point table; narrow plan.
     ``settled_cells``: budget for the interior-cell fast-path grid (see
     PolygonIndex); None disables it (smaller broadcast, slower kernel)."""
-    spark = points.sparkSession
-    index = PolygonIndex.from_pandas(
-        polys_pdf, poly_id_col, res=res, settled_cells=settled_cells
-    )
-    bc = spark.sparkContext.broadcast(index)
-    if out_type is None:
-        # infer from the polygon id dtype (a string default would make the
-        # Arrow id array silently mis-typed for integer-keyed layers)
-        kind = polys_pdf[poly_id_col].dtype.kind
-        out_type = (
-            T.LongType() if kind in "iu"
-            else T.DoubleType() if kind == "f"
-            else T.StringType()
-        )
+    index, out_type = _pip_side(polys_pdf, poly_id_col, res, settled_cells, out_type)
     out_schema = T.StructType(points.schema.fields + [T.StructField(out_col, out_type)])
 
-    # Hot path uses mapInArrow (not mapInPandas): Arrow batches are sized
-    # for fat image rows (maxRecordsPerBatch=2048), and constructing a
-    # pandas DataFrame per batch costs more than the PIP math itself at
-    # 10^6+ rows/task. RecordBatches are coalesced into large chunks
-    # (amortizing per-cell dispatch) and converted column-wise to NumPy
-    # with zero pandas involvement.
-    import pyarrow as pa
-
-    CHUNK_ROWS = 1 << 18
-    out_arrow = to_arrow_schema(out_schema)
-
-    def kernel(batches):
-        idx: PolygonIndex = bc.value
+    def make_probe(idx: PolygonIndex, out_arrow):
         # id lookup as an Arrow array: ordinal -> id via C-speed take()
         # (never materializes per-row Python objects)
         ids_arrow = pa.array(list(idx.ids), type=out_arrow.field(out_col).type)
 
-        def flush(buf: list) -> "pa.RecordBatch":
-            tbl = pa.Table.from_batches(buf)
+        def probe(tbl: pa.Table) -> list:
             px = tbl.column(lon).to_numpy(zero_copy_only=False)
             py = tbl.column(lat).to_numpy(zero_copy_only=False)
             ords = idx.assign_ordinals(px, py)
             take_idx = pa.array(ords, mask=(ords < 0))  # -1 -> null
             cols = [tbl.column(i).combine_chunks() for i in range(tbl.num_columns)]
-            cols.append(ids_arrow.take(take_idx))
-            return pa.RecordBatch.from_arrays(cols, schema=out_arrow)
+            return cols + [ids_arrow.take(take_idx)]
 
-        buf: list = []
-        n = 0
-        for rb in batches:
-            buf.append(rb)
-            n += rb.num_rows
-            if n >= CHUNK_ROWS:
-                yield flush(buf)
-                buf, n = [], 0
-        if buf:
-            yield flush(buf)
+        return probe
 
-    result = points.mapInArrow(kernel, out_schema)
+    result = _broadcast_probe(points, index, out_schema, _PIP_JOIN_CHUNK_ROWS, make_probe)
     if not keep_unmatched:
         result = result.filter(F.col(out_col).isNotNull())
     return result
@@ -406,70 +427,29 @@ def pip_count_broadcast(
     16 B/row; nothing else is even read from the scan). A tiny final
     groupBy sums the partials. This is projection+aggregation pushdown
     through the spatial join, the plan a 10^12-row count wants."""
-    spark = points.sparkSession
-    index = PolygonIndex.from_pandas(
-        polys_pdf, poly_id_col, res=res, settled_cells=settled_cells
-    )
-    bc = spark.sparkContext.broadcast(index)
-    if out_type is None:
-        kind = polys_pdf[poly_id_col].dtype.kind
-        out_type = (
-            T.LongType() if kind in "iu"
-            else T.DoubleType() if kind == "f"
-            else T.StringType()
-        )
+    index, out_type = _pip_side(polys_pdf, poly_id_col, res, settled_cells, out_type)
     out_schema = T.StructType(
         [T.StructField(out_col, out_type), T.StructField("n_points", T.LongType())]
     )
-    import pyarrow as pa
 
-    CHUNK_ROWS = 1 << 19
-    out_arrow = to_arrow_schema(out_schema)
-
-    def kernel(batches):
-        idx: PolygonIndex = bc.value
+    def make_probe(idx: PolygonIndex, out_arrow):
         ids_arrow = pa.array(list(idx.ids), type=out_arrow.field(out_col).type)
         n_ids = len(idx.ids)
 
-        def flush(buf: list) -> "pa.RecordBatch":
-            tbl = pa.Table.from_batches(buf)
+        def probe(tbl: pa.Table) -> list:
             px = tbl.column(lon).to_numpy(zero_copy_only=False)
             py = tbl.column(lat).to_numpy(zero_copy_only=False)
             ords = idx.assign_ordinals(px, py)
             counts = np.bincount(ords + 1, minlength=n_ids + 1)[1:]  # drop -1
             nz = np.flatnonzero(counts)
-            return pa.RecordBatch.from_arrays(
-                [ids_arrow.take(pa.array(nz)), pa.array(counts[nz].astype(np.int64))],
-                schema=out_arrow,
-            )
+            return [ids_arrow.take(pa.array(nz)), pa.array(counts[nz].astype(np.int64))]
 
-        buf: list = []
-        n = 0
-        for rb in batches:
-            buf.append(rb)
-            n += rb.num_rows
-            if n >= CHUNK_ROWS:
-                yield flush(buf)
-                buf, n = [], 0
-        if buf:
-            yield flush(buf)
+        return probe
 
-    partials = points.select(lon, lat).mapInArrow(kernel, out_schema)
+    partials = _broadcast_probe(
+        points.select(lon, lat), index, out_schema, _PIP_COUNT_CHUNK_ROWS, make_probe
+    )
     return partials.groupBy(out_col).agg(F.sum("n_points").alias("n_points"))
-
-
-def explode_polygons_to_cells(polys: DataFrame, geom_col: str = "geom", res: int = DEFAULT_RES) -> DataFrame:
-    """Polygon side of the shuffle strategy: one row per covering cell.
-    Cover is bbox-conservative; exact PIP later removes false positives."""
-    return explode_bbox_cover(polys, geom_col, res, wkb.multipolygon_bbox)
-
-
-def attach_cell(points: DataFrame, lon: str = "lon", lat: str = "lat", res: int = DEFAULT_RES) -> DataFrame:
-    @F.pandas_udf(T.LongType())
-    def cell_udf(lons: pd.Series, lats: pd.Series) -> pd.Series:
-        return pd.Series(cell.encode(lons.to_numpy(), lats.to_numpy(), res))
-
-    return points.withColumn("cell_id", cell_udf(F.col(lon), F.col(lat)))
 
 
 def pip_join_shuffle(
@@ -507,9 +487,11 @@ def pip_join_shuffle(
     the broadcast path proves. Small groups skip the grid build
     (``settled_cells=None`` disables it everywhere).
     """
-    pts = attach_cell(points.select(point_id_col, lon, lat), lon, lat, res)
-    pol_cells = explode_polygons_to_cells(
-        polys.select(poly_id_col, geom_col), geom_col, res
+    # points -> their cell, JVM-side; polygons -> one key row per
+    # bbox-covering cell, conservative (exact PIP removes false positives)
+    pts = points.select(point_id_col, lon, lat).withColumn("cell_id", cell_id_col(lon, lat, res))
+    pol_cells = explode_bbox_cover(
+        polys.select(poly_id_col, geom_col), geom_col, res, wkb.multipolygon_bbox
     ).select(F.col(poly_id_col).alias("__pid"), "cell_id")
     cand = pts.join(pol_cells, "cell_id")
     geo_side = polys.select(F.col(poly_id_col).alias("__pid"), geom_col)

@@ -15,6 +15,8 @@ make equality-of-floor comparisons depend on libm rounding.
 Operators:
   tile_assign        — (image row, zoom) -> (tile_z, tile_x, tile_y, cell_id)
                        pure built-in column math (whole-stage codegen, no UDF)
+  cell_id_col        — lon/lat -> cell id: cell.encode as column math, the
+                       point side of the shuffle PIP and kNN joins
   tile_rollup        — per-tile aggregates with parent-tile rollup to a
                        coarser zoom (two-phase partial agg)
   tile_render_manifest — per-tile row groups for a renderer: tile id,
@@ -67,6 +69,13 @@ def cell_id_from_tile(tx_col, ty_col, z: int):
     )
 
 
+def cell_id_col(lon_col: str, lat_col: str, res: int):
+    """Column expr: the cell id at ``res`` of a lon/lat point, bit-equal to
+    geom.cell.encode, fully JVM-side. A null coordinate lands in grid
+    column/row 0, where encode puts NaN (``greatest`` skips nulls)."""
+    return cell_id_from_tile(*tile_xy_cols(lon_col, lat_col, res), res)
+
+
 def tile_xy_from_cell(cell_col):
     """Column exprs: tile x/y of a Morton cell id — the SQL translation of
     geom.cell.to_xy, the inverse of :func:`cell_id_from_tile`."""
@@ -88,7 +97,7 @@ def tile_assign(images: DataFrame, z: int, lon: str = "lon", lat: str = "lat") -
     """Assign each image row to its raster tile and matching vector cell."""
     tx, ty = tile_xy_cols(lon, lat, z)
     df = images.withColumn("tile_x", tx).withColumn("tile_y", ty).withColumn("tile_z", F.lit(z))
-    return df.withColumn("cell_id", cell_id_from_tile(F.col("tile_x"), F.col("tile_y"), z))
+    return df.withColumn("cell_id", cell_id_col(lon, lat, z))
 
 
 def tile_rollup(assigned: DataFrame, parent_z: int, z: int) -> DataFrame:

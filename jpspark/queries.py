@@ -82,6 +82,26 @@ def _grid_polys_pdf(nx: int = 8, ny: int = 8) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
+def _nation_square_wkb(key: int, holed: bool = False) -> bytes:
+    """Nation ``key``'s 2x2-degree square, five per row from (122, 20) (the
+    geo_dissolve lattice), as multipolygon WKB; ``holed`` cuts a
+    0.5-degree square hole at (x0 + 0.5, y0 + 0.5)."""
+    k = int(key)
+    x0, y0 = 122.0 + (k % 5) * 2.0, 20.0 + (k // 5) * 2.0
+    rings = [np.array([[x0, y0], [x0 + 2, y0], [x0 + 2, y0 + 2], [x0, y0 + 2], [x0, y0]])]
+    if holed:
+        rings.append(
+            np.array(
+                [
+                    [x0 + 0.5, y0 + 0.5], [x0 + 1.0, y0 + 0.5],
+                    [x0 + 1.0, y0 + 1.0], [x0 + 0.5, y0 + 1.0],
+                    [x0 + 0.5, y0 + 0.5],
+                ]
+            )
+        )
+    return wkb.encode_multipolygon([rings])
+
+
 # =========================================================== geo queries
 
 def q_geo_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -217,13 +237,7 @@ def q_geo_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @F.pandas_udf(T.BinaryType())
     def square_udf(keys: pd.Series) -> pd.Series:
-        out = []
-        for k in keys:
-            x0 = 122.0 + (int(k) % 5) * 2.0
-            y0 = 20.0 + (int(k) // 5) * 2.0
-            ring = np.array([[x0, y0], [x0 + 2, y0], [x0 + 2, y0 + 2], [x0, y0 + 2], [x0, y0]])
-            out.append(wkb.encode_multipolygon([[ring]]))
-        return pd.Series(out)
+        return pd.Series([_nation_square_wkb(k) for k in keys])
 
     polys = nat.withColumn("geom", square_udf("n_nationkey"))
     out = dis.dissolve(polys, ["n_regionkey"])
@@ -2628,13 +2642,6 @@ def q_shapefile_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nation = pd.read_parquet(f"{sf_dir.rstrip('/')}/nation.parquet")
 
-    def square(k: int) -> bytes:
-        x0, y0 = 122.0 + (k % 5) * 2.0, 20.0 + (k // 5) * 2.0
-        ring = np.array(
-            [[x0, y0], [x0 + 2, y0], [x0 + 2, y0 + 2], [x0, y0 + 2], [x0, y0]]
-        )
-        return wkb_mod.encode_multipolygon([[ring]])
-
     outer = io.BytesIO()
     with zipfile.ZipFile(outer, "w") as ozf:
         for region, grp in nation.groupby("n_regionkey"):
@@ -2643,7 +2650,7 @@ def q_shapefile_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             with zipfile.ZipFile(inner, "w") as izf:
                 izf.writestr(
                     f"{stem}.shp",
-                    shp_codec.write_shp([square(int(k)) for k in grp["n_nationkey"]]),
+                    shp_codec.write_shp([_nation_square_wkb(k) for k in grp["n_nationkey"]]),
                 )
                 izf.writestr(
                     f"{stem}.dbf",
@@ -4849,26 +4856,7 @@ def q_geo_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @F.pandas_udf(T.BinaryType())
     def poly_udf(keys: pd.Series) -> pd.Series:
-        out = []
-        for k in keys:
-            k = int(k)
-            x0, y0 = 122.0 + (k % 5) * 2.0, 20.0 + (k // 5) * 2.0
-            sq = np.array(
-                [[x0, y0], [x0 + 2, y0], [x0 + 2, y0 + 2], [x0, y0 + 2], [x0, y0]]
-            )
-            rings = [sq]
-            if k % 3 == 0:
-                rings.append(
-                    np.array(
-                        [
-                            [x0 + 0.5, y0 + 0.5], [x0 + 1.0, y0 + 0.5],
-                            [x0 + 1.0, y0 + 1.0], [x0 + 0.5, y0 + 1.0],
-                            [x0 + 0.5, y0 + 0.5],
-                        ]
-                    )
-                )
-            out.append(wkb.encode_multipolygon([rings]))
-        return pd.Series(out)
+        return pd.Series([_nation_square_wkb(k, holed=int(k) % 3 == 0) for k in keys])
 
     polys = nat.withColumn("geom", poly_udf("n_nationkey"))
     return measures.add_geom_measures(polys).select(

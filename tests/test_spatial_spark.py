@@ -9,7 +9,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark.sql import types as T
 
 from jpspark import fixtures as fx
 from jpspark.geom import cell, wkb
@@ -202,6 +204,47 @@ def test_pip_count_pushdown_matches_row_form(spark, polys, points_sdf):
     pd.testing.assert_frame_equal(pushed, via_rows)
 
 
+def test_broadcast_kernels_identical_across_chunk_flushes(spark, monkeypatch, polys, points_sdf):
+    """The broadcast-probe seam packs Arrow batches into chunks of
+    ``chunk_rows`` rows and flushes each into the probe. With tiny chunk
+    constants and tiny Arrow batches every task flushes many chunks, and
+    every kernel must return what one chunk per task returns."""
+    fac = fx.facilities(150, polys)
+    code = "全国地方公共団体コード"
+    runs = {
+        "pip_join": lambda: sj.pip_join_broadcast(points_sdf, polys, code, out_col="muni")
+        .select("image_id", "muni"),
+        "pip_count": lambda: sj.pip_count_broadcast(points_sdf, polys, code, out_col="muni"),
+        "knn_rows": lambda: knn_ops.knn_join_broadcast(points_sdf, fac, 5),
+        "knn_arrays": lambda: knn_ops.knn_join_broadcast(points_sdf, fac, 5, as_arrays=True),
+    }
+
+    def collect(build):
+        rows = [tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in build().collect()]
+        return sorted(rows)
+
+    base = {name: collect(build) for name, build in runs.items()}
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    for mod, const in (
+        (sj, "_PIP_JOIN_CHUNK_ROWS"), (sj, "_PIP_COUNT_CHUNK_ROWS"), (knn_ops, "_KNN_CHUNK_ROWS")
+    ):
+        monkeypatch.setattr(mod, const, 37)
+    try:
+        spark.conf.set(conf, "16")
+        # the seam itself: chunks reach chunk_rows, only a task's last is short
+        sizes = sj._broadcast_probe(
+            points_sdf.select("lon"), None, T.StructType([T.StructField("n", T.LongType())]), 37,
+            lambda _index, _out: lambda tbl: [pa.array([tbl.num_rows], type=pa.int64())],
+        ).collect()
+        assert sum(r.n for r in sizes) == N_IMG
+        assert len(sizes) > N_IMG // 64 and sum(r.n < 37 for r in sizes) <= points_sdf.rdd.getNumPartitions()
+        for name, build in runs.items():
+            assert collect(build) == base[name], name
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_settled_grid_matches_exact_path(polys):
     """The settled-cell fast path must agree with the exact ray-cast path
     everywhere, including points ON polygon boundaries and exactly on
@@ -329,6 +372,75 @@ def test_knn_shuffle_salted_identical(spark, polys, points_sdf):
     base = run(1)
     for s in (2, 8):
         pd.testing.assert_frame_equal(run(s), base, check_exact=True)
+
+
+def test_shuffle_joins_run_one_python_eval(spark, polys, points_sdf):
+    """Points get their cell from JVM-side column math in both shuffle
+    joins: the only ``ArrowEvalPython`` left in the ``pip_join_shuffle``
+    plan is the polygon bbox cover, and in the ``knn_join_shuffle`` plan
+    the target disk explode."""
+    import re
+
+    from jpspark.ops.bucketing import physical_plan
+
+    polys_sdf = spark.createDataFrame(polys[["全国地方公共団体コード", "geom"]])
+    fac_sdf = spark.createDataFrame(fx.facilities(150, polys)[["ogc_fid", "lon", "lat"]])
+    for df, udf in (
+        (sj.pip_join_shuffle(points_sdf, polys_sdf, "全国地方公共団体コード"), "cover_udf"),
+        (knn_ops.knn_join_shuffle(points_sdf, fac_sdf, 3, res=3, guard="flag"), "disk_udf"),
+    ):
+        plan = physical_plan(df)
+        evals = re.findall(r"\(\d+\) ArrowEvalPython\nInput \[\d+\]: .*\nArguments: \[(\w+)\(", plan)
+        assert evals == [udf], plan
+
+
+def test_shuffle_joins_null_coordinate(spark, polys):
+    """A null coordinate matches no polygon and no target: the shuffle PIP
+    join drops the point, as the broadcast join does, and the
+    flag-guarded shuffle kNN surfaces it as an inexact query with no
+    neighbour."""
+    pts = spark.createDataFrame(
+        pd.DataFrame({"image_id": ["in", "null_lon"], "lon": [135.0, None], "lat": [35.0, 35.0]}),
+        "image_id string, lon double, lat double",
+    )
+    code = "全国地方公共団体コード"
+    polys_sdf = spark.createDataFrame(polys[[code, "geom"]])
+    shuffled = {r.image_id for r in sj.pip_join_shuffle(pts, polys_sdf, code).collect()}
+    broadcast = {r.image_id for r in sj.pip_join_broadcast(pts, polys, code).collect()}
+    assert shuffled == broadcast == {"in"}
+    tgt = spark.createDataFrame(
+        pd.DataFrame({"ogc_fid": [1, 2], "lon": [135.01, 135.02], "lat": [35.0, 35.0]})
+    )
+    out = knn_ops.knn_join_shuffle(pts, tgt, k=1, res=7, max_ring=1, guard="flag").toPandas()
+    miss = out[out["query_id"] == "null_lon"]
+    assert len(miss) == 1 and not miss["exact"].iloc[0] and miss["target_id"].isna().all()
+    hit = out[out["query_id"] == "in"]
+    assert len(hit) == 1 and hit["exact"].iloc[0] and hit["target_id"].iloc[0] == 1
+
+
+def test_cell_id_col_matches_encode(spark):
+    """``tiles.cell_id_col`` is ``cell.encode`` in column math, bit for bit,
+    including NaN, infinite and huge coordinates and the grid edges. A
+    null coordinate lands where NaN does (grid column/row 0), as the
+    pandas UDF it replaced did: pandas hands a null in as NaN."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(7)
+    special = [np.nan, np.inf, -np.inf, 1e300, -1e300, -180.0, 180.0, -90.0, 90.0, 0.0]
+    lon = np.r_[rng.uniform(-200, 200, 500), special, rng.choice(special, 10)]
+    lat = np.r_[rng.uniform(-100, 100, 500), rng.choice(special, 10), special]
+    # built from tuples, not pandas: Arrow conversion would turn NaN into null
+    rows = [(float(x), float(y)) for x, y in zip(lon, lat)] + [(None, 35.0), (135.0, None)]
+    df = spark.createDataFrame(rows, "lon double, lat double")
+    n_nan = int((np.isnan(lon) | np.isnan(lat)).sum())
+    assert df.filter(F.isnan("lon") | F.isnan("lat")).count() == n_nan > 0
+    exp_lon = np.r_[lon, np.nan, 135.0]
+    exp_lat = np.r_[lat, 35.0, np.nan]
+    for res in (0, 5, 7, 18, 26):
+        got = df.select(tile_ops.cell_id_col("lon", "lat", res).alias("c")).collect()
+        np.testing.assert_array_equal(
+            np.array([r.c for r in got], dtype=np.int64), cell.encode(exp_lon, exp_lat, res)
+        )
 
 
 def test_tile_assign_matches_floor_oracle(spark, images_pdf, points_sdf):
