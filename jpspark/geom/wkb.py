@@ -359,6 +359,9 @@ def assert_no_overlap(bufs: list[bytes]) -> None:
             for r in p[:1]
         ]
     )
+    edges = [_edges(p[0]) for p in parts]
+    # per exterior edge: its bbox (xmin, ymin, xmax, ymax)
+    edge_boxes = [np.hstack([np.minimum(s, e), np.maximum(s, e)]) for s, e in edges]
     for i in range(len(parts)):
         for j in range(i + 1, len(parts)):
             x0 = max(boxes[i, 0], boxes[j, 0])
@@ -367,9 +370,14 @@ def assert_no_overlap(bufs: list[bytes]) -> None:
             y1 = min(boxes[i, 3], boxes[j, 3])
             if x1 <= x0 or y1 <= y0:  # zero-area bbox overlap: touch at most
                 continue
-            sa, ea = _edges(parts[i][0])
-            sb, eb = _edges(parts[j][0])
-            if _proper_crossing(sa, ea, sb, eb):
+            (sa, ea), (sb, eb) = edges[i], edges[j]
+            # a proper crossing point lies in both parts' bboxes, so both
+            # of its edges meet the closed overlap window: test only those
+            ka, kb = (
+                (bb[:, 0] <= x1) & (bb[:, 2] >= x0) & (bb[:, 1] <= y1) & (bb[:, 3] >= y0)
+                for bb in (edge_boxes[i], edge_boxes[j])
+            )
+            if _proper_crossing(sa[ka], ea[ka], sb[kb], eb[kb]):
                 raise ValueError(
                     f"dissolve overlap: parts {i} and {j} have properly "
                     "crossing boundaries (positive-area intersection)"

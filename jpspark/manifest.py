@@ -1262,9 +1262,9 @@ def write_clustered_by_cell(
     align with spatial predicates."""
     from pyspark.sql import functions as F
 
-    from .ops.tiles import cell_id_col
+    from .ops.tiles import with_cell_id
 
-    with_cell = df.withColumn("cell_id", cell_id_col(lon_col, lat_col, res))
+    with_cell = with_cell_id(df, lon_col, lat_col, res)
     n = num_partitions or with_cell.rdd.getNumPartitions()
     clustered = with_cell.repartitionByRange(n, "cell_id")
     return write_checkpointed(

@@ -49,7 +49,7 @@ from pyspark.sql import types as T
 
 from ..geom import cell
 from .spatial_join import _broadcast_probe
-from .tiles import cell_id_col
+from .tiles import with_cell_id
 
 DEFAULT_RES = 6
 # rows per kernel call of the broadcast kNN join
@@ -329,9 +329,12 @@ def shuffle_candidate_pairs(
         return pd.Series([cell.disk(int(c), max_ring).tolist() for c in cells])
 
     tgt = tgt.withColumn("cell_id", F.explode(disk_udf("t_lon", "t_lat")))
-    qry = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(lon).alias("q_lon"), F.col(lat).alias("q_lat")
-    ).withColumn("cell_id", cell_id_col("q_lon", "q_lat", res))
+    qry = with_cell_id(
+        queries.select(
+            F.col(query_id_col).alias("query_id"), F.col(lon).alias("q_lon"), F.col(lat).alias("q_lat")
+        ),
+        "q_lon", "q_lat", res,
+    )
 
     # guarded modes use a LEFT join so queries whose disk holds ZERO
     # candidates still surface (as a null-target row) — an inner join

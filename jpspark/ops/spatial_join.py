@@ -44,36 +44,14 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..geom import cell, pip, rtree, wkb
-from .tiles import cell_id_col, explode_bbox_cover
+from .tiles import explode_bbox_cover, with_cell_id
 
 DEFAULT_RES = 7
 # rows per kernel call of the broadcast PIP join and count
 _PIP_JOIN_CHUNK_ROWS = 1 << 18
 _PIP_COUNT_CHUNK_ROWS = 1 << 19
-
-
-def _ring_parity_grid(pys: np.ndarray, pxs: np.ndarray, pre) -> np.ndarray:
-    """Crossing parity of every (row, col) grid center against one prepared
-    ring — the EXACT kernel math (pip._ring_pre): same straddle test, same
-    ``x1 + (py - y1) * slope`` intersection, same strict ``px < xint``
-    count (a center is inside iff the number of crossings with xint > px
-    is odd). Fully vectorized: crossings are sparse (row, xint) pairs;
-    per row, count-of-crossings <= px accumulates via flip positions +
-    cumsum, so cost is O(rings' straddle matrix + crossings + R*C)."""
-    x1, y1, y2, slope = pre
-    pys_c = pys[:, None]
-    straddle = (y1 > pys_c) != (y2 > pys_c)
-    xint = x1 + (pys_c - y1) * slope
-    r_idx, e_idx = np.nonzero(straddle)
-    m = straddle.sum(axis=1)  # crossings per row
-    C = len(pxs)
-    delta = np.zeros((len(pys), C + 1), dtype=np.int32)
-    # first column whose center x >= crossing x: from there on the crossing
-    # stops counting as "greater than px"
-    j = np.searchsorted(pxs, xint[r_idx, e_idx], side="left")
-    np.add.at(delta, (r_idx, j), 1)
-    n_le = np.cumsum(delta[:, :C], axis=1)
-    return ((m[:, None] - n_le) & 1).astype(bool)
+# (point, part) candidate pairs per block of the exact path
+_EXACT_PAIR_BLOCK = 1 << 18
 
 
 class _FrameMemo:
@@ -89,8 +67,11 @@ class _FrameMemo:
 class PolygonIndex:
     """Driver-built, broadcastable index over a polygon table.
 
-    cell_id -> np.ndarray of polygon ordinals; ordinal -> (id, parsed rings,
-    bbox). Plus a packed R-tree over polygon bboxes for ad-hoc bbox queries.
+    Indexed by PART: part -> owning polygon ordinal, exterior bbox and the
+    cells at ``res`` that bbox covers (the exact path's candidate filter);
+    ordinal -> id. One :class:`pip.PreparedPolygon` holds every part's
+    edge tables and slab index. Plus a packed R-tree over part bboxes for
+    ad-hoc bbox queries.
 
     ``settled_cells``: optional fine-grid fast path (the classic
     interior-cell optimization of hierarchical spatial joins). A dense
@@ -100,11 +81,11 @@ class PolygonIndex:
     cell center (a boundary would have to cross the cell to change the
     answer) — so assignment is one dense-array gather. Only points in
     boundary-crossed cells run the ray-cast. Settled cells are classified
-    by a per-part scanline that reuses the EXACT kernel crossing formula
-    (same straddle test, same ``x1 + (py - y1) * slope`` expression, same
+    by a scanline that reuses the EXACT kernel crossing formula (same
+    straddle test, same ``x1 + (py - y1) * slope`` expression, same
     strict comparison), so the fast path is bit-identical to the exact
-    path by construction. Grid memory: ``settled_cells`` x ~5 bytes in
-    the broadcast (default 4M cells ≈ 17 MB).
+    path by construction. Grid memory: ``settled_cells`` x 2 bytes in
+    the broadcast (4 from 32k polygons up; default 4M cells ≈ 8 MB).
     """
 
     def __init__(
@@ -119,10 +100,9 @@ class PolygonIndex:
         # index at PART granularity: a multi-part municipality's islands are
         # separate index entries, so a scattered multipolygon never drags
         # the whole map's points into one candidate test (its whole-geometry
-        # bbox would). part -> owning polygon ordinal.
-        self.part_owner: list[int] = []
-        self.parts: list[pip.PreparedPolygon] = []
-        part_rings: list[list[np.ndarray]] = []
+        # bbox would).
+        owner: list[int] = []
+        parts: list[list[np.ndarray]] = []
         boxes = []
         for ordinal, g in enumerate(geoms):
             for rings in wkb.parse_multipolygon(g):
@@ -130,26 +110,22 @@ class PolygonIndex:
                 boxes.append(
                     (ext[:, 0].min(), ext[:, 1].min(), ext[:, 0].max(), ext[:, 1].max())
                 )
-                self.parts.append(pip.PreparedPolygon([rings]))
-                self.part_owner.append(ordinal)
-                part_rings.append(rings)
+                parts.append(rings)
+                owner.append(ordinal)
+        self.part_owner = np.asarray(owner, dtype=np.int64)
+        # one edge table and slab index over every part, in part order
+        self.prepared = pip.PreparedPolygon(parts)
         boxes = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)
         self.boxes = boxes
         self.tree = rtree.PackedRTree(boxes, np.arange(len(boxes), dtype=np.int64))
-        self.cell_map: dict[int, np.ndarray] = {}
-        self.part_cells: list[np.ndarray] = []
-        tmp: dict[int, list[int]] = {}
-        for pi, (x0, y0, x1, y1) in enumerate(boxes):
-            cover = cell.cover_bbox(x0, y0, x1, y1, res)
-            self.part_cells.append(cover)
-            for c in cover:
-                tmp.setdefault(int(c), []).append(pi)
-        self.cell_map = {k: np.asarray(v, dtype=np.int64) for k, v in tmp.items()}
+        covers = [cell.cover_bbox(x0, y0, x1, y1, res) for x0, y0, x1, y1 in boxes]
+        self.cover_cell = np.concatenate(covers) if covers else np.zeros(0, dtype=np.int64)
+        self.cover_part = np.repeat(np.arange(len(covers)), [len(c) for c in covers])
         self.settled_res: int | None = None
         self.settled_grid: np.ndarray | None = None
         self._win = (0, 0)  # (gx0, gy0) of the local window at settled_res
-        if settled_cells and len(self.parts):
-            self._build_settled(part_rings, settled_cells)
+        if settled_cells and len(parts):
+            self._build_settled(settled_cells)
 
     def _pick_settled_res(self, budget: int) -> int | None:
         """Finest resolution whose layer-bbox window fits the cell budget."""
@@ -166,7 +142,7 @@ class PolygonIndex:
             best = fres
         return best
 
-    def _build_settled(self, part_rings: list[list[np.ndarray]], budget: int) -> None:
+    def _build_settled(self, budget: int) -> None:
         """Classify every fine cell in the layer-bbox window: ordinal >= 0
         (whole cell inside that polygon), -1 (whole cell outside all), -2
         (a polygon edge touches the cell: exact ray-cast required).
@@ -174,10 +150,19 @@ class PolygonIndex:
         Edge marking uses inclusive edge bboxes, so any cell whose points
         could disagree with its center is conservatively -2; half-open
         cell borders mean a boundary lying exactly on a border only
-        affects the cell that owns it. Classification is a per-part
-        scanline over the part's settled rows using the kernel's own
-        precomputed (x1, y1, y2, slope) edge tables — bit-identical
-        crossing parity, first-wins part order, O(edges + cells)."""
+        affects the cell that owns it. The bboxes of every ring's edges
+        are painted at once through a 2-D difference array.
+
+        Classification runs over each part's bbox block of rows and
+        columns with the kernel's own (x1, y1, y2, slope) edge tables:
+        every edge is expanded into the block rows whose centers it
+        straddles (``min y <= row y < max y``), its crossing
+        ``x1 + (py - y1) * slope`` is the kernel's expression, and a
+        center counts it iff ``px < xint`` (the first such column comes
+        from ``searchsorted``). One difference array of parity toggles
+        over all rings' blocks, cumulated, gives every ring's parity
+        rows; a part is ``exterior & ~holes``, first wins by part order.
+        Bit-identical to the exact path by construction."""
         fres = self._pick_settled_res(budget)
         if fres is None:
             return
@@ -185,40 +170,76 @@ class PolygonIndex:
         wx0, wy0 = (int(v) for v in cell._grid_xy(self.boxes[:, 0].min(), self.boxes[:, 1].min(), fres))
         wx1, wy1 = (int(v) for v in cell._grid_xy(self.boxes[:, 2].max(), self.boxes[:, 3].max(), fres))
         W, H = wx1 - wx0 + 1, wy1 - wy0 + 1
-        unsettled = np.zeros((H, W), dtype=bool)
-        for rings in part_rings:
-            for ring in rings:
-                xs, ys = ring[:, 0], ring[:, 1]
-                gx0, gy0 = cell._grid_xy(np.minimum(xs[:-1], xs[1:]), np.minimum(ys[:-1], ys[1:]), fres)
-                gx1, gy1 = cell._grid_xy(np.maximum(xs[:-1], xs[1:]), np.maximum(ys[:-1], ys[1:]), fres)
-                gx0 -= wx0
-                gx1 -= wx0
-                gy0 -= wy0
-                gy1 -= wy0
-                single = (gx0 == gx1) & (gy0 == gy1)
-                unsettled[gy0[single], gx0[single]] = True
-                for a, b, c_, d in zip(gx0[~single], gx1[~single], gy0[~single], gy1[~single]):
-                    unsettled[c_ : d + 1, a : b + 1] = True
-        owner = np.full((H, W), -1, dtype=np.int32)
-        owner[unsettled] = -2
-        # per-part scanline over its bbox rows, first-wins by part order
+
+        # every ring's edges: edge -> ring -> part
+        prep = self.prepared
+        x1, y1, y2, slope, x2 = prep.x1, prep.y1, prep.y2, prep.slope, prep.x2()
+        n_rings = np.diff(prep.part_off)
+        ring_part = np.repeat(np.arange(len(n_rings)), n_rings)
+        edge_ring = np.repeat(np.arange(len(ring_part)), np.diff(prep.ring_off))
+        edge_part = ring_part[edge_ring]
+
+        # unsettled: union of the inclusive edge bboxes, clipped to the window
+        E = len(x1)
+        gx, gy = cell._grid_xy(
+            np.concatenate([np.minimum(x1, x2), np.maximum(x1, x2)]),
+            np.concatenate([np.minimum(y1, y2), np.maximum(y1, y2)]),
+            fres,
+        )
+        gx0, gx1 = np.maximum(gx[:E] - wx0, 0), np.minimum(gx[E:] - wx0, W - 1)
+        gy0, gy1 = np.maximum(gy[:E] - wy0, 0), np.minimum(gy[E:] - wy0, H - 1)
+        k = (gx0 <= gx1) & (gy0 <= gy1)
+        gx0, gx1, gy0, gy1 = gx0[k], gx1[k] + 1, gy0[k], gy1[k] + 1
+        paint = np.zeros((H + 1, W + 1), dtype=np.int32)
+        flat = paint.reshape(-1)
+        np.add.at(flat, np.concatenate([gy0 * (W + 1) + gx0, gy1 * (W + 1) + gx1]), np.int32(1))
+        np.add.at(flat, np.concatenate([gy0 * (W + 1) + gx1, gy1 * (W + 1) + gx0]), np.int32(-1))
+        np.cumsum(paint, axis=0, out=paint)
+        np.cumsum(paint, axis=1, out=paint)
+        # int16 holds every ordinal of a layer under 32k polygons
+        dtype = np.int16 if len(self.ids) < np.iinfo(np.int16).max else np.int32
+        owner = np.full((H, W), -1, dtype=dtype)
+        owner[paint[:H, :W] > 0] = -2
+        del paint
+
+        # each part's block: rows r0..r1, columns c0..c1 of the window
+        px0, py0 = cell._grid_xy(self.boxes[:, 0], self.boxes[:, 1], fres)
+        px1, py1 = cell._grid_xy(self.boxes[:, 2], self.boxes[:, 3], fres)
+        r0, r1 = py0 - wy0, py1 - wy0 + 1
+        c0, bw = px0 - wx0, px1 - px0 + 1
+        # every ring's parity rows, (block width + 1) slots each
+        ring_size = ((r1 - r0) * (bw + 1))[ring_part]
+        ring_base = np.cumsum(ring_size) - ring_size
+
         col_x = cell.LON0 + (np.arange(wx0, wx1 + 1) + 0.5) * (360.0 / n)
         row_y = cell.LAT0 + (np.arange(wy0, wy1 + 1) + 0.5) * (180.0 / n)
-        for pi, (x0, y0, x1, y1) in enumerate(self.boxes):
-            pgx0, pgy0 = (int(v) for v in cell._grid_xy(x0, y0, fres))
-            pgx1, pgy1 = (int(v) for v in cell._grid_xy(x1, y1, fres))
-            r0, r1 = pgy0 - wy0, pgy1 - wy0
-            c0, c1 = pgx0 - wx0, pgx1 - wx0
-            rings_pre = self.parts[pi].rings[0]  # one part per PreparedPolygon
-            pys = row_y[r0 : r1 + 1]
-            pxs = col_x[c0 : c1 + 1]  # ascending
-            inside = _ring_parity_grid(pys, pxs, rings_pre[0])
-            for hole in rings_pre[1:]:
-                if inside.any():
-                    inside &= ~_ring_parity_grid(pys, pxs, hole)
-            block = owner[r0 : r1 + 1, c0 : c1 + 1]
-            take = inside & (block == -1)  # first-wins; -2 (unsettled) excluded
-            block[take] = self.part_owner[pi]
+        er0, er1 = r0[edge_part], r1[edge_part]
+        lo = np.clip(np.searchsorted(row_y, np.minimum(y1, y2), side="left"), er0, er1)
+        hi = np.clip(np.searchsorted(row_y, np.maximum(y1, y2), side="left"), er0, er1)
+        cnt = hi - lo
+        e = np.repeat(np.arange(E), cnt)
+        row = pip.ranges(lo, cnt)
+        xint = x1[e] + (row_y[row] - y1[e]) * slope[e]
+        p = edge_part[e]
+        # centers strictly left of xint count the crossing; NaN never does
+        j = np.clip(np.searchsorted(col_x, xint, side="left") - c0[p], 0, bw[p])
+        j[np.isnan(xint)] = 0
+        row_start = ring_base[edge_ring[e]] + (row - r0[p]) * (bw[p] + 1)
+        toggles = np.zeros(int(ring_size.sum()), dtype=np.uint8)
+        np.add.at(toggles, np.concatenate([row_start, row_start + j]), np.uint8(1))
+        parity = (np.cumsum(toggles, dtype=np.uint8) & 1).view(bool)
+
+        for pi in range(len(n_rings)):
+            h, w = int(r1[pi] - r0[pi]), int(bw[pi])
+            blocks = [
+                parity[s : s + h * (w + 1)].reshape(h, w + 1)[:, :w]
+                for s in ring_base[prep.part_off[pi] : prep.part_off[pi + 1]]
+            ]
+            inside = blocks[0].copy()
+            for hole in blocks[1:]:
+                inside &= ~hole
+            block = owner[r0[pi] : r1[pi], c0[pi] : c0[pi] + w]
+            block[inside & (block == -1)] = self.part_owner[pi]  # first wins
         self.settled_res = fres
         self.settled_grid = owner
         self._win = (wx0, wy0)
@@ -231,8 +252,9 @@ class PolygonIndex:
         """Build (or reuse) the index for a polygon table. The built index
         is memoized on ``pdf.attrs`` keyed by the build parameters — real
         jobs build the index once and run many batches against it, so
-        repeated joins against the same table shouldn't pay the
-        (sub-second, but serial) settled-grid construction again.
+        repeated joins against the same table shouldn't pay the serial
+        driver build again (~0.4 s for 500 polygons of 513-vertex rings
+        at the default ``settled_cells``).
 
         The memo holds for this frame OBJECT only: pandas deep-copies
         ``attrs`` into every frame derived from it (selection, filter,
@@ -278,37 +300,36 @@ class PolygonIndex:
         return out
 
     def _assign_ordinals_exact(self, px: np.ndarray, py: np.ndarray) -> np.ndarray:
-        """Exact path: iteration order is PER PART, gathering all points of
-        its covering cells at once — one large vectorized PIP call per
-        island instead of many tiny per-(cell,candidate) calls, which is
-        what keeps the kernel compute-bound (NumPy dispatch overhead would
-        otherwise dominate at ~30 points/call). Returning ordinals (not id
-        objects) lets callers materialize the id column with an Arrow
-        take() instead of touching millions of Python objects."""
+        """Exact path, vectorized over (point, part) candidate pairs: the
+        points of every cell a part's bbox covers, kept if the bbox holds
+        them, then ray-cast in one slab-kernel call per block of pairs —
+        not one call per part, whose NumPy dispatch would dominate at a
+        few dozen points per call. A point takes the first part, in part
+        order, that contains it. Returning ordinals (not id objects) lets
+        callers materialize the id column with an Arrow take() instead of
+        touching millions of Python objects."""
         out = np.full(len(px), -1, dtype=np.int64)
         unassigned = np.ones(len(px), dtype=bool)
         cells = cell.encode(px, py, self.res)
         order = np.argsort(cells, kind="stable")
         sorted_cells = cells[order]
-        starts = np.flatnonzero(np.r_[True, sorted_cells[1:] != sorted_cells[:-1]])
-        uniq = sorted_cells[starts]
-        ends = np.r_[starts[1:], len(sorted_cells)]
-        cell_range = {int(c): (int(s), int(e)) for c, s, e in zip(uniq, starts, ends)}
-        for pi in range(len(self.parts)):
-            ranges = [cell_range[int(c)] for c in self.part_cells[pi] if int(c) in cell_range]
-            if not ranges:
-                continue
-            idx = np.concatenate([order[s:e] for s, e in ranges])
-            x0, y0, x1, y1 = self.boxes[pi]
-            bx, by = px[idx], py[idx]
-            m = (bx >= x0) & (bx <= x1) & (by >= y0) & (by <= y1) & unassigned[idx]
-            idx = idx[m]
-            if not len(idx):
-                continue
-            hit = self.parts[pi].contains(px[idx], py[idx], block=1024)
-            got = idx[hit]
-            out[got] = self.part_owner[pi]
-            unassigned[got] = False
+        lo = np.searchsorted(sorted_cells, self.cover_cell, side="left")
+        cnt = np.searchsorted(sorted_cells, self.cover_cell, side="right") - lo
+        bx0, by0, bx1, by1 = self.boxes.T
+        # blocks of cover entries (part order) bound the pair temporaries;
+        # a later block only sees the points earlier ones left unassigned
+        for a, b in pip.blocks(cnt, _EXACT_PAIR_BLOCK):
+            pt = order[pip.ranges(lo[a:b], cnt[a:b])]
+            part = np.repeat(self.cover_part[a:b], cnt[a:b])
+            qx, qy = px[pt], py[pt]
+            keep = unassigned[pt] & (qx >= bx0[part]) & (qx <= bx1[part])
+            keep &= (qy >= by0[part]) & (qy <= by1[part])
+            pt, part = pt[keep], part[keep]
+            hit = self.prepared.inside(part, px[pt], py[pt])
+            pt, part = pt[hit], part[hit]
+            first = np.unique(pt, return_index=True)[1]  # pairs run in part order
+            out[pt[first]] = self.part_owner[part[first]]
+            unassigned[pt[first]] = False
         return out
 
 
@@ -489,7 +510,7 @@ def pip_join_shuffle(
     """
     # points -> their cell, JVM-side; polygons -> one key row per
     # bbox-covering cell, conservative (exact PIP removes false positives)
-    pts = points.select(point_id_col, lon, lat).withColumn("cell_id", cell_id_col(lon, lat, res))
+    pts = with_cell_id(points.select(point_id_col, lon, lat), lon, lat, res)
     pol_cells = explode_bbox_cover(
         polys.select(poly_id_col, geom_col), geom_col, res, wkb.multipolygon_bbox
     ).select(F.col(poly_id_col).alias("__pid"), "cell_id")

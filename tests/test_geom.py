@@ -291,6 +291,14 @@ def test_assert_no_overlap_detects_aligned_slide():
         wkb.assert_no_overlap([_mp(_sq(0, 0, 2, 1)), _mp(_sq(1, 0, 2, 1))])
 
 
+def test_assert_no_overlap_crossing_on_window_border():
+    # [0,4]x[0,2] vs [2,6]x[-1,1]: the bbox-overlap window is [2,4]x[0,1]
+    # and both proper crossings, (2,0) and (4,1), sit on its border, so
+    # the crossing edges only touch the closed window
+    with pytest.raises(ValueError, match="crossing"):
+        wkb.assert_no_overlap([_mp(_sq(0, 0, 4, 2)), _mp(_sq(2, -1, 4, 2))])
+
+
 def test_assert_no_overlap_detects_crossing_bars():
     # plus-shape: all vertices outside the other part, proper edge crossings
     with pytest.raises(ValueError, match="crossing"):
