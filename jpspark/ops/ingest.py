@@ -8,8 +8,10 @@ archives with ``spark.read.format("binaryFile")`` and runs the recursive
 traversal in a ``mapInPandas`` kernel — one archive per task row, stdlib
 ``zipfile`` over an in-memory buffer, name-regex filtering and the
 known-bad-prefix skip applied inside the kernel (distributed, no driver
-bottleneck). Parallelism is the number of archive files; the reference's
-15-slot queue becomes ``repartition(n_slots)`` on the manifest.
+bottleneck). Parallelism is the number of archive files, packed into the
+binaryFile scan's partitions; the reference's 15-slot queue becomes
+``coalesce(n_slots)`` on that scan, so the archive bytes cross no
+shuffle before extraction.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import zipfile
 from typing import Iterator
 
 import pandas as pd
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -85,15 +88,18 @@ def extract_archives(
     )
 
 
+def _member_ext(entry_col: str = "entry"):
+    """Lower-cased file extension of a member path (``""`` if none)."""
+    return F.lower(F.regexp_extract(F.col(entry_col), r"\.([A-Za-z0-9]+)$", 1))
+
+
 def shapefile_pairs(
     extracted: DataFrame, entry_col: str = "entry", content_col: str = "content"
 ) -> DataFrame:
     """Group sibling shapefile members (.shp/.dbf/.cpg) by path stem —
     one row per layer, ``files`` = map<ext, bytes>."""
     e = (
-        extracted.withColumn(
-            "ext", F.lower(F.regexp_extract(F.col(entry_col), r"\.([A-Za-z0-9]+)$", 1))
-        )
+        extracted.withColumn("ext", _member_ext(entry_col))
         .filter(F.col("ext").isin("shp", "dbf", "cpg"))
         .withColumn(
             "stem",
@@ -112,14 +118,19 @@ def shapefile_scan(
     engine-native replacement for the reference's ``ogrinfo``/``ogr2ogr``
     shell-outs (/root/reference/src/loader/gdal.rs:169-212).
 
-    Schema comes from the FIRST layer's .dbf field descriptors (driver-side
-    single-row probe — types are declared in the descriptor, not sniffed
-    from data): C/D->string, N(dec=0)->long, N(dec>0)/F->double,
-    L->boolean. Each layer is then parsed in a mapInPandas kernel
-    (codec/shp.py, no native deps): .dbf attributes + .shp geometries
-    paired by record order, geometry promoted to MULTI (F9 parity with
-    ``-nlt PROMOTE_TO_MULTI``). Character encoding: explicit arg > .cpg
-    sidecar > CP932-first detect chain (gdal.rs:337-356 parity).
+    Schema comes from the field descriptors of the first ``.dbf`` member
+    of ``extracted`` (a ``limit(1)`` probe of the members, before the stem
+    grouping, so it runs as one task over one archive partition; types
+    are declared in the descriptor, not sniffed from data): C/D->string,
+    N(dec=0)->long, N(dec>0)/F->double, L->boolean. Every layer must
+    match that schema, so whichever ``.dbf`` the probe read, the result
+    is the same and a layer with another field set raises. A layer
+    missing its ``.dbf`` or ``.shp`` raises too, naming the stem. Each
+    layer is parsed in a mapInPandas kernel (codec/shp.py, no native
+    deps): .dbf attributes + .shp geometries paired by record order,
+    geometry promoted to MULTI (F9 parity with ``-nlt PROMOTE_TO_MULTI``).
+    Character encoding: explicit arg > .cpg sidecar > CP932-first detect
+    chain (gdal.rs:337-356 parity).
 
     Output: (source stem, fid, <dbf columns>, geom WKB binary).
     """
@@ -128,14 +139,10 @@ def shapefile_scan(
     from ..codec import shp as shp_codec
     from ..geom import wkb
 
-    pairs = shapefile_pairs(extracted)
-    first = pairs.limit(1).collect()
-    if not first:
-        raise ValueError("shapefile_scan: no .shp/.dbf members in input")
-    files0 = dict(first[0]["files"])
-    if "dbf" not in files0:
-        raise ValueError("shapefile_scan: first layer has no .dbf sidecar")
-    fields = shp_codec.parse_dbf_fields(bytes(files0["dbf"]))
+    probe = extracted.filter(_member_ext() == "dbf").select("content").limit(1).collect()
+    if not probe:
+        raise ValueError("shapefile_scan: no .dbf members in input")
+    fields = shp_codec.parse_dbf_fields(bytes(probe[0]["content"]))
     # (name, dbf type, decimal count) signature every layer must match
     expected_fields = [(n, t, d) for n, t, _l, d in fields]
     attr_fields = []
@@ -162,21 +169,24 @@ def shapefile_scan(
             frames = []
             for stem, files in zip(pdf["stem"].to_numpy(), pdf["files"].to_numpy()):
                 f = dict(files)
+                for ext in ("dbf", "shp"):
+                    if ext not in f:
+                        raise ValueError(f"shapefile_scan: layer {stem} has no .{ext} member")
                 enc = encoding
                 if enc is None and f.get("cpg"):
                     enc = bytes(f["cpg"]).decode("ascii", "replace").strip().lower() or None
                 # every layer must match the probed schema exactly — a layer
                 # with a different field set would otherwise be silently
                 # reindexed (extra columns dropped, missing ones nulled)
-                # instead of erroring (round-3 ADVICE; mirrors the
-                # .shp/.dbf record-count check below)
+                # instead of erroring (mirrors the .shp/.dbf record-count
+                # check below); which .dbf the probe read does not matter
                 layer_fields = [
                     (n, t, d) for n, t, _l, d in shp_codec.parse_dbf_fields(bytes(f["dbf"]))
                 ]
                 if layer_fields != expected_fields:
                     raise ValueError(
                         f"{stem}: .dbf schema {layer_fields} does not match the "
-                        f"probed first-layer schema {expected_fields} — layers of "
+                        f"probed schema {expected_fields} — layers of "
                         "one scan must share a field set (split the scan, or map "
                         "schemas per layer before union)"
                     )
@@ -203,7 +213,7 @@ def shapefile_scan(
             )
             yield out.reindex(columns=out_cols)
 
-    return pairs.mapInPandas(kernel, out_schema)
+    return shapefile_pairs(extracted).mapInPandas(kernel, out_schema)
 
 
 def crosswalk_from_xlsx(spark: SparkSession, buf: bytes) -> DataFrame:
@@ -234,13 +244,51 @@ def crosswalk_from_xlsx(spark: SparkSession, buf: bytes) -> DataFrame:
     return spark.createDataFrame(pdf, schema=schema)
 
 
+# the characters that make Spark expand a load path as a Hadoop glob
+_GLOB_CHARS = frozenset("{}[]*?\\")
+
+
+def _glob_as_filter(spark: SparkSession, glob_path: str) -> tuple[str, str] | None:
+    """``(parent, last component)`` when ``glob_path`` can be loaded as its
+    parent directory with ``pathGlobFilter`` = last component and give the
+    same files: the wildcard is only in the last component, and one
+    driver-side ``listStatus`` of the parent finds no subdirectory (a
+    directory load would descend into it) and at least one matching file
+    (an empty glob keeps Spark's own error). ``None`` otherwise."""
+    parent, _, last = glob_path.rpartition("/")
+    if not parent or _GLOB_CHARS.isdisjoint(last) or not _GLOB_CHARS.isdisjoint(parent):
+        return None
+    jvm = spark.sparkContext._jvm
+    try:
+        path = jvm.org.apache.hadoop.fs.Path(parent)
+        fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        listed = fs.listStatus(path)
+        accept = jvm.org.apache.hadoop.fs.GlobFilter(last).accept
+    except Py4JJavaError:  # a missing parent or a bad pattern: Spark's error
+        return None
+    if any(st.isDirectory() for st in listed) or not any(accept(st.getPath()) for st in listed):
+        return None
+    return parent, last
+
+
 def read_archives(spark: SparkSession, glob_path: str, n_slots: int = 15) -> DataFrame:
-    """S2 analog: archive manifest scan. ``binaryFile`` gives (path,
-    modificationTime, length, content); repartition to the reference's
-    download-slot parallelism."""
-    return (
-        spark.read.format("binaryFile")
-        .load(glob_path)
-        .select("path", "content")
-        .repartition(n_slots)
-    )
+    """S2 analog: archive manifest scan, ``(path, content)`` per archive.
+
+    ``binaryFile`` packs whole files into about ``defaultParallelism``
+    scan partitions (a file is never split); ``coalesce(n_slots)`` caps
+    the concurrent archive tasks at the reference's download-slot count
+    without a shuffle, so the archive bytes are read once and cross no
+    exchange. Past 32 matched paths (``parallelPartitionDiscovery.
+    threshold``) Spark lists a glob's matches in a Spark job, one task
+    per path; a glob whose wildcard is in the last component only is
+    therefore loaded as its parent directory with a ``pathGlobFilter``
+    (see :func:`_glob_as_filter`), which the driver lists itself. Any
+    other path loads as given."""
+    reader = spark.read.format("binaryFile")
+    as_filter = _glob_as_filter(spark, glob_path)
+    if as_filter is None:
+        df = reader.load(glob_path)
+    else:
+        parent, pattern = as_filter
+        df = reader.option("pathGlobFilter", pattern).load(parent)
+    return df.select("path", "content").coalesce(n_slots)

@@ -13,8 +13,8 @@ decomposed as cell-equi-join + exact ray-cast refinement:
 Two physical strategies (SURVEY §4):
 
 * ``pip_join_broadcast`` — the polygon side (admin boundaries: ~1e5 rows,
-  ~100 MB WKB nationwide) is packed into a per-cell candidate index + an
-  STR R-tree, broadcast to executors, and the join becomes a single
+  ~100 MB WKB nationwide) is packed into a per-cell candidate index,
+  broadcast to executors, and the join becomes a single
   ``mapInArrow`` pass over the point table: **zero shuffle of the 10^12-row
   image side**. This is the plan you want at 100 TB — the big side streams
   through map tasks, the small side rides the broadcast. The broadcast,
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..geom import cell, pip, rtree, wkb
+from ..geom import cell, pip, wkb
 from .tiles import explode_bbox_cover, with_cell_id
 
 DEFAULT_RES = 7
@@ -70,8 +70,7 @@ class PolygonIndex:
     Indexed by PART: part -> owning polygon ordinal, exterior bbox and the
     cells at ``res`` that bbox covers (the exact path's candidate filter);
     ordinal -> id. One :class:`pip.PreparedPolygon` holds every part's
-    edge tables and slab index. Plus a packed R-tree over part bboxes for
-    ad-hoc bbox queries.
+    edge tables and slab index.
 
     ``settled_cells``: optional fine-grid fast path (the classic
     interior-cell optimization of hierarchical spatial joins). A dense
@@ -117,7 +116,6 @@ class PolygonIndex:
         self.prepared = pip.PreparedPolygon(parts)
         boxes = np.asarray(boxes, dtype=np.float64).reshape(-1, 4)
         self.boxes = boxes
-        self.tree = rtree.PackedRTree(boxes, np.arange(len(boxes), dtype=np.int64))
         covers = [cell.cover_bbox(x0, y0, x1, y1, res) for x0, y0, x1, y1 in boxes]
         self.cover_cell = np.concatenate(covers) if covers else np.zeros(0, dtype=np.int64)
         self.cover_part = np.repeat(np.arange(len(covers)), [len(c) for c in covers])

@@ -212,6 +212,45 @@ def test_extract_zip_fallback_widening(spark, tmp_path):
     assert list(out["entry"]) == ["whatever_name.shp"]
 
 
+def _archive_dir(root, n: int) -> None:
+    root.mkdir(parents=True, exist_ok=True)
+    for i in range(n):
+        (root / f"a{i:02d}.zip").write_bytes(_make_zip({f"m{i}.shp": bytes([i]) * (i + 1)}))
+
+
+def test_read_archives_plan_has_no_exchange(spark, tmp_path):
+    """The archive scan is capped at ``n_slots`` tasks by coalescing its
+    partitions: the archive bytes cross no shuffle."""
+    _archive_dir(tmp_path, 5)
+    df = ingest.read_archives(spark, str(tmp_path / "*.zip"), n_slots=2)
+    assert len(df.collect()) == 5
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert df.rdd.getNumPartitions() <= 2
+
+
+@pytest.mark.parametrize("case", ["flat_glob", "glob_over_subdir", "single_file"])
+def test_read_archives_rows_match_binary_file_load(spark, tmp_path, case):
+    """``read_archives`` gives the rows ``binaryFile`` gives for the same
+    path: a glob over a flat directory (loaded as the directory with a
+    name filter), a glob over a directory whose subdirectory holds a
+    matching ``.zip`` (which the glob must not reach; a directory load
+    would take the ``k=v`` name for a partition and fail on the mixed
+    layout), and one file."""
+    _archive_dir(tmp_path, 35)  # past the 32-path parallel listing threshold
+    (tmp_path / "notes.txt").write_bytes(b"not an archive")
+    if case == "glob_over_subdir":
+        _archive_dir(tmp_path / "year=2023", 2)
+    path = str(tmp_path / ("a07.zip" if case == "single_file" else "*.zip"))
+
+    def rows(df):
+        return sorted((r.path, bytes(r.content)) for r in df.select("path", "content").collect())
+
+    want = rows(spark.read.format("binaryFile").load(path))
+    assert len(want) == (1 if case == "single_file" else 35)
+    assert rows(ingest.read_archives(spark, path, n_slots=2)) == want
+
+
 # ------------------------------------------------------------- manifest
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import io
 import struct
+import time
 import zipfile
 
 import numpy as np
@@ -178,3 +179,64 @@ def test_shapefile_scan_rejects_mismatched_layer_schema(spark):
     scan = ingest.shapefile_scan(ingest.extract_archives(archives, m))
     with pytest.raises(Exception, match="does not match the probed"):
         scan.collect()
+
+
+def _point_layer(stem: str, drop: str | None = None) -> dict[str, bytes]:
+    """One single-point layer's members, minus the ``drop`` extension."""
+    members = {
+        f"{stem}.shp": shp_codec.write_shp([wkb.encode_point(1.0, 2.0)]),
+        f"{stem}.dbf": shp_codec.write_dbf(pd.DataFrame({"NAME": [stem]}), encoding="cp932"),
+    }
+    return {k: v for k, v in members.items() if not k.endswith(f".{drop}")}
+
+
+@pytest.mark.parametrize("drop", ["dbf", "shp"])
+def test_shapefile_scan_names_layer_missing_sidecar(spark, drop):
+    """A layer without its .dbf or .shp fails loudly, naming its stem,
+    whichever layer the schema probe read."""
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for stem, d in (("P98-01_GML/P98-01_A", None), ("P98-01_GML/P98-01_B", drop)):
+            for name, data in _point_layer(stem, d).items():
+                zf.writestr(name, data)
+    archives = spark.createDataFrame(
+        pd.DataFrame({"path": ["mem://p98.zip"], "content": [buf.getvalue()]})
+    )
+    m = mapping.ShapefileMapping("p98", [r"P98-YY_"])
+    scan = ingest.shapefile_scan(ingest.extract_archives(archives, m))
+    with pytest.raises(Exception, match=rf"layer P98-01_GML/P98-01_B has no \.{drop} member"):
+        scan.collect()
+
+
+def test_shapefile_scan_probe_is_one_task(spark, tmp_path):
+    """The schema probe reads one .dbf member: over archives read with
+    ``n_slots=2`` it runs as one job of one task, not the whole archive
+    stage, and the scan it types still reads every layer."""
+    n = 4
+    for i in range(n):
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w") as zf:
+            for name, data in _point_layer(f"P97-01_GML/P97-01_{i}").items():
+                zf.writestr(name, data)
+        (tmp_path / f"p97_{i}.zip").write_bytes(buf.getvalue())
+    members = ingest.extract_archives(
+        ingest.read_archives(spark, str(tmp_path / "*.zip"), n_slots=2),
+        mapping.ShapefileMapping("p97", [r"P97-YY_"]),
+    )
+    sc = spark.sparkContext
+    group = "test_shapefile_scan_probe_is_one_task"
+    sc.setJobGroup(group, group)
+    try:
+        scan = ingest.shapefile_scan(members)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    for _ in range(100):  # the status store is fed by an async listener
+        jobs = st.getJobIdsForGroup(group)
+        if jobs and all(st.getJobInfo(j).status == "SUCCEEDED" for j in jobs):
+            break
+        time.sleep(0.1)
+    assert len(jobs) == 1
+    stages = st.getJobInfo(jobs[0]).stageIds
+    assert [st.getStageInfo(sid).numTasks for sid in stages] == [1]
+    assert sorted(scan.toPandas()["NAME"]) == [f"P97-01_GML/P97-01_{i}" for i in range(n)]
