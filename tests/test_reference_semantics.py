@@ -235,8 +235,7 @@ def test_read_archives_rows_match_binary_file_load(spark, tmp_path, case):
     path: a glob over a flat directory (loaded as the directory with a
     name filter), a glob over a directory whose subdirectory holds a
     matching ``.zip`` (which the glob must not reach; a directory load
-    would take the ``k=v`` name for a partition and fail on the mixed
-    layout), and one file."""
+    would read the ``k=v`` subdirectory as a partition), and one file."""
     _archive_dir(tmp_path, 35)  # past the 32-path parallel listing threshold
     (tmp_path / "notes.txt").write_bytes(b"not an archive")
     if case == "glob_over_subdir":
