@@ -6,7 +6,7 @@ land numerical information into PostGIS; see /root/reference) as distributed
 Spark DataFrame operators:
 
 - ``jpspark.geom``   — WKB codec, hierarchical cell index (H3/S2 analog),
-                       ray-casting point-in-polygon, STR-packed R-tree.
+                       ray-casting point-in-polygon (slab-indexed edges).
 - ``jpspark.codec``  — image codecs (raw / PPM / zlib-PNG / quantizing lossy)
                        and 64-bit DCT pHash, all NumPy-vectorized.
 - ``jpspark.ops``    — spatial join, kNN with ring expansion, raster-tile ↔

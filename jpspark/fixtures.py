@@ -482,7 +482,7 @@ def pip_assign_oracle(
     lon: np.ndarray, lat: np.ndarray, polys: pd.DataFrame, id_col: str = "全国地方公共団体コード"
 ) -> np.ndarray:
     """Pure-NumPy O(P*M) oracle: containing polygon id per point ('' if
-    none). Independent of the cell/R-tree machinery under test."""
+    none). Independent of the cell/PIP index machinery under test."""
     out = np.full(len(lon), "", dtype=object)
     unassigned = np.ones(len(lon), dtype=bool)
     for _, row in polys.iterrows():

@@ -1,1 +1,1 @@
-from . import cell, pip, rtree, wkb  # noqa: F401
+from . import cell, pip, wkb  # noqa: F401

@@ -10,8 +10,10 @@ traversal in a ``mapInPandas`` kernel — one archive per task row, stdlib
 known-bad-prefix skip applied inside the kernel (distributed, no driver
 bottleneck). Parallelism is the number of archive files, packed into the
 binaryFile scan's partitions; the reference's 15-slot queue becomes
-``coalesce(n_slots)`` on that scan, so the archive bytes cross no
-shuffle before extraction.
+``coalesce(n_slots)`` on that scan. ``shapefile_scan`` then pairs and
+parses each layer in the partition that extracted it, as the reference
+loads each archive's layers where it extracted them, so the archive and
+member bytes cross no shuffle from the scan to the parsed features.
 """
 
 from __future__ import annotations
@@ -88,27 +90,10 @@ def extract_archives(
     )
 
 
-def _member_ext(entry_col: str = "entry"):
-    """Lower-cased file extension of a member path (``""`` if none)."""
-    return F.lower(F.regexp_extract(F.col(entry_col), r"\.([A-Za-z0-9]+)$", 1))
-
-
-def shapefile_pairs(
-    extracted: DataFrame, entry_col: str = "entry", content_col: str = "content"
-) -> DataFrame:
-    """Group sibling shapefile members (.shp/.dbf/.cpg) by path stem —
-    one row per layer, ``files`` = map<ext, bytes>."""
-    e = (
-        extracted.withColumn("ext", _member_ext(entry_col))
-        .filter(F.col("ext").isin("shp", "dbf", "cpg"))
-        .withColumn(
-            "stem",
-            F.expr(f"substring({entry_col}, 1, length({entry_col}) - length(ext) - 1)"),
-        )
-    )
-    return e.groupBy("stem").agg(
-        F.map_from_entries(F.collect_list(F.struct("ext", F.col(content_col)))).alias("files")
-    )
+def _member_ext():
+    """Lower-cased file extension of a member's ``entry`` path (``""`` if
+    none)."""
+    return F.lower(F.regexp_extract(F.col("entry"), r"\.([A-Za-z0-9]+)$", 1))
 
 
 def shapefile_scan(
@@ -119,23 +104,28 @@ def shapefile_scan(
     shell-outs (/root/reference/src/loader/gdal.rs:169-212).
 
     Schema comes from the field descriptors of the first ``.dbf`` member
-    of ``extracted`` (a ``limit(1)`` probe of the members, before the stem
-    grouping, so it runs as one task over one archive partition; types
-    are declared in the descriptor, not sniffed from data): C/D->string,
-    N(dec=0)->long, N(dec>0)/F->double, L->boolean. Every layer must
-    match that schema, so whichever ``.dbf`` the probe read, the result
-    is the same and a layer with another field set raises. A layer
-    missing its ``.dbf`` or ``.shp`` raises too, naming the stem. Each
-    layer is parsed in a mapInPandas kernel (codec/shp.py, no native
-    deps): .dbf attributes + .shp geometries paired by record order,
-    geometry promoted to MULTI (F9 parity with ``-nlt PROMOTE_TO_MULTI``).
+    of ``extracted`` (a ``limit(1)`` probe of the members, so it runs as
+    one task over one archive partition; types are declared in the
+    descriptor, not sniffed from data): C/D->string, N(dec=0)->long,
+    N(dec>0)/F->double, L->boolean. Every layer must match that schema,
+    so whichever ``.dbf`` the probe read, the result is the same and a
+    layer with another field set raises. A layer missing its ``.dbf`` or
+    ``.shp`` raises too, naming the stem.
+
+    A layer is the ``.shp``/``.dbf``/``.cpg`` members of one (archive,
+    stem), paired inside each partition with no exchange:
+    :func:`extract_archives` emits all of an archive's members from one
+    task. A frame repartitioned in between can split a layer, and every
+    split leaves some part of it without its ``.dbf`` or ``.shp``, so
+    such a scan raises. Each layer is parsed in the same mapInPandas
+    kernel (codec/shp.py, no native deps): .dbf attributes + .shp
+    geometries paired by record order, geometry promoted to MULTI (F9
+    parity with ``-nlt PROMOTE_TO_MULTI``).
     Character encoding: explicit arg > .cpg sidecar > CP932-first detect
     chain (gdal.rs:337-356 parity).
 
     Output: (source stem, fid, <dbf columns>, geom WKB binary).
     """
-    from pyspark.sql import types as T
-
     from ..codec import shp as shp_codec
     from ..geom import wkb
 
@@ -165,10 +155,14 @@ def shapefile_scan(
     out_cols = [f.name for f in out_schema.fields]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for stem, files in zip(pdf["stem"].to_numpy(), pdf["files"].to_numpy()):
-                f = dict(files)
+        # the whole partition: a layer's members may span Arrow batches;
+        # each layer is yielded as its own batch, so the worker holds the
+        # features of one layer at a time
+        pdfs = list(batches)
+        if pdfs:
+            layers = pd.concat(pdfs).groupby(["archive", "stem"], sort=False)
+            for (_archive, stem), layer in layers:
+                f = dict(zip(layer["ext"], layer["content"]))
                 for ext in ("dbf", "shp"):
                     if ext not in f:
                         raise ValueError(f"shapefile_scan: layer {stem} has no .{ext} member")
@@ -205,15 +199,15 @@ def shapefile_scan(
                 )
                 rec = pd.concat([attrs.reset_index(drop=True), gdf], axis=1)
                 rec.insert(0, "source", stem)
-                frames.append(rec)
-            out = (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(columns=out_cols)
-            )
-            yield out.reindex(columns=out_cols)
+                yield rec.reindex(columns=out_cols)
 
-    return shapefile_pairs(extracted).mapInPandas(kernel, out_schema)
+    members = (
+        extracted.withColumn("ext", _member_ext())
+        .filter(F.col("ext").isin("shp", "dbf", "cpg"))
+        .select("archive", F.expr("substring(entry, 1, length(entry) - length(ext) - 1)")
+                .alias("stem"), "ext", "content")
+    )
+    return members.mapInPandas(kernel, out_schema)
 
 
 def crosswalk_from_xlsx(spark: SparkSession, buf: bytes) -> DataFrame:

@@ -15,9 +15,9 @@ make equality-of-floor comparisons depend on libm rounding.
 Operators:
   tile_assign        — (image row, zoom) -> (tile_z, tile_x, tile_y, cell_id)
                        pure built-in column math (whole-stage codegen, no UDF)
-  cell_id_col / with_cell_id — lon/lat -> cell id: cell.encode as column
-                       math; with_cell_id is the point side of the shuffle
-                       PIP and kNN joins and of the cell-clustered write
+  with_cell_id       — lon/lat -> cell id: cell.encode as column math; the
+                       point side of the shuffle PIP and kNN joins and of
+                       the cell-clustered write
   tile_rollup        — per-tile aggregates with parent-tile rollup to a
                        coarser zoom (two-phase partial agg)
   tile_render_manifest — per-tile row groups for a renderer: tile id,
@@ -70,20 +70,14 @@ def cell_id_from_tile(tx_col, ty_col, z: int):
     )
 
 
-def cell_id_col(lon_col: str, lat_col: str, res: int):
-    """Column expr: the cell id at ``res`` of a lon/lat point, bit-equal to
-    geom.cell.encode, fully JVM-side. A null coordinate lands in grid
-    column/row 0, where encode puts NaN (``greatest`` skips nulls).
-    The expression inlines the tile x/y expressions 32 times each; over a
-    DataFrame, :func:`with_cell_id` computes them once."""
-    return cell_id_from_tile(*tile_xy_cols(lon_col, lat_col, res), res)
-
-
 def with_cell_id(df: DataFrame, lon_col: str, lat_col: str, res: int) -> DataFrame:
-    """``df`` plus ``cell_id`` = :func:`cell_id_col`, with the tile x/y
-    computed once in a projection of their own (``cell_id_from_tile``
-    reads each input 32 times, and Catalyst keeps a projection whose
-    output would be duplicated) and dropped after."""
+    """``df`` plus ``cell_id``: the cell id at ``res`` of each lon/lat
+    point, bit-equal to geom.cell.encode, fully JVM-side. A null
+    coordinate lands in grid column/row 0, where encode puts NaN
+    (``greatest`` skips nulls). The tile x/y are computed once in a
+    projection of their own (``cell_id_from_tile`` reads each input 32
+    times, and Catalyst keeps a projection whose output would be
+    duplicated) and dropped after."""
     tx, ty = tile_xy_cols(lon_col, lat_col, res)
     return (
         df.withColumns({"__cell_tx": tx, "__cell_ty": ty})

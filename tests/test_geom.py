@@ -7,7 +7,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from jpspark.geom import cell, pip, rtree, wkb
+from jpspark.geom import cell, pip, wkb
 
 RNG = np.random.default_rng(42)
 
@@ -214,39 +214,6 @@ def test_pip_blocked_matches():
         pip.points_in_ring(px, py, ring),
         pip.points_in_ring_blocked(px, py, ring, block=1024),
     )
-
-
-# ---------------------------------------------------------------- R-tree
-
-def test_rtree_query_matches_brute_force():
-    n = 3000
-    x = RNG.uniform(0, 100, n)
-    y = RNG.uniform(0, 100, n)
-    wdt = RNG.uniform(0.1, 3, n)
-    hgt = RNG.uniform(0.1, 3, n)
-    boxes = np.column_stack([x, y, x + wdt, y + hgt])
-    ids = np.arange(n, dtype=np.int64) * 7
-    t = rtree.PackedRTree(boxes, ids)
-    for _ in range(25):
-        qx0, qy0 = RNG.uniform(0, 95, 2)
-        qx1, qy1 = qx0 + RNG.uniform(0, 10), qy0 + RNG.uniform(0, 10)
-        got = set(t.query(qx0, qy0, qx1, qy1).tolist())
-        brute = (boxes[:, 0] <= qx1) & (boxes[:, 2] >= qx0) & (boxes[:, 1] <= qy1) & (boxes[:, 3] >= qy0)
-        assert got == set(ids[brute].tolist())
-
-
-def test_rtree_serde_roundtrip():
-    boxes = RNG.uniform(0, 50, (500, 2))
-    boxes = np.column_stack([boxes, boxes + 1])
-    ids = np.arange(500, dtype=np.int64)
-    t = rtree.PackedRTree(boxes, ids)
-    t2 = rtree.PackedRTree.from_bytes(t.to_bytes())
-    assert set(t2.query(10, 10, 12, 12).tolist()) == set(t.query(10, 10, 12, 12).tolist())
-
-
-def test_rtree_empty():
-    t = rtree.PackedRTree(np.empty((0, 4)), np.empty(0, dtype=np.int64))
-    assert len(t.query(0, 0, 1, 1)) == 0
 
 
 # ------------------------------------------------- dissolve (round 3)

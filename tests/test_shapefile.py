@@ -240,3 +240,61 @@ def test_shapefile_scan_probe_is_one_task(spark, tmp_path):
     stages = st.getJobInfo(jobs[0]).stageIds
     assert [st.getStageInfo(sid).numTasks for sid in stages] == [1]
     assert sorted(scan.toPandas()["NAME"]) == [f"P97-01_GML/P97-01_{i}" for i in range(n)]
+
+
+def _write_archive(path, members: dict[str, bytes]) -> None:
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, data in members.items():
+            zf.writestr(name, data)
+    path.write_bytes(buf.getvalue())
+
+
+def test_shapefile_scan_pairs_layers_per_archive(spark, tmp_path):
+    """Two archives holding the same member paths (two years of one
+    prefecture, each with ``N03-23_13.shp`` at its root) give two layers,
+    each with its own attributes and ``fid`` run; ``source`` is the stem
+    for both. Read with ``n_slots=1``, both archives share one partition."""
+    for year, names in (("2023", ["千代田区", "中央区"]), ("2024", ["港区"])):
+        geoms = [wkb.encode_point(139.0 + i, 35.0) for i in range(len(names))]
+        _write_archive(tmp_path / f"N03-{year}.zip", {
+            "N03-23_13.shp": shp_codec.write_shp(geoms),
+            "N03-23_13.dbf": shp_codec.write_dbf(
+                pd.DataFrame({"N03_004": names}), encoding="cp932"
+            ),
+        })
+    archives = ingest.read_archives(spark, str(tmp_path / "*.zip"), n_slots=1)
+    m = mapping.ShapefileMapping("n03", ["N03-YY_PP.shp"])
+    out = ingest.shapefile_scan(ingest.extract_archives(archives, m)).toPandas()
+    assert sorted(zip(out["N03_004"], out["fid"])) == [("中央区", 2), ("千代田区", 1), ("港区", 1)]
+    assert (out["source"] == "N03-23_13").all()
+
+
+def test_shapefile_scan_fails_on_layer_split_across_partitions(spark):
+    """A layer whose members were repartitioned apart (here one member per
+    partition) is not paired: a part without its .dbf or .shp raises,
+    naming the stem."""
+    stem = "P96-01_GML/P96-01_A"
+    members = {**_point_layer(stem), f"{stem}.cpg": b"CP932"}
+    rows = [("mem://p96.zip", name, data, len(data)) for name, data in members.items()]
+    extracted = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, numSlices=len(rows)),
+        "archive string, entry string, content binary, size long",
+    )
+    assert extracted.rdd.getNumPartitions() == 3
+    with pytest.raises(Exception, match=rf"layer {stem} has no \.(dbf|shp) member"):
+        ingest.shapefile_scan(extracted).collect()
+
+
+def test_shapefile_scan_plan_has_no_exchange(spark, tmp_path):
+    """Read, extract and scan run in one stage: each layer is paired and
+    parsed in the partition that extracted it."""
+    for i in range(3):
+        _write_archive(tmp_path / f"p95_{i}.zip", _point_layer(f"P95-01_GML/P95-01_{i}"))
+    scan = ingest.shapefile_scan(ingest.extract_archives(
+        ingest.read_archives(spark, str(tmp_path / "*.zip"), n_slots=2),
+        mapping.ShapefileMapping("p95", [r"P95-YY_"]),
+    ))
+    assert len(scan.collect()) == 3
+    plan = scan._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan

@@ -418,8 +418,8 @@ def test_shuffle_joins_null_coordinate(spark, polys):
     assert len(hit) == 1 and hit["exact"].iloc[0] and hit["target_id"].iloc[0] == 1
 
 
-def test_cell_id_col_matches_encode(spark):
-    """``tiles.cell_id_col`` is ``cell.encode`` in column math, bit for bit,
+def test_with_cell_id_matches_encode(spark):
+    """``tiles.with_cell_id`` is ``cell.encode`` in column math, bit for bit,
     including NaN, infinite and huge coordinates and the grid edges. A
     null coordinate lands where NaN does (grid column/row 0), as the
     pandas UDF it replaced did: pandas hands a null in as NaN."""
@@ -437,9 +437,9 @@ def test_cell_id_col_matches_encode(spark):
     exp_lon = np.r_[lon, np.nan, 135.0]
     exp_lat = np.r_[lat, 35.0, np.nan]
     for res in (0, 5, 7, 18, 26):
-        got = df.select(tile_ops.cell_id_col("lon", "lat", res).alias("c")).collect()
+        got = tile_ops.with_cell_id(df, "lon", "lat", res).select("cell_id").collect()
         np.testing.assert_array_equal(
-            np.array([r.c for r in got], dtype=np.int64), cell.encode(exp_lon, exp_lat, res)
+            np.array([r.cell_id for r in got], dtype=np.int64), cell.encode(exp_lon, exp_lat, res)
         )
 
 
